@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import json
 import threading
+from collections import deque
 import urllib.request
 from typing import Any
 from urllib.parse import parse_qs
@@ -45,6 +46,11 @@ class CFluxApp:
     ``allowed_forward_schemes`` (http/https only by default — file:,
     gopher: etc. are rejected at registration use-time)."""
 
+    #: failed mirror POSTs kept as messages; older failures only count
+    #: toward ``forward_errors_total``, so a long-running server with a
+    #: dead subscription target keeps bounded memory
+    FORWARD_ERRORS_KEPT = 100
+
     def __init__(
         self,
         spark: SparkSession,
@@ -58,7 +64,9 @@ class CFluxApp:
         self.allowed_forward_schemes = allowed_forward_schemes
         # mirror targets whose POST failed, for observability (the
         # reference swallows forward errors silently, cflux.js:870-872)
-        self.forward_errors: list[str] = []
+        self.forward_errors: deque[str] = deque(maxlen=self.FORWARD_ERRORS_KEPT)
+        self.forward_errors_total = 0
+        self._forward_errors_lock = threading.Lock()
         # single-writer rule enforced in-process: concurrent write_batch
         # calls to one store race on the registry anti-join, so /write
         # serializes here even under a threaded WSGI server. Cross-
@@ -136,16 +144,21 @@ class CFluxApp:
         for _sid, target in self.engine.subscriptions.get(db, []):
             scheme = target.split(":", 1)[0].lower() if ":" in target else ""
             if scheme not in self.allowed_forward_schemes:
-                self.forward_errors.append(f"{target}: scheme {scheme!r} not allowed")
+                self._forward_failed(f"{target}: scheme {scheme!r} not allowed")
                 continue
             def post(url: str = target) -> None:
                 try:
                     req = urllib.request.Request(url, data=raw, method="POST")
                     urllib.request.urlopen(req, timeout=self.forward_timeout_s).read()
                 except Exception as exc:  # noqa: BLE001 — fire-and-forget, but record
-                    self.forward_errors.append(f"{url}: {exc}")
+                    self._forward_failed(f"{url}: {exc}")
 
             threading.Thread(target=post, daemon=True).start()
+
+    def _forward_failed(self, msg: str) -> None:
+        with self._forward_errors_lock:
+            self.forward_errors.append(msg)
+            self.forward_errors_total += 1
 
     # ------------------------------------------------------------ /query
 

@@ -163,7 +163,16 @@ def train_nb_weights(
         F.sum(F.when(F.col("_pos"), 1).otherwise(0)).alias("mp"),
         F.sum(F.when(~F.col("_pos"), 1).otherwise(0)).alias("mn"),
     )
-    pbase = docs_per_class.crossJoin(tot)
+    # ln(mp/mn) needs exemplars of BOTH classes (the portable ln takes
+    # positive integers; a zero count would give a finite wrong prior,
+    # where libm ln failed with ±inf) — fail loudly inside the same
+    # projection, no extra action
+    pbase = docs_per_class.crossJoin(tot).withColumn(
+        "mp",
+        F.when((F.col("mp") > 0) & (F.col("mn") > 0), F.col("mp")).otherwise(
+            F.raise_error(F.lit("NB training needs labeled exemplars of both classes"))
+        ),
+    )
     steps_b, out_b = portable_ln_ratio_steps("mp", "mn", "_pb")
     steps_mp, out_mp = portable_ln_ratio_steps("1", f"tp + {b}", "_pmp")
     steps_mn, out_mn = portable_ln_ratio_steps("1", f"tn + {b}", "_pmn")

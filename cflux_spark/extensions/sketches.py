@@ -22,6 +22,8 @@ longs), so the SQL oracle replays it bit-for-bit — the HLL tier
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -302,8 +304,10 @@ def kmv_overlap(
     def _fill() -> None:
         try:
             elems.count()
-        except Exception:  # noqa: BLE001 — caller tore the session down
-            pass            # before executing; the fill is best-effort
+        except Exception:  # noqa: BLE001 — the fill is best-effort
+            # the first consumer recomputes (a session torn down before
+            # the fill ran lands here too): log it, do not raise
+            logging.getLogger(__name__).debug("kmv_overlap cache fill failed", exc_info=True)
 
     InheritableThread(target=_fill, daemon=True).start()
     w = Window.partitionBy("grp").orderBy("h")

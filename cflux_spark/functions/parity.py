@@ -38,6 +38,8 @@ SCALE.md records the table.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -108,10 +110,11 @@ def portable_ln_ratio(a: str, b: str) -> str:
     steps, out = portable_ln_ratio_steps(a, b)
     # fold the step chain into one expression via textual substitution
     # INNERMOST-FIRST; steps reference each other at most once apiece
-    # except z2 (bounded: the Horner chain names z2, not its body)
+    # except z2 (bounded: the Horner chain names z2, not its body).
+    # Whole-word matches only: _pl_k is a prefix of _pl_k0, _pl_z of _pl_z2
     expr = out
     for name, body in reversed(steps):
-        expr = expr.replace(name, body)
+        expr = re.sub(rf"\b{re.escape(name)}\b", lambda _m: body, expr)
     return expr
 
 

@@ -45,7 +45,10 @@ Grafana emits it for non-UTC dashboards).
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import reduce
+from itertools import islice
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -1384,6 +1387,51 @@ def _bucket_ms(bucket_s: float, offset_s: float = 0.0, tz: str | None = None, sr
     return F.expr(f"ts_ns div {bucket_ns}") * bucket_ms
 
 
+class _Part(NamedTuple):
+    """One frame of a SELECT plan, already ordered and sliced:
+    ``[*tkeys, ts_ms, val]`` (or ``_v0.._vN`` for a point-aligned
+    multi-column frame), its envelope column name(s), the row →
+    ``[time, *values]`` mapper, and whether it holds at most one row
+    per (series key, ts_ms) — bucket-keyed parts of one statement
+    full-outer-join into one streamable frame."""
+
+    frame: DataFrame
+    columns: str | list[str]
+    mapper: Callable
+    keyed: bool
+
+
+class _Plan(NamedTuple):
+    """A SELECT statement's parts plus what both sinks need around
+    them: the statement (series name, ORDER BY), the GROUP BY tags
+    and their frame keys, and the merge policy — whether the parts
+    merge onto one column grid (multi-field or '*'), and the
+    LIMIT/OFFSET the merged rows still owe."""
+
+    stmt: SelectStmt
+    parts: list[_Part]
+    gtags: list[str]
+    tkeys: list[str]
+    merge: bool
+    limit: int | None
+    offset: int | None
+
+
+class _OuterLevel(NamedTuple):
+    """The outer level of a statement whose FROM is a subquery: the
+    subquery's output frame (outer WHERE applied), the outer GROUP BY
+    tags and frame keys, the outer specs ('*' expanded), the output
+    name → frame column map, and whether the outer grouping keeps
+    every tag the subquery groups by."""
+
+    frame: DataFrame
+    gtags: list[str]
+    tkeys: list[str]
+    specs: list[FieldSpec]
+    colmap: dict[str, str]
+    series_kept: bool
+
+
 class InfluxQLEngine:
     """Executes the statement surface against LPStore-backed databases."""
 
@@ -1585,7 +1633,7 @@ class InfluxQLEngine:
         if upper.startswith("DELETE"):
             return self._delete(qs, db)
         if upper.startswith("EXPLAIN"):
-            return self._explain(qs, db)
+            return self._explain(qs, lambda inner: self._select(inner, db))
         if upper.startswith("SELECT"):
             return self._select(qs, db)
         # M11: unsupported statements return the empty envelope
@@ -2023,396 +2071,111 @@ class InfluxQLEngine:
         self.subscriptions.setdefault(target_db, []).append((sid, target))
         return _envelope([])
 
-    # ----------------------------------------------------- chunked SELECT
+    # ------------------------------------------------------- SELECT sinks
 
     def execute_chunked(self, q: str, db: str | None = None, chunk_size: int = 10_000):
         """Generator of result envelopes (InfluxDB ``chunked=true``
-        semantics): raw-point SELECTs stream through
-        ``toLocalIterator()`` in chunks of ``chunk_size`` rows — driver
-        memory is O(chunk_size) no matter how large the result, and the
-        ``max_result_rows`` guard does not apply (streaming IS the
-        unbounded-result path, done safely). GROUP BY time(N)
-        aggregates stream too (round 4 — a huge-cardinality grouped
-        result is as unbounded as raw points). Non-chunkable
-        statements (selectors/distinct/elapsed, SHOW, subqueries,
-        SLIMIT — small or needing whole-result context) fall back to
-        one ordinary envelope.
+        semantics) — the streaming sink of the one SELECT planner
+        (``_plan_select``). A SELECT whose plan is one frame, or
+        bucket-keyed frames that full-outer-join into one, streams
+        through ``toLocalIterator()`` in chunks of ``chunk_size`` rows:
+        driver memory is O(chunk_size) no matter how large the result,
+        and the ``max_result_rows`` guard does not apply (streaming IS
+        the unbounded-result path, done safely). The envelope sink
+        answers everything else as one ordinary envelope: non-SELECT
+        statements, INTO (its result is a written count), FROM /regex/
+        and SLIMIT/SOFFSET (they need the whole series list), and plans
+        whose parts cannot be joined.
 
         The reference streams ClickHouse rows the same way
         (row-at-a-time into the response pivot, cflux.js:792-810); this
         is that behavior with bounded memory and an explicit wire
         contract: every yielded envelope except the last carries
         ``partial: true`` (InfluxDB chunked-response shape)."""
+        chunk_size = max(1, int(chunk_size))
         stmts = _split_statements(q)
-        if len(stmts) == 1 and stmts[0].strip().upper().startswith("EXPLAIN"):
-            # EXPLAIN under chunked=true shows the chunked dispatch's
-            # own per-spec frames (round 10)
-            yield self._explain_chunked(stmts[0].strip(), db, max(1, int(chunk_size)))
-            return
-        if len(stmts) == 1 and stmts[0].strip().upper().startswith("SELECT"):
-            try:
-                stmt = parse_select(stmts[0].strip())
-            except InfluxQLError:
-                stmt = None
-            if (
-                stmt is not None
-                and stmt.into is None  # INTO writes; its result is a
-                # 1-row written-count envelope — nothing to chunk
-                # (round 10: the chunked dispatch used to silently
-                # drop the INTO clause and stream the rows instead)
-                and stmt.measurement_regex is None
-                and not stmt.slimit
-                and not stmt.soffset
-            ):
-                if stmt.subquery is not None:
-                    # subquery statements stream too (round 7; round 8
-                    # extended to multi-field and wildcard outer
-                    # selects): raw re-selection of the subquery's
-                    # output (the HAVING idiom over years of buckets)
-                    # is as unbounded as a raw select; multi-field
-                    # outers stream ONE bucket-aligned merged frame
-                    # (per-spec frames full-outer-joined on
-                    # (series key, bucket) — the _select_agg_chunked
-                    # shape, fully distributed).
-                    yield from self._select_subquery_chunked(
-                        stmt, db, max(1, int(chunk_size))
-                    )
-                    return
-                elif stmt.group_by_time_s is None and all(
-                    sp.agg is None and sp.tx is None and sp.expr is None
-                    for sp in stmt.fields
-                ):
-                    yield from self._select_raw_chunked(stmt, db, max(1, int(chunk_size)))
-                    return
-                if (
-                    stmt.subquery is None
-                    and len(stmt.fields) == 1
-                    and stmt.fields[0].agg in (*_SEL_FNS, "distinct", "elapsed")
-                    and stmt.fields[0].expr is None
-                    and stmt.fields[0].tx is None
-                    and not stmt.fields[0].tag
-                    and stmt.fields[0].name != "*"
-                ):
-                    # selectors/distinct/elapsed stream too (round 7 —
-                    # previously single-envelope fallback): top(f,N)
-                    # per bucket over years, distinct over a
-                    # high-cardinality field, and elapsed (per-point)
-                    # are all as unbounded as raw selects. The frames
-                    # behind the envelope builders are already
-                    # distributed [tkeys, ts_ms, val] shapes — reuse
-                    # them through the shared chunk pump.
-                    yield from self._select_special_chunked(stmt, db, max(1, int(chunk_size)))
-                    return
-                if stmt.subquery is None and stmt.group_by_time_s is not None and all(
-                    sp.agg not in _SEL_FNS
-                    and sp.agg not in ("distinct", "elapsed")
-                    and sp.expr is None
-                    for sp in stmt.fields
-                ):
-                    # aggregated results are usually small, but a
-                    # huge-cardinality GROUP BY time(N)[, tag] (years
-                    # of seconds buckets × many series) is not —
-                    # stream the bucketed frame the same way
-                    yield from self._select_agg_chunked(stmt, db, max(1, int(chunk_size)))
-                    return
+        if len(stmts) == 1:
+            qs = stmts[0].strip()
+            if qs.upper().startswith("EXPLAIN"):
+                yield self._explain(
+                    qs, lambda inner: list(self._select_chunked(inner, db, chunk_size))
+                )
+                return
+            if qs.upper().startswith("SELECT"):
+                yield from self._select_chunked(qs, db, chunk_size)
+                return
         yield self.execute(q, db)
 
-    def _select_subquery_chunked(self, stmt: SelectStmt, db: str | None, chunk_size: int):
-        """Chunked subquery statements (round 7; multi-field/wildcard
-        round 8): the outer result is one distributed
-        [*okeys, ts_ms, val] frame per spec (_spec_frame_over — raw
-        re-selection, aggregate, transform, or arithmetic over the
-        subquery's output), so it drains through the shared chunk pump
-        like any other frame; the max_result_rows guard does not
-        apply. Multi-field outers mirror the UNCHUNKED merge exactly:
-        per-spec frames slice internally (LIMIT/OFFSET per spec, as
-        _select_subquery does), full-outer-join on
-        (series key, bucket) into the statement-wide column grid, and
-        LIMIT re-caps the merged rows (offset already consumed
-        per-spec — _merge_series_columns semantics)."""
+    def _select_chunked(self, qs: str, db: str | None, chunk_size: int):
+        """Chunked sink: the plan as ONE frame through the chunk pump
+        (``_stream_part``), or one envelope from the envelope sink."""
+        stmt = parse_select(qs)
+        if stmt.into is not None or stmt.measurement_regex is not None or stmt.slimit or stmt.soffset:
+            yield self._select(qs, db)
+            return
         store = self._stmt_store(stmt, db)
-        reg = store.read_registry()
-        prepared = self._subquery_frame(
-            stmt.subquery, store, reg,
-            want_tags=(stmt.group_by_tags, stmt.group_by_star),
-        )
-        if prepared is None:
-            yield _envelope([])
+        plan = self._plan_select(stmt, store, store.read_registry())
+        part = _stream_part(plan)
+        if part is None:
+            yield _envelope(_merge_plan(plan, self._collect(plan)))
             return
-        inner_df, igtags, itkeys, outputs = prepared
-        inner_df = self._filter_subquery_output(inner_df, igtags, itkeys, outputs, stmt)
-        ogtags = igtags if stmt.group_by_star else stmt.group_by_tags
-        missing = [t for t in ogtags if t not in igtags]
-        if missing:
-            raise InfluxQLError(f"outer GROUP BY tag(s) {missing} not grouped in the subquery")
-        okeys = [itkeys[igtags.index(t)] for t in ogtags]
-        specs = list(stmt.fields)
-        if any(
-            sp.name == "*" and sp.agg is None and sp.tx is None and sp.expr is None
-            for sp in specs
-        ):
-            if len(specs) != 1:
-                raise InfluxQLError("'*' over a subquery cannot mix with other fields")
-            specs = [FieldSpec(None, name) for name, _src in outputs]
-        colmap = dict(outputs)
-        if len(specs) == 1:
-            grouped, colname = self._spec_frame_over(
-                stmt, specs[0], inner_df, colmap, okeys, False
-            )
-            grouped = grouped.orderBy(
-                *okeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms")
-            )
-            grouped = _apply_slice(grouped, okeys, stmt)
-            yield from self._stream_chunked(
-                iter([(grouped, colname)]), stmt, ogtags, okeys, chunk_size,
-                lambda r: [r.ts_ms, r.val],
-            )
-            return
-        from dataclasses import replace as _replace
-        from functools import reduce
-
-        frames_, names = [], []
-        for i, sp in enumerate(specs):
-            fr, nm = self._spec_frame_over(stmt, sp, inner_df, colmap, okeys, True)
-            fr = fr.orderBy(
-                *okeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms")
-            )
-            fr = _apply_slice(fr, okeys, stmt)
-            frames_.append(fr.withColumnRenamed("val", f"_v{i}"))
-            names.append(nm)
-        joined = reduce(lambda a, b: a.join(b, [*okeys, "ts_ms"], "full_outer"), frames_)
-        sel = joined.orderBy(
-            *okeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms")
-        )
-        if stmt.limit:
-            sel = _apply_slice(sel, okeys, _replace(stmt, offset=0))
-        n = len(specs)
-        yield from self._stream_chunked(
-            iter([(sel, _dedup_names(names))]), stmt, ogtags, okeys, chunk_size,
-            lambda r: [r.ts_ms, *[getattr(r, f"_v{i}") for i in range(n)]],
-        )
-
-    def _select_special_chunked(self, stmt: SelectStmt, db: str | None, chunk_size: int):
-        """Chunked single-field selector/distinct/elapsed statements
-        (round 7): same distributed frame as the envelope path, rows
-        drained via the shared chunk pump."""
-        store = self._stmt_store(stmt, db)
-        reg = store.read_registry()
-        facts, gtags, tkeys = self._prepared_facts(stmt, store, reg)
-        if facts is None:
-            yield _envelope([])
-            return
-        spec = stmt.fields[0]
-        ff = facts.filter(F.col("field") == spec.name)
-        if spec.agg == "elapsed":
-            sel, colname = self._elapsed_frame(stmt, spec, ff, tkeys)
-        elif spec.agg == "distinct":
-            sel, colname = self._distinct_frame(stmt, spec, ff, tkeys)
-        else:
-            sel, colname = self._selector_frame(stmt, spec, ff, tkeys)
-        yield from self._stream_chunked(
-            iter([(sel, colname)]), stmt, gtags, tkeys, chunk_size,
-            lambda r: [r.ts_ms, r.val],
-        )
-
-    def _select_raw_chunked(self, stmt: SelectStmt, db: str | None, chunk_size: int):
-        store = self._stmt_store(stmt, db)
-        reg = store.read_registry()
-        facts, gtags, tkeys = self._prepared_facts(stmt, store, reg)
-        if facts is None:
-            yield _envelope([])
-            return
-        # round-6 ADVICE: the chunked dispatch must match the
-        # unchunked one — expand wildcards (SELECT * used to stream
-        # nothing), validate ::tag specs, and route multi-field /
-        # ::tag selects through the point-aligned merged frame
-        # instead of per-field unmerged series
-        self._expand_wildcard(stmt, facts)
-        self._validate_tag_specs(stmt)
-        if len(stmt.fields) > 1 or any(sp.tag for sp in stmt.fields):
-            if reg is None:
-                # no registry to derive the series key from: fall back
-                # to the unchunked merged envelope (same result, one
-                # chunk) rather than emitting misaligned series
-                series = self._select_series(stmt, store, reg)
-                if len(stmt.fields) > 1:
-                    series = _merge_series_columns(
-                        series, stmt.order_desc, stmt.limit, stmt.offset,
-                        slice_unmerged=True,
-                    )
-                yield _envelope(series)
-                return
-            sel, colnames = self._raw_multi_frame(stmt, facts, gtags, tkeys, reg)
-            n = len(colnames)
-            yield from self._stream_chunked(
-                iter([(sel, colnames)]), stmt, gtags, tkeys, chunk_size,
-                lambda r: [
-                    r.ts_ms,
-                    *[pivot_ops._maybe_float(getattr(r, f"_v{i}")) for i in range(n)],
-                ],
-            )
-            return
-
-        def frames():
-            for spec in stmt.fields:
-                ff = facts.filter(F.col("field") == spec.name)
-                sel = ff.select(
-                    *tkeys,
-                    F.expr("ts_ns div 1000000").alias("ts_ms"),
-                    F.coalesce(F.col("message"), F.col("value").cast("string")).alias("val"),
-                ).orderBy(*tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms"))
-                yield _apply_slice(sel, tkeys, stmt), spec.name
-
-        yield from self._stream_chunked(
-            frames(), stmt, gtags, tkeys, chunk_size,
-            lambda r: [r.ts_ms, pivot_ops._maybe_float(r.val)],
-        )
-
-    def _select_agg_chunked(self, stmt: SelectStmt, db: str | None, chunk_size: int):
-        """Chunked GROUP BY time(N) aggregates: the bucketed frame
-        (incl. fill and transforms — all DataFrame-side) streams
-        through toLocalIterator exactly like raw points, so a
-        huge-cardinality grouped result (seconds buckets × 10^6
-        series) never materializes on the driver either.
-
-        Multi-field aggregates stream as ONE merged series with
-        bucket-aligned columns (round 6 — matching the unchunked
-        envelope; previously chunked emitted per-field unmerged
-        series): per-field bucketed frames full-outer-join on
-        (series key, bucket), still fully distributed."""
-        store = self._stmt_store(stmt, db)
-        reg = store.read_registry()
-        facts, gtags, tkeys = self._prepared_facts(stmt, store, reg)
-        if facts is None:
-            yield _envelope([])
-            return
-        self._expand_wildcard(stmt, facts)
-
-        def colname_for(spec: FieldSpec) -> str:
-            base = spec.tx or spec.agg or "mean"
-            base = _DISPLAY.get(base, base)
-            return spec.alias or (f"{base}_{spec.name}" if len(stmt.fields) > 1 else base)
-
-        if len(stmt.fields) > 1:
-            from functools import reduce
-
-            frames_ = []
-            for i, spec in enumerate(stmt.fields):
-                ff = facts.filter(F.col("field") == spec.name)
-                grouped = self._aggregated_frame(stmt, spec, ff, tkeys)
-                frames_.append(grouped.withColumnRenamed("val", f"_v{i}"))
-            joined = reduce(
-                lambda a, b: a.join(b, [*tkeys, "ts_ms"], "full_outer"), frames_
-            )
-            sel = joined.orderBy(
-                *tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms")
-            )
-            sel = _apply_slice(sel, tkeys, stmt)
-            n = len(stmt.fields)
-            yield from self._stream_chunked(
-                iter([(sel, _dedup_names([colname_for(sp) for sp in stmt.fields]))]),
-                stmt, gtags, tkeys, chunk_size,
-                lambda r: [r.ts_ms, *[getattr(r, f"_v{i}") for i in range(n)]],
-            )
-            return
-
-        def frames():
-            for spec in stmt.fields:
-                ff = facts.filter(F.col("field") == spec.name)
-                grouped = self._aggregated_frame(stmt, spec, ff, tkeys)
-                grouped = grouped.orderBy(
-                    *tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms")
-                )
-                yield _apply_slice(grouped, tkeys, stmt), colname_for(spec)
-
-        yield from self._stream_chunked(
-            frames(), stmt, gtags, tkeys, chunk_size, lambda r: [r.ts_ms, r.val]
-        )
-
-    def _stream_chunked(self, frames, stmt, gtags, tkeys, chunk_size: int, mapper):
-        """Shared chunk pump: ``frames`` yields (DataFrame, colname);
-        rows stream via toLocalIterator in chunk_size buffers, and
-        every envelope except the final one carries ``partial: true``
-        (one-envelope lookahead so the last chunk is identifiable)."""
         cap = getattr(self._explain_local, "plans", None)
         if cap is not None:
-            # EXPLAIN capture mode (round 10): record each per-spec
-            # frame's plan at the point its rows would begin
-            # streaming; nothing executes, nothing streams
-            for sel, _colname in frames:
-                cap.append(_explain_string(sel))
+            # EXPLAIN capture mode (round 10): record the frame's plan
+            # at the point its rows would begin streaming; nothing
+            # executes, nothing streams
+            cap.append(_explain_string(part.frame))
             yield _envelope([])
             return
-        emitted = False
-        buf: list = []
-        pending: tuple[list, str] | None = None  # (rows, colname) awaiting more
-        for sel, colname in frames:
-            for row in sel.toLocalIterator():
-                buf.append(row)
-                if len(buf) >= chunk_size:
-                    if pending is not None:
-                        yield self._chunk_envelope(*pending, stmt, gtags, tkeys, True, mapper)
-                    pending = (buf, colname)
-                    buf = []
-                    emitted = True
-            if buf:
-                if pending is not None:
-                    yield self._chunk_envelope(*pending, stmt, gtags, tkeys, True, mapper)
-                pending = (buf, colname)
-                buf = []
-                emitted = True
-        if pending is not None:
-            yield self._chunk_envelope(*pending, stmt, gtags, tkeys, False, mapper)
-        if not emitted:
-            yield _envelope([])
 
-    def _chunk_envelope(self, rows, colname, stmt, gtags, tkeys, partial: bool, mapper=None) -> dict:
-        series = _tag_series(
-            rows, gtags, tkeys, stmt, colname,
-            mapper or (lambda r: [r.ts_ms, pivot_ops._maybe_float(r.val)]),
-        )
-        env = _envelope(series)
-        if partial:
-            env["results"][0]["partial"] = True
-        return env
+        def envelope(rows: list, partial: bool) -> dict:
+            env = _envelope(
+                _tag_series(rows, plan.gtags, plan.tkeys, stmt, part.columns, part.mapper)
+            )
+            if partial:
+                env["results"][0]["partial"] = True
+            return env
 
-    # -------------------------------------------------------------- SELECT
+        # one-chunk lookahead, so the last chunk is identifiable
+        rows = part.frame.toLocalIterator()
+        pending = None
+        for chunk in iter(lambda: list(islice(rows, chunk_size)), []):
+            if pending is not None:
+                yield envelope(pending, True)
+            pending = chunk
+        yield _envelope([]) if pending is None else envelope(pending, False)
 
-    def _explain(self, qs: str, db: str | None) -> dict:
+    def _collect(self, plan: _Plan) -> list[dict]:
+        """Envelope sink for one plan: each part's bounded collect,
+        partitioned into one series per tag combination."""
+        series: list[dict] = []
+        for part in plan.parts:
+            rows = self._bounded_collect(part.frame)
+            series.extend(
+                _tag_series(rows, plan.gtags, plan.tkeys, plan.stmt, part.columns, part.mapper)
+            )
+        return _dedup_statement_columns(series)
+
+    def _explain(self, qs: str, sink: Callable[[str], object]) -> dict:
         """``EXPLAIN SELECT ...`` — the statement's Catalyst plan(s)
         in the envelope, one value row per plan line (InfluxDB 1.x
         grammar position; the payload here is Spark's formatted
         physical plan, which is what an operator debugging a dashboard
         query on a real cluster needs — scan pushdowns, Exchanges,
-        broadcast choices). Runs the FULL planning path — parse,
-        registry resolution, frame construction — and captures each
-        frame at the exact point execution would start, executing
-        nothing (a multi-field statement shows one plan per field
-        frame, labeled). EXPLAIN ANALYZE is rejected loudly rather
-        than silently running the query."""
+        broadcast choices). ``sink`` runs the inner SELECT through the
+        sink the request would use — the envelope sink, or under
+        ``chunked=true`` the drained chunked sink (round 10) — with the
+        FULL planning path (parse, registry resolution, frame
+        construction), and each frame is captured at the exact point
+        execution would start, executing nothing. The envelope sink
+        shows one labeled plan per collected frame of a multi-field
+        statement; the chunked sink shows the one joined frame it would
+        stream. EXPLAIN ANALYZE is rejected loudly rather than silently
+        running the query."""
         inner = self._strip_explain(qs)
         self._explain_local.plans = []
         try:
-            self._select(inner, db)
-        finally:
-            plans = self._explain_local.plans
-            self._explain_local.plans = None
-        return self._explain_envelope(plans)
-
-    def _explain_chunked(self, qs: str, db: str | None, chunk_size: int) -> dict:
-        """``EXPLAIN`` under ``chunked=true`` (round 10): the CHUNKED
-        dispatch plans end-to-end and each per-spec frame's Catalyst
-        plan is captured at the exact point its rows would begin
-        streaming through the chunk pump (``toLocalIterator``) —
-        nothing runs, nothing streams. Statements the chunked path
-        would anyway serve as one ordinary envelope capture through
-        ``_bounded_collect`` exactly like plain EXPLAIN, so the two
-        paths show the plan the statement would really get."""
-        inner = self._strip_explain(qs)
-        self._explain_local.plans = []
-        try:
-            for _env in self.execute_chunked(inner, db, chunk_size):
-                pass  # capture mode: envelopes are empty husks
+            sink(inner)
         finally:
             plans = self._explain_local.plans
             self._explain_local.plans = None
@@ -2447,52 +2210,33 @@ class InfluxQLEngine:
         return _envelope([_series("explain", ["QUERY PLAN"], lines)])
 
     def _select(self, qs: str, db: str | None) -> dict:
+        """Envelope sink: every part of the plan is collected
+        (``_bounded_collect``), multi-field parts merge driver-side
+        onto one column grid (``_merge_series_columns``), and
+        SLIMIT/SOFFSET slice the series list."""
         stmt = parse_select(qs)
-        # decide the merge BEFORE dispatch: _expand_wildcard mutates
-        # stmt.fields in place on the non-regex path (so '*' is gone
-        # by the time the merge check runs) but regex subs are copies
-        # (so '*' survives) — checking after the call made the two
-        # paths disagree about who owns LIMIT/OFFSET (round-7 ADVICE:
-        # single-field '*' under FROM /re/ was sliced twice)
-        merge_needed = len(stmt.fields) > 1 or any(sp.name == "*" for sp in stmt.fields)
         store = self._stmt_store(stmt, db)
         reg = store.read_registry()
         if stmt.into is not None:
             return self._select_into(stmt, store, reg, db)
-        if stmt.subquery is not None:
-            series = self._select_subquery(stmt, store, reg)
-        elif stmt.measurement_regex is not None:
-            # FROM /re/: resolve matching measurements from the (small)
-            # registry, then run the single-measurement pipeline per
-            # match — InfluxDB emits one series set per measurement
+        subs = [stmt]
+        if stmt.measurement_regex is not None:
+            # FROM /re/: the single-measurement plan per matching
+            # measurement — InfluxDB emits one series set per match
             from dataclasses import replace as _replace
 
-            series: list[dict] = []
-            if reg is not None:
-                pat = re.compile(stmt.measurement_regex)
-                names = sorted(
-                    r.measurement
-                    for r in reg.select("measurement").distinct().collect()
-                    if pat.search(r.measurement)
-                )
-                for meas in names:
-                    sub = _replace(stmt, measurement=meas, measurement_regex=None)
-                    series.extend(self._select_series(sub, store, reg))
-        else:
-            series = self._select_series(stmt, store, reg)
-        # multi-field SELECTs merge into one series per (name, tags)
-        # with aligned columns — the InfluxDB 1.x envelope shape.
-        # Slicing was deferred by _select_series (InfluxDB counts
-        # merged points); the subquery path slices internally, so
-        # only LIMIT re-caps there (idempotent). A '*' field may have
-        # expanded to several per-measurement inside the regex loop
-        # (each `sub` is a copy), so wildcards trigger the merge too.
-        if merge_needed:
-            deferred = stmt.subquery is None
-            series = _merge_series_columns(
-                series, stmt.order_desc, stmt.limit,
-                stmt.offset if deferred else None, slice_unmerged=deferred,
-            )
+            subs = [
+                _replace(stmt, measurement=meas, measurement_regex=None)
+                for meas in self._regex_measurements(stmt, reg)
+            ]
+        series: list[dict] = []
+        plan = None
+        for sub in subs:
+            plan = self._plan_select(sub, store, reg)
+            series.extend(self._collect(plan))
+        if plan is not None:
+            # one merge over every match: the column grid is global
+            series = _merge_plan(plan, series)
         # SLIMIT/SOFFSET slice the series list (driver-side: one entry
         # per series, already aggregated — small by construction)
         if stmt.soffset:
@@ -2500,6 +2244,19 @@ class InfluxQLEngine:
         if stmt.slimit is not None:
             series = series[: stmt.slimit]
         return _envelope(series)
+
+    @staticmethod
+    def _regex_measurements(stmt: SelectStmt, reg: DataFrame | None) -> list[str]:
+        """Measurements matching ``FROM /re/``, resolved from the
+        (small) registry."""
+        if reg is None:
+            return []
+        pat = re.compile(stmt.measurement_regex)
+        return sorted(
+            r.measurement
+            for r in reg.select("measurement").distinct().collect()
+            if pat.search(r.measurement)
+        )
 
     # ------------------------------------------------- retention policies
 
@@ -2712,16 +2469,8 @@ class InfluxQLEngine:
         if stmt.measurement_regex is not None:
             from dataclasses import replace as _replace
 
-            names: list[str] = []
-            if reg is not None:
-                pat = re.compile(stmt.measurement_regex)
-                names = sorted(
-                    r.measurement
-                    for r in reg.select("measurement").distinct().collect()
-                    if pat.search(r.measurement)
-                )
             total = 0
-            for meas in names:
+            for meas in self._regex_measurements(stmt, reg):
                 sub = _replace(
                     stmt,
                     measurement=meas,
@@ -2843,36 +2592,22 @@ class InfluxQLEngine:
         (_spec_frame_over: aggregate / transform / arithmetic / raw
         re-selection) and the bucketed result writes back under the
         same field-naming rules as a base INTO."""
-        prepared = self._subquery_frame(
-            stmt.subquery, store, reg,
-            want_tags=(stmt.group_by_tags, stmt.group_by_star),
-        )
-        if prepared is None:
+        outer = self._subquery_outer(stmt, store, reg)
+        if outer is None:
             return _envelope([_series("result", ["time", "written"], [[0, 0]])])
-        inner_df, igtags, itkeys, outputs = prepared
-        inner_df = self._filter_subquery_output(inner_df, igtags, itkeys, outputs, stmt)
-        ogtags = igtags if stmt.group_by_star else stmt.group_by_tags
-        missing = [t for t in ogtags if t not in igtags]
-        if missing:
-            raise InfluxQLError(f"outer GROUP BY tag(s) {missing} not grouped in the subquery")
-        okeys = [itkeys[igtags.index(t)] for t in ogtags]
-        specs = list(stmt.fields)
-        if any(sp.name == "*" and sp.agg is None and sp.tx is None and sp.expr is None
-               for sp in specs):
-            if len(specs) != 1:
-                raise InfluxQLError("'*' over a subquery cannot mix with other fields")
-            specs = [FieldSpec(None, name) for name, _src in outputs]
-        if ogtags:
+        if outer.gtags:
             tag_map = F.map_from_arrays(
-                F.array(*[F.lit(t) for t in ogtags]), F.array(*[F.col(k) for k in okeys])
+                F.array(*[F.lit(t) for t in outer.gtags]),
+                F.array(*[F.col(k) for k in outer.tkeys]),
             )
         else:
             tag_map = F.from_json(F.lit("{}"), "map<string,string>")
-        colmap = dict(outputs)
-        multi = len(specs) > 1
+        multi = len(outer.specs) > 1
         frames = []
-        for spec in specs:
-            grouped, colname = self._spec_frame_over(stmt, spec, inner_df, colmap, okeys, multi)
+        for spec in outer.specs:
+            grouped, colname = self._spec_frame_over(
+                stmt, spec, outer.frame, outer.colmap, outer.tkeys, multi
+            )
             frames.append(
                 grouped.select(
                     F.lit(stmt.into).alias("measurement"),
@@ -3080,17 +2815,51 @@ class InfluxQLEngine:
                 "SELECT must include at least one FIELD alongside ::tag columns"
             )
 
-    def _select_series(self, stmt: SelectStmt, store: LPStore, reg: DataFrame | None) -> list[dict]:
-        facts, gtags, tkeys = self._prepared_facts(stmt, store, reg)
-        if facts is None:
-            return []
+    def _plan_select(self, stmt: SelectStmt, store: LPStore, reg: DataFrame | None) -> _Plan:
+        """The one SELECT planner: statement → its parts, each a frame
+        already ordered and sliced, for either sink — ``_select``
+        collects them into one envelope, ``execute_chunked`` streams
+        them through the chunk pump. This is the single site that
+        classifies SELECT shapes (INTO and FROM /regex/ dispatch
+        around it; subquery specs classify in ``_spec_frame_over``).
 
-        # a '*' present NOW means _select owns the merge (and the
-        # deferred LIMIT/OFFSET) even if it expands to one field —
-        # capture before _expand_wildcard rewrites stmt.fields
-        # (round-7 ADVICE: single-field regex expansion sliced here
-        # AND again in _merge_series_columns)
-        had_wildcard = any(sp.name == "*" for sp in stmt.fields)
+        Multi-field and '*' statements merge their parts onto one
+        column grid. InfluxDB counts MERGED points for LIMIT/OFFSET
+        (round-6 ADVICE — per-field slicing returned the wrong window
+        when fields had disjoint timestamps), so a base statement's
+        per-field parts run unsliced and the merged rows owe the
+        slice; a subquery's parts slice per spec and the merge only
+        re-caps LIMIT (idempotent)."""
+        # decide the merge BEFORE _expand_wildcard rewrites stmt.fields
+        # (round-7 ADVICE: a single-field '*' expansion was sliced
+        # twice when the check ran after it)
+        merge = len(stmt.fields) > 1 or any(sp.name == "*" for sp in stmt.fields)
+        if stmt.subquery is not None:
+            outer = self._subquery_outer(stmt, store, reg)
+            if outer is None:
+                return _Plan(stmt, [], [], [], merge, stmt.limit, None)
+            # a re-selection keeps the subquery's rows: bucket-keyed
+            # only when every inner field buckets and no inner tag
+            # folds away
+            inner_keyed = outer.series_kept and all(map(_bucketed, stmt.subquery.fields))
+            multi = len(outer.specs) > 1
+            parts = []
+            for spec in outer.specs:
+                frame, colname = self._spec_frame_over(
+                    stmt, spec, outer.frame, outer.colmap, outer.tkeys, multi
+                )
+                parts.append(
+                    _Part(
+                        _order_slice(frame, outer.tkeys, stmt), colname, _as_is,
+                        inner_keyed or _bucketed(spec),
+                    )
+                )
+            return _Plan(stmt, parts, outer.gtags, outer.tkeys, merge, stmt.limit, None)
+
+        facts, gtags, tkeys = self._prepared_facts(stmt, store, reg)
+        plan = _Plan(stmt, [], gtags, tkeys, merge, stmt.limit, stmt.offset)
+        if facts is None:
+            return plan
         self._expand_wildcard(stmt, facts)
 
         def _is_plain_raw(sp: FieldSpec) -> bool:
@@ -3122,67 +2891,73 @@ class InfluxQLEngine:
             and all(s.agg is None and s.tx is None and s.expr is None for s in stmt.fields)
             and reg is not None
         ):
-            # raw multi-field: align columns on POINT identity
-            # (series key + ts) at the engine level — merging
-            # per-field series by timestamp alone would mispair
-            # same-timestamp points of DIFFERENT series (two hosts
-            # sharing :00) nondeterministically
-            return self._raw_multi_series(stmt, facts, gtags, tkeys, reg)
+            # raw multi-field: ONE point-aligned frame, merged and
+            # sliced in the distributed plan (the envelope merge passes
+            # its wide series through untouched)
+            sel, colnames = self._raw_multi_frame(stmt, facts, gtags, tkeys, reg)
+            n = len(colnames)
+            return plan._replace(parts=[_Part(
+                sel, colnames,
+                lambda r: [
+                    r.ts_ms,
+                    *[pivot_ops._maybe_float(getattr(r, f"_v{i}")) for i in range(n)],
+                ],
+                False,
+            )])
 
-        if (len(stmt.fields) > 1 or had_wildcard) and (stmt.limit or stmt.offset):
-            # Defer LIMIT/OFFSET to the merged envelope: InfluxDB
-            # counts MERGED points, not per-field points (round-6
-            # ADVICE — per-field _apply_slice returned the wrong
-            # window when fields had disjoint timestamps). Per-field
-            # frames run unsliced; _merge_series_columns applies
-            # values[offset:offset+limit] per output series. These
-            # frames are aggregate/transform-sized (raw multi-field
-            # took the _raw_multi_series branch above, which keeps
-            # its distributed slice on the already-merged frame).
+        if merge and (stmt.limit or stmt.offset):
+            # the merged rows owe LIMIT/OFFSET: per-field parts run
+            # unsliced (they are aggregate/transform-sized — raw
+            # multi-field took the merged frame above)
             from dataclasses import replace as _stmt_replace
 
             stmt = _stmt_replace(stmt, limit=None, offset=None)
 
-        series: list[dict] = []
+        parts: list[_Part] = []
         for spec in stmt.fields:
-            if spec.expr is not None:
-                series.extend(self._arith_series(stmt, spec, facts, gtags, tkeys, reg))
-                continue
             fn, fieldname = spec.agg, spec.name
             ff = facts.filter(F.col("field") == fieldname)
-            if fn == "elapsed":
-                series.extend(self._elapsed_series(stmt, spec, ff, gtags, tkeys))
-                continue
-            if fn in _SEL_FNS:
-                series.extend(self._selector_series(stmt, spec, ff, gtags, tkeys))
-                continue
-            if (
+            if spec.expr is not None and _arith_leaves(spec.expr, "agg"):
+                # aggregate arithmetic (round 5): max(v) - min(v),
+                # mean(v) * 100
+                grouped = self._arith_agg_frame(stmt, spec, facts, tkeys)
+                parts.append(
+                    _Part(_order_slice(grouped, tkeys, stmt), spec.alias or spec.name, _as_is, True)
+                )
+            elif spec.expr is not None:
+                # raw arithmetic (round 5): user + sys, user * 100
+                if stmt.group_by_time_s is not None:
+                    raise InfluxQLError(
+                        "GROUP BY time() requires aggregated SELECT expressions"
+                    )
+                frame = self._arith_raw_frame(spec, facts, tkeys, reg)
+                if frame is not None:
+                    sel = frame.withColumn("val", F.col("val").cast("string"))
+                    parts.append(
+                        _Part(_order_slice(sel, tkeys, stmt), spec.alias or spec.name, _as_number, False)
+                    )
+            elif fn == "elapsed":
+                parts.append(_Part(*self._elapsed_frame(stmt, spec, ff, tkeys), _as_is, False))
+            elif fn in _SEL_FNS or (
                 fn in ("max", "min", "first", "last", "percentile")
                 and stmt.group_by_time_s is None
                 and spec.tx is None
                 and len(stmt.fields) == 1
             ):
-                # InfluxDB: a LONE ungrouped selector returns the
-                # actual point WITH ITS ORIGINAL TIMESTAMP (one per
-                # series). The reference folds it into 1-minute
-                # buckets (cflux.js:749 hard-codes toStartOfMinute) —
-                # round-7 VERDICT asked for the InfluxDB semantics.
-                # Scope matches InfluxDB's own rule: multiple fields
-                # (or tx-wrapped selectors, or GROUP BY time) lose
-                # point-ness and stay on the bucketed path.
-                series.extend(self._selector_series(stmt, spec, ff, gtags, tkeys))
-                continue
-            if fn == "distinct":
-                series.extend(self._distinct_series(stmt, spec, ff, gtags, tkeys))
-                continue
-            if (
+                # top/bottom/sample, and the LONE ungrouped selector
+                # (see _selector_frame for the InfluxDB scope rule)
+                parts.append(_Part(*self._selector_frame(stmt, spec, ff, tkeys), _as_is, False))
+            elif fn == "distinct":
+                parts.append(_Part(*self._distinct_frame(stmt, spec, ff, tkeys), _as_is, False))
+            elif (
                 fn is None
                 and (spec.tx in _TX_FNS or spec.tx in _TA_FNS)
                 and stmt.group_by_time_s is None
             ):
-                series.extend(self._raw_transform_series(stmt, spec, ff, gtags, tkeys))
-                continue
-            if fn is None and stmt.group_by_time_s is None:
+                sel = self._raw_transform_frame(stmt, spec, ff, tkeys)
+                colname = spec.alias or (f"{spec.tx}_{fieldname}" if len(stmt.fields) > 1 else spec.tx)
+                parts.append(_Part(_order_slice(sel, tkeys, stmt), colname, _as_is, False))
+            elif fn is None and stmt.group_by_time_s is None:
                 if spec.tx in _MATH_FNS:
                     # pointwise math over a raw float field: string
                     # rows are skipped (InfluxDB math ignores string
@@ -3205,31 +2980,17 @@ class InfluxQLEngine:
                         F.coalesce(F.col("message"), F.col("value").cast("string")).alias("val"),
                     )
                     colname = spec.alias or fieldname
-                sel = sel.orderBy(
-                    *tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms")
-                )
-                sel = _apply_slice(sel, tkeys, stmt)
-                rows = self._bounded_collect(sel)
-                series.extend(
-                    _tag_series(
-                        rows, gtags, tkeys, stmt, colname,
-                        lambda r: [r.ts_ms, pivot_ops._maybe_float(r.val)],
-                    )
-                )
-                continue
-            # aggregated path: default = the reference's 1-minute mean
-            # (cflux.js:749); honored GROUP BY time(N) generalizes it
-            grouped = self._aggregated_frame(stmt, spec, ff, tkeys)
-            grouped = grouped.orderBy(
-                *tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms")
-            )
-            grouped = _apply_slice(grouped, tkeys, stmt)
-            rows = self._bounded_collect(grouped)
-            base = spec.tx or fn or "mean"
-            base = _DISPLAY.get(base, base)
-            colname = spec.alias or (f"{base}_{fieldname}" if len(stmt.fields) > 1 else base)
-            series.extend(_tag_series(rows, gtags, tkeys, stmt, colname, lambda r: [r.ts_ms, r.val]))
-        return _dedup_statement_columns(series)
+                parts.append(_Part(_order_slice(sel, tkeys, stmt), colname, _as_number, False))
+            else:
+                # aggregated path: default = the reference's 1-minute
+                # mean (cflux.js:749); honored GROUP BY time(N)
+                # generalizes it
+                grouped = self._aggregated_frame(stmt, spec, ff, tkeys)
+                base = spec.tx or fn or "mean"
+                base = _DISPLAY.get(base, base)
+                colname = spec.alias or (f"{base}_{fieldname}" if len(stmt.fields) > 1 else base)
+                parts.append(_Part(_order_slice(grouped, tkeys, stmt), colname, _as_is, True))
+        return plan._replace(parts=parts)
 
     @staticmethod
     def _arith_col(node: tuple, leaf_col) -> Column:
@@ -3253,16 +3014,6 @@ class InfluxQLEngine:
             return left * right
         return F.try_divide(left, right)
 
-    def _arith_series(
-        self, stmt: SelectStmt, spec: FieldSpec, facts: DataFrame, gtags, tkeys, reg
-    ) -> list[dict]:
-        """SELECT arithmetic (round 5): ``max(v) - min(v)``,
-        ``mean(v) * 100`` (aggregate kind) or ``user + sys``,
-        ``user * 100`` (raw kind)."""
-        if _arith_leaves(spec.expr, "agg"):
-            return self._arith_agg_series(stmt, spec, facts, gtags, tkeys)
-        return self._arith_raw_series(stmt, spec, facts, gtags, tkeys, reg)
-
     def _arith_agg_frame(
         self, stmt: SelectStmt, spec: FieldSpec, facts: DataFrame, tkeys
     ) -> DataFrame:
@@ -3276,7 +3027,6 @@ class InfluxQLEngine:
         scan → one agg shuffle per distinct leaf → k-way bucket join
         (bucket-keyed, AQE-sized)."""
         from dataclasses import replace as _replace
-        from functools import reduce
 
         node = spec.expr
         leaves: list[tuple] = []
@@ -3293,11 +3043,7 @@ class InfluxQLEngine:
             ff = facts.filter(F.col("field") == fieldname)
             fr = self._aggregated_frame(nofill, FieldSpec(fn, fieldname, arg), ff, tkeys)
             frames.append(fr.withColumnRenamed("val", f"_v{i}"))
-        joined = (
-            reduce(lambda a, b: a.join(b, [*tkeys, "ts_ms"], "full_outer"), frames)
-            if len(frames) > 1
-            else frames[0]
-        )
+        joined = _join_on_bucket(frames, tkeys)
         idx = {lf: i for i, lf in enumerate(leaves)}
         val = F.round(self._arith_col(node, lambda lf: F.col(f"_v{idx[lf]}")), 6)
         grouped = joined.select(*tkeys, "ts_ms", val.alias("val"))
@@ -3310,28 +3056,14 @@ class InfluxQLEngine:
             grouped = grouped.filter(F.col("val").isNotNull())
         return grouped
 
-    def _arith_agg_series(
-        self, stmt: SelectStmt, spec: FieldSpec, facts: DataFrame, gtags, tkeys
-    ) -> list[dict]:
-        """Envelope form of :meth:`_arith_agg_frame`."""
-        grouped = self._arith_agg_frame(stmt, spec, facts, tkeys)
-        grouped = grouped.orderBy(
-            *tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms")
-        )
-        grouped = _apply_slice(grouped, tkeys, stmt)
-        rows = self._bounded_collect(grouped)
-        colname = spec.alias or spec.name
-        return _tag_series(rows, gtags, tkeys, stmt, colname, lambda r: [r.ts_ms, r.val])
-
     def _raw_multi_frame(
         self, stmt: SelectStmt, facts: DataFrame, gtags, tkeys, reg
     ) -> tuple[DataFrame, list[str]]:
         """Point-aligned frame for a raw multi-field SELECT →
         (ordered+sliced DataFrame [*tkeys, ts_ms, _v0.._vN], output
-        column names). Shared by the collected (_raw_multi_series) and
-        chunked (_select_raw_multi_chunked) paths so both emit the
-        same merged series (round-6 ADVICE: chunked used to emit
-        per-field unmerged series for the same query).
+        column names) — ONE merged part, so both sinks emit the same
+        merged series (round-6 ADVICE: chunked used to emit per-field
+        unmerged series for the same query).
 
         Each field's rows key on (series key, ts) — the
         registry-derived tag-set hash, field-independent — and
@@ -3387,23 +3119,8 @@ class InfluxQLEngine:
             *tkeys,
             F.expr("ts_ns div 1000000").alias("ts_ms"),
             *[F.col(f"_v{i}") for i in range(len(stmt.fields))],
-        ).orderBy(*tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms"))
-        sel = _apply_slice(sel, tkeys, stmt)
-        return sel, _dedup_names([sp.alias or sp.name for sp in stmt.fields])
-
-    def _raw_multi_series(
-        self, stmt: SelectStmt, facts: DataFrame, gtags, tkeys, reg
-    ) -> list[dict]:
-        sel, colnames = self._raw_multi_frame(stmt, facts, gtags, tkeys, reg)
-        rows = self._bounded_collect(sel)
-        n = len(colnames)
-        return _tag_series(
-            rows, gtags, tkeys, stmt, colnames,
-            lambda r: [
-                r.ts_ms,
-                *[pivot_ops._maybe_float(getattr(r, f"_v{i}")) for i in range(n)],
-            ],
         )
+        return _order_slice(sel, tkeys, stmt), _dedup_names([sp.alias or sp.name for sp in stmt.fields])
 
     def _arith_raw_frame(
         self, spec: FieldSpec, facts: DataFrame, tkeys, reg, ns: bool = False,
@@ -3486,36 +3203,6 @@ class InfluxQLEngine:
             F.col("val").isNotNull()
         )
 
-    def _arith_raw_series(
-        self, stmt: SelectStmt, spec: FieldSpec, facts: DataFrame, gtags, tkeys, reg
-    ) -> list[dict]:
-        """Envelope form of :meth:`_arith_raw_frame`."""
-        if stmt.group_by_time_s is not None:
-            raise InfluxQLError(
-                "GROUP BY time() requires aggregated SELECT expressions"
-            )
-        frame = self._arith_raw_frame(spec, facts, tkeys, reg)
-        if frame is None:
-            return []
-        sel = frame.withColumn("val", F.col("val").cast("string"))
-        sel = sel.orderBy(
-            *tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms")
-        )
-        sel = _apply_slice(sel, tkeys, stmt)
-        rows = self._bounded_collect(sel)
-        colname = spec.alias or spec.name
-        return _tag_series(
-            rows, gtags, tkeys, stmt, colname,
-            lambda r: [r.ts_ms, pivot_ops._maybe_float(r.val)],
-        )
-
-    def _elapsed_series(
-        self, stmt: SelectStmt, spec: FieldSpec, ff: DataFrame, gtags, tkeys
-    ) -> list[dict]:
-        sel, colname = self._elapsed_frame(stmt, spec, ff, tkeys)
-        rows = self._bounded_collect(sel)
-        return _tag_series(rows, gtags, tkeys, stmt, colname, lambda r: [r.ts_ms, r.val])
-
     def _elapsed_frame(
         self, stmt: SelectStmt, spec: FieldSpec, ff: DataFrame, tkeys
     ) -> tuple[DataFrame, str]:
@@ -3543,24 +3230,10 @@ class InfluxQLEngine:
                 F.expr("ts_ns div 1000000").alias("ts_ms"),
                 F.expr(f"_dt div {unit_ns}").alias("val"),
             )
-            .orderBy(*tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms"))
         )
-        sel = _apply_slice(sel, tkeys, stmt)
+        sel = _order_slice(sel, tkeys, stmt)
         colname = spec.alias or (f"elapsed_{spec.name}" if len(stmt.fields) > 1 else "elapsed")
         return sel, colname
-
-    def _raw_transform_series(
-        self, stmt: SelectStmt, spec: FieldSpec, ff: DataFrame, gtags, tkeys
-    ) -> list[dict]:
-        """Envelope form of :meth:`_raw_transform_frame`."""
-        sel = self._raw_transform_frame(stmt, spec, ff, tkeys)
-        sel = sel.orderBy(
-            *tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms")
-        )
-        sel = _apply_slice(sel, tkeys, stmt)
-        rows = self._bounded_collect(sel)
-        colname = spec.alias or (f"{spec.tx}_{spec.name}" if len(stmt.fields) > 1 else spec.tx)
-        return _tag_series(rows, gtags, tkeys, stmt, colname, lambda r: [r.ts_ms, r.val])
 
     def _raw_transform_frame(
         self, stmt: SelectStmt, spec: FieldSpec, ff: DataFrame, tkeys
@@ -3650,9 +3323,9 @@ class InfluxQLEngine:
             *tkeys, F.expr("ts_ns div 1000000").alias("ts_ms"), F.col("_v").alias("val")
         )
 
-    def _selector_series(
-        self, stmt: SelectStmt, spec: FieldSpec, ff: DataFrame, gtags, tkeys
-    ) -> list[dict]:
+    def _selector_frame(
+        self, stmt: SelectStmt, spec: FieldSpec, ff: DataFrame, tkeys
+    ) -> tuple[DataFrame, str]:
         """top(f, N) / bottom(f, N) — the N actual points per series
         (and per time bucket under GROUP BY time), keeping their own
         timestamps. Ties break toward the earlier point, as InfluxDB's
@@ -3660,23 +3333,16 @@ class InfluxQLEngine:
         a global top-N (TakeOrdered, no single-partition window) when
         there are none.
 
-        Also serves the LONE ungrouped max/min/first/last (round 7:
-        InfluxDB returns the actual point with its original
-        timestamp; k=1). max/min order by value (nulls filtered —
+        Also serves the LONE ungrouped max/min/first/last/percentile
+        (round 7: InfluxDB returns the actual point WITH ITS ORIGINAL
+        TIMESTAMP, one per series; k=1). The reference folds it into
+        1-minute buckets (cflux.js:749 hard-codes toStartOfMinute).
+        Scope matches InfluxDB's own rule: multiple fields, tx-wrapped
+        selectors, or GROUP BY time lose point-ness and stay on the
+        bucketed path. max/min order by value (nulls filtered —
         string-only points have no numeric value to select);
-        first/last order by time with value-asc tiebreak at
-        duplicate timestamps (deterministic; InfluxDB leaves the
-        tie undefined)."""
-        sel, colname = self._selector_frame(stmt, spec, ff, tkeys)
-        rows = self._bounded_collect(sel)
-        return _tag_series(rows, gtags, tkeys, stmt, colname, lambda r: [r.ts_ms, r.val])
-
-    def _selector_frame(
-        self, stmt: SelectStmt, spec: FieldSpec, ff: DataFrame, tkeys
-    ) -> tuple[DataFrame, str]:
-        """The distributed frame behind :meth:`_selector_series` —
-        split out (round 7) so the chunk pump can stream selector
-        results instead of falling back to one envelope.
+        first/last order by time with value-asc tiebreak at duplicate
+        timestamps (deterministic; InfluxDB leaves the tie undefined).
 
         percentile (lone + ungrouped-time) picks the NEAREST-RANK
         point (index floor(n·p/100+0.5) in value order; < 1 yields no
@@ -3725,10 +3391,10 @@ class InfluxQLEngine:
             *tkeys,
             F.expr("ts_ns div 1000000").alias("ts_ms"),
             F.col("value").alias("val"),
-        ).orderBy(*tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms"))
+        )
         # LIMIT/OFFSET (incl. per-series under GROUP BY <tag>) applies to
         # selector output points too, like every other series builder
-        sel = _apply_slice(sel, tkeys, stmt)
+        sel = _order_slice(sel, tkeys, stmt)
         colname = spec.alias or (f"{spec.agg}_{spec.name}" if len(stmt.fields) > 1 else spec.agg)
         return sel, colname
 
@@ -3770,19 +3436,12 @@ class InfluxQLEngine:
             )
         sel = picked.select(
             *tkeys, F.expr("ts_ns div 1000000").alias("ts_ms"), F.col("value").alias("val")
-        ).orderBy(*tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms"))
-        sel = _apply_slice(sel, tkeys, stmt)
+        )
+        sel = _order_slice(sel, tkeys, stmt)
         colname = spec.alias or (
             f"percentile_{spec.name}" if len(stmt.fields) > 1 else "percentile"
         )
         return sel, colname
-
-    def _distinct_series(
-        self, stmt: SelectStmt, spec: FieldSpec, ff: DataFrame, gtags, tkeys
-    ) -> list[dict]:
-        sel, colname = self._distinct_frame(stmt, spec, ff, tkeys)
-        rows = self._bounded_collect(sel)
-        return _tag_series(rows, gtags, tkeys, stmt, colname, lambda r: [r.ts_ms, r.val])
 
     def _distinct_frame(
         self, stmt: SelectStmt, spec: FieldSpec, ff: DataFrame, tkeys
@@ -3806,9 +3465,16 @@ class InfluxQLEngine:
         colname = spec.alias or (f"distinct_{spec.name}" if len(stmt.fields) > 1 else "distinct")
         return sel, colname
 
-    def _select_subquery(self, stmt: SelectStmt, store: LPStore, reg: DataFrame | None) -> list[dict]:
-        """SELECT agg(col) FROM (SELECT agg(field) FROM m ...) —
-        InfluxDB 1.2+ subqueries (absent in the reference; NEXT.md #7).
+    def _subquery_outer(
+        self, stmt: SelectStmt, store: LPStore, reg: DataFrame | None
+    ) -> _OuterLevel | None:
+        """The outer level of ``SELECT ... FROM (SELECT ...)`` —
+        InfluxDB 1.2+ subqueries (absent in the reference; NEXT.md #7):
+        the subquery's output frame with the outer WHERE applied, the
+        outer GROUP BY resolved against the subquery's grouping, and
+        the outer specs with '*' expanded to every output column.
+        Shared by the SELECT planner and ``_subquery_into``; None when
+        the subquery has no data to frame.
 
         The inner statement's bucketed frame is NEVER collected: the
         outer aggregate composes onto it as another groupBy, so the
@@ -3821,17 +3487,14 @@ class InfluxQLEngine:
             want_tags=(stmt.group_by_tags, stmt.group_by_star),
         )
         if prepared is None:
-            return []
+            return None
         inner_df, igtags, itkeys, outputs = prepared
-
         inner_df = self._filter_subquery_output(inner_df, igtags, itkeys, outputs, stmt)
-
         ogtags = igtags if stmt.group_by_star else stmt.group_by_tags
         missing = [t for t in ogtags if t not in igtags]
         if missing:
             raise InfluxQLError(f"outer GROUP BY tag(s) {missing} not grouped in the subquery")
         okeys = [itkeys[igtags.index(t)] for t in ogtags]
-
         # SELECT * over a subquery re-selects every output column
         specs = list(stmt.fields)
         if any(sp.name == "*" and sp.agg is None and sp.tx is None and sp.expr is None
@@ -3839,21 +3502,9 @@ class InfluxQLEngine:
             if len(specs) != 1:
                 raise InfluxQLError("'*' over a subquery cannot mix with other fields")
             specs = [FieldSpec(None, name) for name, _src in outputs]
-        multi = len(specs) > 1
-        colmap = dict(outputs)
-
-        series: list[dict] = []
-        for spec in specs:
-            grouped, colname = self._spec_frame_over(stmt, spec, inner_df, colmap, okeys, multi)
-            grouped = grouped.orderBy(
-                *okeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms")
-            )
-            grouped = _apply_slice(grouped, okeys, stmt)
-            rows = self._bounded_collect(grouped)
-            series.extend(
-                _tag_series(rows, ogtags, okeys, stmt, colname, lambda r: [r.ts_ms, r.val])
-            )
-        return series
+        return _OuterLevel(
+            inner_df, ogtags, okeys, specs, dict(outputs), len(ogtags) == len(igtags)
+        )
 
     def _spec_frame_over(
         self,
@@ -3899,8 +3550,6 @@ class InfluxQLEngine:
                 if lf not in aleaves:
                     aleaves.append(lf)
             if aleaves:
-                from functools import reduce
-
                 obucket = _bucket_ms(
                     stmt.group_by_time_s or 60, stmt.group_by_time_offset_s, stmt.tz,
                     src="ts_ms",
@@ -3918,11 +3567,7 @@ class InfluxQLEngine:
                             F.round(agg, 6).alias(f"_v{i}")
                         )
                     )
-                joined = (
-                    reduce(lambda a, b: a.join(b, [*tkeys, "ts_ms"], "full_outer"), frames)
-                    if len(frames) > 1
-                    else frames[0]
-                )
+                joined = _join_on_bucket(frames, tkeys)
                 idx = {lf: i for i, lf in enumerate(aleaves)}
                 val = F.round(self._arith_col(spec.expr, lambda lf: F.col(f"_v{idx[lf]}")), 6)
                 grouped = joined.select(*tkeys, "ts_ms", val.alias("val"))
@@ -4529,8 +4174,6 @@ class InfluxQLEngine:
         columns BY NAME, so `max(a), max(b)` needs aliases (loud, vs
         InfluxDB's positional max/max_1 renumbering, which an outer
         reference cannot target anyway)."""
-        from functools import reduce
-
         frames, outs = [], []
         for i, (fr, name) in enumerate(framed):
             if fr is None:
@@ -4541,7 +4184,7 @@ class InfluxQLEngine:
                 )
             frames.append(fr.withColumnRenamed("val", f"_c{i}"))
             outs.append((name, f"_c{i}"))
-        joined = reduce(lambda a, b: a.join(b, [*tkeys, "ts_ms"], "full_outer"), frames)
+        joined = _join_on_bucket(frames, tkeys)
         # the level's own LIMIT/OFFSET count MERGED rows (the round-6
         # multi-field lesson, applied to subquery levels)
         joined = self._slice_level(joined, tkeys, stmt)
@@ -4834,6 +4477,74 @@ def _apply_slice(df: DataFrame, tkeys: list[str], stmt: SelectStmt) -> DataFrame
     return df.withColumn("_rn", rn).filter(cond).drop("_rn")
 
 
+def _order_slice(df: DataFrame, tkeys: list[str], stmt: SelectStmt) -> DataFrame:
+    """Output order — series key, then time per ORDER BY — and the
+    statement's LIMIT/OFFSET."""
+    df = df.orderBy(*tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms"))
+    return _apply_slice(df, tkeys, stmt)
+
+
+def _join_on_bucket(frames: list[DataFrame], tkeys: list[str]) -> DataFrame:
+    """Full-outer-join per-field frames on (series key, bucket): a
+    bucket carrying any field appears, the others read null there."""
+    return reduce(lambda a, b: a.join(b, [*tkeys, "ts_ms"], "full_outer"), frames)
+
+
+def _bucketed(spec: FieldSpec) -> bool:
+    """Whether a SELECT expression folds each (series, bucket) into
+    one row: an aggregate that is not a point emitter, or arithmetic
+    over aggregates."""
+    if spec.expr is not None:
+        return bool(_arith_leaves(spec.expr, "agg"))
+    return spec.agg is not None and spec.agg not in (*_SEL_FNS, "distinct", "elapsed")
+
+
+def _as_is(r) -> list:
+    return [r.ts_ms, r.val]
+
+
+def _as_number(r) -> list:
+    # string-over-float (cflux.js:795): numeric strings read back as numbers
+    return [r.ts_ms, pivot_ops._maybe_float(r.val)]
+
+
+def _stream_part(plan: _Plan) -> _Part | None:
+    """The plan as ONE frame for the chunk pump, or None when its
+    parts cannot be joined. Merged rows take the LIMIT/OFFSET they
+    owe, as ``_merge_series_columns`` applies them to the envelope; a
+    multi-column part is already merged and sliced."""
+    from dataclasses import replace as _replace
+
+    owed = _replace(plan.stmt, limit=plan.limit, offset=plan.offset)
+    if len(plan.parts) == 1:
+        part = plan.parts[0]
+        if plan.merge and isinstance(part.columns, str):
+            part = part._replace(frame=_apply_slice(part.frame, plan.tkeys, owed))
+        return part
+    if not plan.parts or not all(p.keyed for p in plan.parts):
+        return None
+    joined = _join_on_bucket(
+        [p.frame.withColumnRenamed("val", f"_v{i}") for i, p in enumerate(plan.parts)],
+        plan.tkeys,
+    )
+    n = len(plan.parts)
+    return _Part(
+        _order_slice(joined, plan.tkeys, owed),
+        _dedup_names([p.columns for p in plan.parts]),
+        lambda r: [r.ts_ms, *[getattr(r, f"_v{i}") for i in range(n)]],
+        True,
+    )
+
+
+def _merge_plan(plan: _Plan, series: list[dict]) -> list[dict]:
+    """The envelope sink's merge of a multi-field plan's series."""
+    if not plan.merge:
+        return series
+    return _merge_series_columns(
+        series, plan.stmt.order_desc, plan.limit, plan.offset, slice_unmerged=True
+    )
+
+
 def _tag_series(rows, gtags, tkeys, stmt, colname, to_value) -> list[dict]:
     """Partition collected rows into one series per tag combination
     (InfluxDB GROUP BY <tag> emits a tagged series each). ``colname``
@@ -4910,8 +4621,9 @@ def _merge_series_columns(
     duplicate timestamps within a field occupy successive row slots so
     no point is lost. LIMIT/OFFSET apply to the MERGED rows (round-6
     ADVICE: InfluxDB counts merged points, not per-field points —
-    _select_series defers its per-field slice here; the subquery path
-    slices internally so only LIMIT re-caps, idempotently).
+    the planner defers a base statement's per-field slice here; a
+    subquery's parts slice per spec so only LIMIT re-caps,
+    idempotently).
 
     Every tag group expands onto the GLOBAL column grid — the ordered
     union of value columns across all groups (round 6): InfluxDB's

@@ -599,7 +599,7 @@ def q_cumulative_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_elapsed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """InfluxQL elapsed(): integer ms between consecutive points of a
-    series (plans/influxql.py _elapsed_series; no reference analog —
+    series (plans/influxql.py _elapsed_frame; no reference analog —
     cFlux delegates all point math to Kapacitor). Exact: epoch-ms longs
     subtract without float intermediates."""
     from pyspark.sql import Window
@@ -1173,7 +1173,7 @@ def q_top_per_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """InfluxQL top(f, 3) under GROUP BY time(1h): the 3 actual points
     per (series-group, bucket), keeping their own identity — a ranked
     selector, not a folded aggregate (plans/influxql.py
-    _selector_series). Ties break toward the earlier point, then
+    _selector_frame). Ties break toward the earlier point, then
     event_id, so ranks are deterministic on both engines."""
     from pyspark.sql import Window
 
@@ -1215,7 +1215,7 @@ def q_subquery_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     time(1m), type) WHERE mean_v > 0.5 GROUP BY type`` — the WHERE
     outside the subquery filters the subquery's OUTPUT rows, then the
     outer aggregate re-folds what survives (plans/influxql.py
-    _filter_subquery_output + _select_subquery; the reference has no
+    _filter_subquery_output + _subquery_outer; the reference has no
     subqueries at all — cflux.js:687-833 parses a single SELECT).
     Mechanically: inner bucketed agg shuffle -> codegen filter ->
     outer agg shuffle, one Catalyst plan, nothing collected between
@@ -4781,6 +4781,10 @@ _CLS_W_SQL = _pln_chain_sql(
     "SELECT bucket, cp, cn, tp, tn FROM hist, tot3",
     [("cp + 1", "tp + 256", "_pp"), ("cn + 1", "tn + 256", "_pn")],
 )
+# precondition: mp > 0 AND mn > 0 (the portable ln takes positive
+# integers); the engine side guards it with raise_error in
+# extensions/classifier.py; the oracle text is left unchanged so its
+# output hash stays comparable across rounds
 _CLS_PRIOR_SQL = _pln_chain_sql(
     "SELECT mp, mn, tp, tn FROM mcls, tot3",
     [("mp", "mn", "_pb"), ("1", "tp + 256", "_pmp"), ("1", "tn + 256", "_pmn")],

@@ -194,6 +194,34 @@ def test_subscription_scheme_allowlist(spark, tmp_path_factory):
         srv.shutdown()
 
 
+def test_forward_errors_bounded_and_counted(tmp_path):
+    """A dead mirror target fails on every write for the life of the
+    server: the kept messages stay bounded while the total counts
+    every failure, with no update lost across recording threads."""
+    from cflux_spark.api.http import CFluxApp
+
+    app = CFluxApp(None, str(tmp_path))  # no Spark: only the error log is used
+    n_threads, per_thread = 16, 500
+
+    def fail_many() -> None:
+        for i in range(per_thread):
+            app._forward_failed(f"http://dead.invalid: failure {i}")
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=fail_many) for _ in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert app.forward_errors_total == n_threads * per_thread
+    assert len(app.forward_errors) == CFluxApp.FORWARD_ERRORS_KEPT
+
+
 def test_chunked_query_over_the_wire(server):
     """/query?chunked=true streams newline-delimited JSON envelopes."""
     from urllib.parse import quote

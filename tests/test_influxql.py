@@ -1262,6 +1262,13 @@ def test_chunked_select_star_expands_wildcard(engine):
         "SELECT mean(user) FROM cpu GROUP BY time(60s), host",
         "SELECT mean(user), mean(sys) FROM cpu GROUP BY time(60s), host",
         "SELECT mean(user), mean(sys) FROM cpu GROUP BY time(60s) ORDER BY time DESC",
+        # single-frame shapes that stream once the planner is shared
+        # (default 1-minute mean, raw arithmetic)
+        "SELECT mean(user) FROM cpu GROUP BY host",
+        "SELECT user + sys FROM cpu",
+        "SELECT mean(user) FROM cpu",
+        # the old chunked dispatch named this column 'user'
+        "SELECT user AS u FROM cpu",
         # round 7: lone ungrouped selectors (original-timestamp point;
         # chunked falls back to one envelope — must still be equal)
         "SELECT max(user) FROM cpu",
@@ -1300,6 +1307,10 @@ def test_chunked_select_star_expands_wildcard(engine):
         "SELECT mean(mx), sum(mn) FROM (SELECT max(user) AS mx, min(user) AS mn "
         "FROM cpu GROUP BY time(60s), host) GROUP BY time(60s)",
         "SELECT * FROM (SELECT max(user), min(user) FROM cpu GROUP BY time(60s))",
+        # rows not unique per bucket once the outer drops host: the
+        # parts cannot be joined (the old chunked dispatch cross-joined)
+        "SELECT mx, mn FROM (SELECT max(user) AS mx, min(user) AS mn FROM cpu "
+        "GROUP BY time(60s), host)",
         "SELECT max FROM (SELECT max(user) FROM cpu GROUP BY time(60s)) LIMIT 1",
         # round 8: raw innermost subqueries through the same pump
         "SELECT mean(user) FROM (SELECT user FROM cpu WHERE host = 'a') "

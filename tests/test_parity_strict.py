@@ -37,7 +37,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_portable_ln_bit_identical_and_accurate(spark):
-    from cflux_spark.functions.parity import portable_ln_ratio_steps
+    from cflux_spark.functions.parity import portable_ln_ratio, portable_ln_ratio_steps
 
     random.seed(23)
     cases = [(1, 1), (1, 2), (2, 1), (3, 2), (2, 3), (1, 256), (1, 10**15),
@@ -45,6 +45,12 @@ def test_portable_ln_bit_identical_and_accurate(spark):
     cases += [(random.randint(1, 10**12), random.randint(1, 10**12))
               for _ in range(200)]
     steps, out = portable_ln_ratio_steps("a", "b")
+    # the whole-word fold equals the innermost-first textual fold of
+    # this step chain, and no step column survives it
+    folded = out
+    for name, body in reversed(steps):
+        folded = folded.replace(name, body)
+    assert portable_ln_ratio("a", "b") == folded and "_pl_" not in folded
     df = spark.createDataFrame(cases, "a long, b long")
     for name, body in steps:
         df = df.selectExpr("*", f"{body} AS {name}")
