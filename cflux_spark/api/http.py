@@ -180,8 +180,13 @@ class CFluxApp:
             # InfluxDB chunked responses: newline-delimited JSON
             # envelopes, each ≤ chunk_size rows, streamed as produced —
             # driver memory stays O(chunk_size) for raw-point SELECTs
-            chunk_size = int(params.get("chunk_size", ["10000"])[0])
-            gen = self.engine.execute_chunked(q, db=db, chunk_size=chunk_size)
+            try:
+                kw = {"chunk_size": int(params["chunk_size"][0])}
+            except (KeyError, ValueError):
+                # InfluxDB's handler keeps the default chunk size when
+                # chunk_size is absent or does not parse
+                kw = {}
+            gen = self.engine.execute_chunked(q, db=db, **kw)
             start_response("200 OK", [("Content-Type", "application/json")])
             return (json.dumps(_apply_epoch(env, epoch)).encode() + b"\n" for env in gen)
         result = _apply_epoch(self.engine.execute(q, db=db), epoch)

@@ -45,7 +45,7 @@ Grafana emits it for non-UTC dashboards).
 from __future__ import annotations
 
 import re
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
 from functools import reduce
 from itertools import islice
@@ -1393,7 +1393,9 @@ class _Part(NamedTuple):
     multi-column frame), its envelope column name(s), the row →
     ``[time, *values]`` mapper, and whether it holds at most one row
     per (series key, ts_ms) — bucket-keyed parts of one statement
-    full-outer-join into one streamable frame."""
+    full-outer-join into one streamable frame. A raw frame also
+    carries the write sink's ``ts_ns`` and typed value columns
+    (``_sample_rows``), which ``_envelope_frame`` drops."""
 
     frame: DataFrame
     columns: str | list[str]
@@ -1495,11 +1497,11 @@ class InfluxQLEngine:
         return rows
 
     def _write_samples_or_capture(self, target: LPStore, out: DataFrame) -> dict:
-        """INTO-path twin of ``_bounded_collect``'s capture branch:
-        under EXPLAIN, record the write frame's Catalyst plan and do
-        NOT mutate the store (round-10 fix — EXPLAIN of a downsample
-        statement previously executed the write, violating the
-        'executing nothing' contract)."""
+        """The write sink's twin of ``_bounded_collect``: write the
+        sample rows, or under EXPLAIN record the write frame's Catalyst
+        plan and do NOT mutate the store (round-10 fix — EXPLAIN of a
+        downsample statement previously executed the write, violating
+        the 'executing nothing' contract)."""
         cap = getattr(self._explain_local, "plans", None)
         if cap is not None:
             cap.append(_explain_string(out))
@@ -1633,9 +1635,9 @@ class InfluxQLEngine:
         if upper.startswith("DELETE"):
             return self._delete(qs, db)
         if upper.startswith("EXPLAIN"):
-            return self._explain(qs, lambda inner: self._select(inner, db))
+            return self._explain(qs, lambda inner: self._select(parse_select(inner), db))
         if upper.startswith("SELECT"):
-            return self._select(qs, db)
+            return self._select(parse_select(qs), db)
         # M11: unsupported statements return the empty envelope
         # (cflux.js:846-852) rather than erroring the client
         return _envelope([])
@@ -2075,16 +2077,17 @@ class InfluxQLEngine:
 
     def execute_chunked(self, q: str, db: str | None = None, chunk_size: int = 10_000):
         """Generator of result envelopes (InfluxDB ``chunked=true``
-        semantics) — the streaming sink of the one SELECT planner
-        (``_plan_select``). A SELECT whose plan is one frame, or
-        bucket-keyed frames that full-outer-join into one, streams
-        through ``toLocalIterator()`` in chunks of ``chunk_size`` rows:
-        driver memory is O(chunk_size) no matter how large the result,
-        and the ``max_result_rows`` guard does not apply (streaming IS
-        the unbounded-result path, done safely). The envelope sink
-        answers everything else as one ordinary envelope: non-SELECT
-        statements, INTO (its result is a written count), FROM /regex/
-        and SLIMIT/SOFFSET (they need the whole series list), and plans
+        semantics) — the streaming sink, one of the three sinks of the
+        one SELECT planner (``_plan_select``). A SELECT whose plan is
+        one frame, or bucket-keyed frames that full-outer-join into
+        one, streams through ``toLocalIterator()`` in chunks of
+        ``chunk_size`` rows: driver memory is O(chunk_size) no matter
+        how large the result, and the ``max_result_rows`` guard does
+        not apply (streaming IS the unbounded-result path, done
+        safely). Everything else is answered as one ordinary envelope:
+        non-SELECT statements, INTO by the write sink (its result is a
+        written count), and by the envelope sink FROM /regex/ and
+        SLIMIT/SOFFSET (they need the whole series list) and plans
         whose parts cannot be joined.
 
         The reference streams ClickHouse rows the same way
@@ -2108,10 +2111,11 @@ class InfluxQLEngine:
 
     def _select_chunked(self, qs: str, db: str | None, chunk_size: int):
         """Chunked sink: the plan as ONE frame through the chunk pump
-        (``_stream_part``), or one envelope from the envelope sink."""
+        (``_stream_part``), or one envelope from the envelope or write
+        sink."""
         stmt = parse_select(qs)
         if stmt.into is not None or stmt.measurement_regex is not None or stmt.slimit or stmt.soffset:
-            yield self._select(qs, db)
+            yield self._select(stmt, db)
             return
         store = self._stmt_store(stmt, db)
         plan = self._plan_select(stmt, store, store.read_registry())
@@ -2124,7 +2128,7 @@ class InfluxQLEngine:
             # EXPLAIN capture mode (round 10): record the frame's plan
             # at the point its rows would begin streaming; nothing
             # executes, nothing streams
-            cap.append(_explain_string(part.frame))
+            cap.append(_explain_string(_envelope_frame(part, plan.tkeys)))
             yield _envelope([])
             return
 
@@ -2137,7 +2141,7 @@ class InfluxQLEngine:
             return env
 
         # one-chunk lookahead, so the last chunk is identifiable
-        rows = part.frame.toLocalIterator()
+        rows = _envelope_frame(part, plan.tkeys).toLocalIterator()
         pending = None
         for chunk in iter(lambda: list(islice(rows, chunk_size)), []):
             if pending is not None:
@@ -2150,7 +2154,7 @@ class InfluxQLEngine:
         partitioned into one series per tag combination."""
         series: list[dict] = []
         for part in plan.parts:
-            rows = self._bounded_collect(part.frame)
+            rows = self._bounded_collect(_envelope_frame(part, plan.tkeys))
             series.extend(
                 _tag_series(rows, plan.gtags, plan.tkeys, plan.stmt, part.columns, part.mapper)
             )
@@ -2209,30 +2213,31 @@ class InfluxQLEngine:
             lines.extend([ln] for ln in p.rstrip().splitlines())
         return _envelope([_series("explain", ["QUERY PLAN"], lines)])
 
-    def _select(self, qs: str, db: str | None) -> dict:
-        """Envelope sink: every part of the plan is collected
-        (``_bounded_collect``), multi-field parts merge driver-side
-        onto one column grid (``_merge_series_columns``), and
-        SLIMIT/SOFFSET slice the series list."""
-        stmt = parse_select(qs)
+    def _select(self, stmt: SelectStmt, db: str | None) -> dict:
+        """Envelope and write sinks. ``FROM /regex/`` expands here into
+        one single-measurement plan per matching measurement (InfluxDB
+        emits one series set per match). With INTO the plans' rows
+        are written (``_select_into``); otherwise every part of every
+        plan is collected (``_bounded_collect``), multi-field parts
+        merge driver-side onto one column grid
+        (``_merge_series_columns``), and SLIMIT/SOFFSET slice the
+        series list."""
         store = self._stmt_store(stmt, db)
         reg = store.read_registry()
-        if stmt.into is not None:
-            return self._select_into(stmt, store, reg, db)
         subs = [stmt]
         if stmt.measurement_regex is not None:
-            # FROM /re/: the single-measurement plan per matching
-            # measurement — InfluxDB emits one series set per match
             from dataclasses import replace as _replace
 
             subs = [
                 _replace(stmt, measurement=meas, measurement_regex=None)
                 for meas in self._regex_measurements(stmt, reg)
             ]
+        plans = (self._plan_select(sub, store, reg) for sub in subs)
+        if stmt.into is not None:
+            return self._select_into(stmt, plans, store, db)
         series: list[dict] = []
         plan = None
-        for sub in subs:
-            plan = self._plan_select(sub, store, reg)
+        for plan in plans:
             series.extend(self._collect(plan))
         if plan is not None:
             # one merge over every match: the column grid is global
@@ -2342,9 +2347,10 @@ class InfluxQLEngine:
         if stmt.into == ":MEASUREMENT" and (
             stmt.into_db is None or stmt.into_db == target_db
         ):
-            # fail at registration, not first run (same guard as
-            # _select_into): a backreference into its own db would
-            # append aggregates back into the source measurement
+            # fail at registration, not first run (same guard as the
+            # write sink, _select_into, which CQ runs also use): a
+            # backreference into its own db would append aggregates
+            # back into the source measurement
             raise InfluxQLError(
                 "INTO :MEASUREMENT in a continuous query requires a distinct "
                 'target database (INTO "tgtdb"."rp".:MEASUREMENT)'
@@ -2432,198 +2438,50 @@ class InfluxQLEngine:
                         else run_stmt.time_hi_ns
                     )
                     lvl = lvl.subquery
-                reg = store.read_registry()
-                res = self._select_into(run_stmt, store, reg, cq_db)
+                res = self._select(run_stmt, cq_db)
                 out[name] = res["results"][0]["series"][0]["values"][0][1]
                 self.continuous_queries[cq_db][name] = (inner, hi)
         return out
 
     def _select_into(
-        self, stmt: SelectStmt, store: LPStore, reg: DataFrame | None, db: str | None = None
+        self, stmt: SelectStmt, plans: Iterable[_Plan], store: LPStore, db: str | None
     ) -> dict:
-        """SELECT ... INTO <m> — run the query and write its points
-        back into the store as measurement <m> (InfluxDB downsample
-        materialization; beyond the reference). The whole thing is ONE
-        distributed plan: aggregated frame → identity attach → parquet
+        """Write sink: SELECT ... INTO <m> writes each plan's result
+        rows back into the store as measurement <m> (InfluxDB
+        downsample materialization; beyond the reference), one sample
+        per non-null value (``_sample_rows``). The whole thing is ONE
+        distributed plan — result frames → identity attach → parquet
         append; nothing is collected to the driver except the written
         count. Written points are indistinguishable from ingested ones
         for every downstream query path (registry rows included), which
         is exactly how InfluxDB continuous-query output behaves.
 
-        Round 6: ``FROM /regex/`` fans out over matching measurements
-        (one write per match), and the ``:MEASUREMENT`` backreference
-        writes each source into a SAME-NAMED measurement of a distinct
-        target database (``INTO "tgt"."rp".:MEASUREMENT`` — the
-        InfluxDB bulk-downsample idiom). A backreference without a
-        distinct target db rejects loudly: with RP prefixes ignored it
+        ``FROM /regex/`` writes every match, and the ``:MEASUREMENT``
+        backreference writes each source into a SAME-NAMED measurement
+        of a distinct target database (``INTO "tgt"."rp".:MEASUREMENT``
+        — the InfluxDB bulk-downsample idiom). A backreference without
+        a distinct target db rejects loudly: with RP prefixes ignored it
         would append aggregates back into its own source measurement."""
         backref = stmt.into == ":MEASUREMENT"
-        if backref:
-            src_db = stmt.db or db or "default"
-            if stmt.into_db is None or stmt.into_db == src_db:
-                raise InfluxQLError(
-                    'INTO :MEASUREMENT requires a distinct target database '
-                    '(INTO "tgtdb"."rp".:MEASUREMENT) — without one the '
-                    "downsample would append into its own source measurement"
-                )
-        if stmt.measurement_regex is not None:
-            from dataclasses import replace as _replace
-
-            total = 0
-            for meas in self._regex_measurements(stmt, reg):
-                sub = _replace(
-                    stmt,
-                    measurement=meas,
-                    measurement_regex=None,
-                    into=(meas if backref else stmt.into),
-                )
-                env = self._select_into(sub, store, reg, db)
-                total += env["results"][0]["series"][0]["values"][0][1]
-            return _envelope([_series("result", ["time", "written"], [[0, total]])])
-        if backref:
-            from dataclasses import replace as _replace
-
-            stmt = _replace(stmt, into=stmt.measurement)
-        if stmt.subquery is not None:
-            # INTO from a subquery (late round 7; previously rejected):
-            # the outer frame over the subquery's output writes back
-            # like any downsample — still ONE distributed plan, the
-            # nesting chain composing as extra aggregation levels
-            return self._subquery_into(stmt, store, reg)
-        facts, gtags, tkeys = self._prepared_facts(stmt, store, reg)
-        if facts is None:
-            return _envelope([_series("result", ["time", "written"], [[0, 0]])])
-        # agg(*) / SELECT * INTO expands to the measurement's field
-        # keys like the envelope path (round 6)
-        self._expand_wildcard(stmt, facts)
-        if gtags:
-            tag_map = F.map_from_arrays(
-                F.array(*[F.lit(t) for t in gtags]), F.array(*[F.col(k) for k in tkeys])
+        if backref and stmt.into_db in (None, stmt.db or db or "default"):
+            raise InfluxQLError(
+                'INTO :MEASUREMENT requires a distinct target database '
+                '(INTO "tgtdb"."rp".:MEASUREMENT) — without one the '
+                "downsample would append into its own source measurement"
             )
-        else:
-            tag_map = F.from_json(F.lit("{}"), "map<string,string>")
-        frames = []
-        for spec in stmt.fields:
-            if spec.expr is not None:
-                # SELECT arithmetic INTO (round 6; rejected in round 5):
-                # the existing arith frame builders produce
-                # [*tkeys, ts_ms|ts_ns, val]; the result writes back
-                # under the alias (or the expression's display name) as
-                # the field key — InfluxDB CQ downsample-with-math shape
-                colname = spec.alias or spec.name
-                if _arith_leaves(spec.expr, "agg"):
-                    grouped = self._arith_agg_frame(stmt, spec, facts, tkeys)
-                    sel = grouped.select(
-                        *tkeys,
-                        (F.col("ts_ms") * 1_000_000).cast("long").alias("ts_ns"),
-                        F.col("val").cast("double").alias("value"),
-                        F.lit(None).cast("string").alias("message"),
-                        F.lit(colname).alias("field"),
-                    )
-                else:
-                    if stmt.group_by_time_s is not None:
-                        raise InfluxQLError(
-                            "GROUP BY time() requires aggregated SELECT expressions"
-                        )
-                    frame = self._arith_raw_frame(spec, facts, tkeys, reg, ns=True)
-                    if frame is None:
-                        raise InfluxQLError(
-                            "multi-field raw arithmetic INTO requires a series registry"
-                        )
-                    sel = frame.select(
-                        *tkeys,
-                        "ts_ns",
-                        F.col("val").cast("double").alias("value"),
-                        F.lit(None).cast("string").alias("message"),
-                        F.lit(colname).alias("field"),
-                    )
-                frames.append(
-                    sel.select(
-                        F.lit(stmt.into).alias("measurement"),
-                        tag_map.alias("tags"),
-                        "ts_ns",
-                        "field",
-                        "value",
-                        "message",
-                    )
-                )
-                continue
-            ff = facts.filter(F.col("field") == spec.name)
-            if spec.agg is None and spec.tx is None and stmt.group_by_time_s is None:
-                # raw copy — value/message carried as-is under the
-                # original field name
-                sel = ff.select(
-                    *tkeys, "ts_ns", F.col("value"), F.col("message"),
-                    F.lit(spec.name).alias("field"),
-                )
-            else:
-                base = spec.tx or spec.agg or "mean"
-                colname = _DISPLAY.get(base, base)
-                grouped = self._aggregated_frame(stmt, spec, ff, tkeys)
-                sel = grouped.select(
-                    *tkeys,
-                    (F.col("ts_ms") * 1_000_000).cast("long").alias("ts_ns"),
-                    F.col("val").cast("double").alias("value"),
-                    F.lit(None).cast("string").alias("message"),
-                    F.lit(f"{colname}_{spec.name}" if len(stmt.fields) > 1 else colname).alias("field"),
-                )
-            frames.append(
-                sel.select(
-                    F.lit(stmt.into).alias("measurement"),
-                    tag_map.alias("tags"),
-                    "ts_ns",
-                    "field",
-                    "value",
-                    "message",
-                )
-            )
-        out = frames[0]
-        for fr in frames[1:]:
-            out = out.unionByName(fr)
-        # three-part INTO prefix targets another database's store
-        # (lazily created, S5); plain INTO stays in the source store
-        target = self.store(stmt.into_db) if stmt.into_db else store
-        stats = self._write_samples_or_capture(target, out)
-        return _envelope([_series("result", ["time", "written"], [[0, stats["facts"]]])])
-
-    def _subquery_into(self, stmt: SelectStmt, store: LPStore, reg: DataFrame | None) -> dict:
-        """``SELECT ... INTO <m> FROM (SELECT ...)`` — the outer
-        specs evaluate over the subquery's output frame
-        (_spec_frame_over: aggregate / transform / arithmetic / raw
-        re-selection) and the bucketed result writes back under the
-        same field-naming rules as a base INTO."""
-        outer = self._subquery_outer(stmt, store, reg)
-        if outer is None:
-            return _envelope([_series("result", ["time", "written"], [[0, 0]])])
-        if outer.gtags:
-            tag_map = F.map_from_arrays(
-                F.array(*[F.lit(t) for t in outer.gtags]),
-                F.array(*[F.col(k) for k in outer.tkeys]),
-            )
-        else:
-            tag_map = F.from_json(F.lit("{}"), "map<string,string>")
-        multi = len(outer.specs) > 1
-        frames = []
-        for spec in outer.specs:
-            grouped, colname = self._spec_frame_over(
-                stmt, spec, outer.frame, outer.colmap, outer.tkeys, multi
-            )
-            frames.append(
-                grouped.select(
-                    F.lit(stmt.into).alias("measurement"),
-                    tag_map.alias("tags"),
-                    (F.col("ts_ms") * 1_000_000).cast("long").alias("ts_ns"),
-                    F.lit(colname).alias("field"),
-                    F.col("val").cast("double").alias("value"),
-                    F.lit(None).cast("string").alias("message"),
-                )
-            )
-        out = frames[0]
-        for fr in frames[1:]:
-            out = out.unionByName(fr)
-        target = self.store(stmt.into_db) if stmt.into_db else store
-        stats = self._write_samples_or_capture(target, out)
-        return _envelope([_series("result", ["time", "written"], [[0, stats["facts"]]])])
+        frames = [
+            f
+            for plan in plans
+            for f in _sample_rows(plan, plan.stmt.measurement if backref else stmt.into)
+        ]
+        written = 0
+        if frames:
+            # three-part INTO prefix targets another database's store
+            # (lazily created, S5); plain INTO stays in the source store
+            target = self.store(stmt.into_db) if stmt.into_db else store
+            out = reduce(DataFrame.unionByName, frames)
+            written = self._write_samples_or_capture(target, out)["facts"]
+        return _envelope([_series("result", ["time", "written"], [[0, written]])])
 
     def _prepared_facts(
         self, stmt: SelectStmt, store: LPStore, reg: DataFrame | None
@@ -2817,11 +2675,13 @@ class InfluxQLEngine:
 
     def _plan_select(self, stmt: SelectStmt, store: LPStore, reg: DataFrame | None) -> _Plan:
         """The one SELECT planner: statement → its parts, each a frame
-        already ordered and sliced, for either sink — ``_select``
-        collects them into one envelope, ``execute_chunked`` streams
-        them through the chunk pump. This is the single site that
-        classifies SELECT shapes (INTO and FROM /regex/ dispatch
-        around it; subquery specs classify in ``_spec_frame_over``).
+        already ordered and sliced, for any of three sinks — the
+        envelope sink (``_select``) collects them into one envelope,
+        the chunked sink (``execute_chunked``) streams them through the
+        chunk pump, and the write sink (``_select_into``) writes their
+        rows for INTO. This is the single site that classifies SELECT
+        shapes (``_select`` expands FROM /regex/ into one plan per
+        match; subquery specs classify in ``_spec_frame_over``).
 
         Multi-field and '*' statements merge their parts onto one
         column grid. InfluxDB counts MERGED points for LIMIT/OFFSET
@@ -2971,13 +2831,18 @@ class InfluxQLEngine:
                     )
                     colname = spec.alias or (f"{spec.tx}_{fieldname}" if len(stmt.fields) > 1 else spec.tx)
                 else:
-                    # raw points, string-over-float per cflux.js:795
+                    # raw points, string-over-float per cflux.js:795;
+                    # the exact ts_ns and typed value/message ride
+                    # along for the write sink's raw copy
                     sel = ff.select(
                         *tkeys,
                         # integer div — double division of epoch-ns longs
                         # (~1.7e18 > 2^53) can round and shift a ms
                         F.expr("ts_ns div 1000000").alias("ts_ms"),
                         F.coalesce(F.col("message"), F.col("value").cast("string")).alias("val"),
+                        "ts_ns",
+                        "value",
+                        "message",
                     )
                     colname = spec.alias or fieldname
                 parts.append(_Part(_order_slice(sel, tkeys, stmt), colname, _as_number, False))
@@ -3071,7 +2936,8 @@ class InfluxQLEngine:
         that column (InfluxDB's storage model reads back the whole
         point). GROUP BY tags re-attach from the registry by series
         key. String fields ride as strings (string-over-float,
-        cflux.js:795)."""
+        cflux.js:795); each field's typed ``_value{i}``/``_message{i}``
+        and the point's ``ts_ns`` ride along for the write sink."""
         skey = F.xxhash64(
             F.to_json(
                 F.array_sort(F.map_entries(F.coalesce(F.col("tags"), F.create_map())))
@@ -3091,6 +2957,8 @@ class InfluxQLEngine:
                     F.coalesce(F.col("message"), F.col("value").cast("string")).alias(
                         f"_v{i}"
                     ),
+                    F.col("value").alias(f"_value{i}"),
+                    F.col("message").alias(f"_message{i}"),
                 )
             )
             joined = d if joined is None else joined.join(d, ["_skey", "ts_ns"], "full_outer")
@@ -3115,22 +2983,32 @@ class InfluxQLEngine:
                 ],
             ).distinct()
             joined = joined.join(F.broadcast(tagvals), "_skey", "left")
+        typed = []
+        for i, sp in enumerate(stmt.fields):
+            # a ::tag column writes as a string field
+            value, message = (
+                (F.lit(None).cast("double"), F.col(f"_v{i}"))
+                if sp.tag
+                else (F.col(f"_value{i}"), F.col(f"_message{i}"))
+            )
+            typed += [value.alias(f"_value{i}"), message.alias(f"_message{i}")]
         sel = joined.select(
             *tkeys,
             F.expr("ts_ns div 1000000").alias("ts_ms"),
             *[F.col(f"_v{i}") for i in range(len(stmt.fields))],
+            "ts_ns",
+            *typed,
         )
         return _order_slice(sel, tkeys, stmt), _dedup_names([sp.alias or sp.name for sp in stmt.fields])
 
     def _arith_raw_frame(
-        self, spec: FieldSpec, facts: DataFrame, tkeys, reg, ns: bool = False,
-        keyed: bool = False,
+        self, spec: FieldSpec, facts: DataFrame, tkeys, reg, keyed: bool = False,
     ) -> DataFrame | None:
-        """Raw-point arithmetic frame → [*tkeys, ts_ms, val double]
-        (``ns=True`` keeps the exact epoch-ns timestamp instead — the
-        INTO writer stores full precision, round 6; ``keyed=True``
-        returns [_skey, ts_ns, *tkeys, val] so a raw multi-field
-        subquery level can align it on point identity, round 8).
+        """Raw-point arithmetic frame → [*tkeys, ts_ms, ts_ns, val
+        double] (the exact epoch-ns timestamp rides along: the write
+        sink stores full precision, round 6; ``keyed=True`` returns
+        [_skey, ts_ns, *tkeys, val] so a raw multi-field subquery level
+        can align it on point identity, round 8).
         One field (``user * 100``) is a pointwise map. Multiple fields
         (``user + sys``) align on POINT identity — rows are stored
         one-per-field and fingerprints include the field name, so the
@@ -3144,7 +3022,7 @@ class InfluxQLEngine:
         for lf in _arith_leaves(node, "field"):
             if lf[1] not in fields_used:
                 fields_used.append(lf[1])
-        tcol = F.col("ts_ns") if ns else F.expr("ts_ns div 1000000").alias("ts_ms")
+        tcols = (F.expr("ts_ns div 1000000").alias("ts_ms"), "ts_ns")
         if len(fields_used) == 1 and not keyed:
             fname = fields_used[0]
             base = facts.filter((F.col("field") == fname) & F.col("value").isNotNull())
@@ -3153,7 +3031,7 @@ class InfluxQLEngine:
             # InfluxDB binary-op semantics (round 8; previously the
             # base path emitted null rows while the subquery path
             # dropped them)
-            return base.select(*tkeys, tcol, val.alias("val")).filter(
+            return base.select(*tkeys, *tcols, val.alias("val")).filter(
                 F.col("val").isNotNull()
             )
         if reg is None:
@@ -3199,7 +3077,7 @@ class InfluxQLEngine:
             return joined.select("_skey", "ts_ns", *tkeys, val.alias("val")).filter(
                 F.col("val").isNotNull()
             )
-        return joined.select(*tkeys, tcol, val.alias("val")).filter(
+        return joined.select(*tkeys, *tcols, val.alias("val")).filter(
             F.col("val").isNotNull()
         )
 
@@ -3311,9 +3189,7 @@ class InfluxQLEngine:
                     sel = sel.filter(F.col("_v") >= 0)
             else:  # derivative / non_negative_derivative
                 unit_s = spec.tx_arg if spec.tx_arg is not None else 1.0
-                dv = v - F.lag(v).over(w)
-                dt_s = (F.col("ts_ns") - F.lag("ts_ns").over(w)) / F.lit(1e9)
-                sel = staged.withColumn("_v", F.round(dv / dt_s * F.lit(unit_s), 6)).filter(
+                sel = staged.withColumn("_v", _derivative(v, "ts_ns", w, 1e9, unit_s)).filter(
                     F.col("_v").isNotNull()
                 )
                 if spec.tx == "non_negative_derivative":
@@ -3473,8 +3349,8 @@ class InfluxQLEngine:
         the subquery's output frame with the outer WHERE applied, the
         outer GROUP BY resolved against the subquery's grouping, and
         the outer specs with '*' expanded to every output column.
-        Shared by the SELECT planner and ``_subquery_into``; None when
-        the subquery has no data to frame.
+        Used by the SELECT planner; None when the subquery has no data
+        to frame.
 
         The inner statement's bucketed frame is NEVER collected: the
         outer aggregate composes onto it as another groupBy, so the
@@ -4442,15 +4318,23 @@ class InfluxQLEngine:
                 grouped = grouped.withColumn("val", F.col("_d")).drop("_d")
             else:  # derivative / non_negative_derivative
                 unit_s = spec.tx_arg if spec.tx_arg is not None else 1.0
-                dv = F.col("val") - F.lag("val").over(wt)
-                dt_s = (F.col("ts_ms") - F.lag("ts_ms").over(wt)) / F.lit(1000.0)
-                der = F.round(dv / dt_s * F.lit(unit_s), 6)
+                der = _derivative(F.col("val"), "ts_ms", wt, 1000.0, unit_s)
                 grouped = staged.withColumn("_d", der).filter(F.col("_d").isNotNull())
                 if spec.tx == "non_negative_derivative":
                     grouped = grouped.filter(F.col("_d") >= 0)
                 grouped = grouped.withColumn("val", F.col("_d")).drop("_d")
             grouped = fin(grouped)
         return grouped
+
+
+def _derivative(v: Column, t: str, w, ticks_per_s: float, unit_s: float) -> Column:
+    """derivative over window ``w``: the change in ``v`` per ``unit_s``
+    seconds since the previous point, whose time ``t`` counts
+    ``ticks_per_s`` ticks a second. A point that does not advance time
+    emits nothing (null), as InfluxDB's derivative reducer skips it —
+    a Telegraf batch resent after a timeout stores its points twice."""
+    dt_s = (F.col(t) - F.lag(t).over(w)) / F.lit(ticks_per_s)
+    return F.round(F.try_divide(v - F.lag(v).over(w), dt_s) * F.lit(unit_s), 6)
 
 
 def _apply_slice(df: DataFrame, tkeys: list[str], stmt: SelectStmt) -> DataFrame:
@@ -4534,6 +4418,81 @@ def _stream_part(plan: _Plan) -> _Part | None:
         lambda r: [r.ts_ms, *[getattr(r, f"_v{i}") for i in range(n)]],
         True,
     )
+
+
+def _sample_rows(plan: _Plan, measurement: str) -> list[DataFrame]:
+    """The write sink's rows for one plan, shaped for
+    ``LPStore.write_samples``: one sample per non-null result value
+    (InfluxDB writes no field for a null), the output column name as
+    the field key, the GROUP BY tags as the tags, and the row's time —
+    exact ``ts_ns`` where a raw frame carries it. A raw copy's typed
+    ``value``/``message`` (``_value{i}``/``_message{i}`` beside a
+    multi-column frame's ``_v{i}``) keep the stored type; any other
+    result value is a float.
+
+    The rows come from the one frame the chunked sink streams, or
+    else from each part; a plan whose merged rows still owe LIMIT/
+    OFFSET and cannot be joined rejects rather than drop the slice.
+    Columns unpivot through a cross join with the column indexes
+    rather than a generator, so the parts' global sort is not planned
+    under the store's ``repartition("date")`` (Catalyst drops a sort
+    beneath a join, not beneath a generator or a union)."""
+    if not plan.parts:
+        return []
+    part = _stream_part(plan)
+    if part is not None:
+        parts = [part]
+    elif plan.limit or plan.offset:
+        raise InfluxQLError(
+            "SELECT ... INTO cannot apply LIMIT/OFFSET to the merged rows of "
+            "fields that do not share buckets; write each field separately"
+        )
+    else:
+        names = _dedup_names([p.columns for p in plan.parts])
+        parts = [p._replace(columns=n) for p, n in zip(plan.parts, names)]
+    if plan.gtags:
+        tags = F.map_from_arrays(
+            F.array(*[F.lit(t) for t in plan.gtags]), F.array(*[F.col(k) for k in plan.tkeys])
+        )
+    else:
+        tags = F.from_json(F.lit("{}"), "map<string,string>")
+    frames = []
+    for part in parts:
+        frame = part.frame
+        if isinstance(part.columns, str):
+            names, cols = [part.columns], [("val", "value", "message")]
+        else:
+            names = part.columns
+            cols = [(f"_v{i}", f"_value{i}", f"_message{i}") for i in range(len(names))]
+        values, messages = [], []
+        for vcol, tvalue, tmessage in cols:
+            typed = tvalue in frame.columns
+            values.append(F.col(tvalue) if typed else F.col(vcol).cast("double"))
+            messages.append(F.col(tmessage) if typed else F.lit(None).cast("string"))
+        idx = frame.sparkSession.range(len(names)).toDF("_i")
+        pick = lambda cs: F.array(*cs)[F.col("_i")]  # noqa: E731
+        ts = F.col("ts_ns") if "ts_ns" in frame.columns else F.col("ts_ms") * 1_000_000
+        frames.append(
+            frame.crossJoin(F.broadcast(idx))
+            .select(
+                F.lit(measurement).alias("measurement"),
+                tags.alias("tags"),
+                ts.cast("long").alias("ts_ns"),
+                pick([F.lit(n) for n in names]).alias("field"),
+                pick(values).alias("value"),
+                pick(messages).alias("message"),
+            )
+            .filter(F.col("value").isNotNull() | F.col("message").isNotNull())
+        )
+    return frames
+
+
+def _envelope_frame(part: _Part, tkeys: list[str]) -> DataFrame:
+    """The part's frame without the columns only the write sink reads
+    (a raw frame's ``ts_ns`` and typed ``value``/``message``): Catalyst
+    prunes them, so the envelope and chunked sinks run the plain plan."""
+    vals = ["val"] if isinstance(part.columns, str) else [f"_v{i}" for i in range(len(part.columns))]
+    return part.frame.select(*tkeys, "ts_ms", *vals)
 
 
 def _merge_plan(plan: _Plan, series: list[dict]) -> list[dict]:

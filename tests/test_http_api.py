@@ -238,6 +238,11 @@ def test_chunked_query_over_the_wire(server):
     assert envs[0]["results"][0].get("partial") is True
     vals = [v for e in envs for s in e["results"][0]["series"] for v in s["values"]]
     assert len(vals) == 2
+    # an unparsable chunk_size keeps the default (InfluxDB), not a 500
+    status, body = _get(url + f"/query?db=chunkdb&q={q}&chunked=true&chunk_size=abc")
+    assert status == 200
+    assert [len(json.loads(line)["results"][0]["series"][0]["values"])
+            for line in body.decode().strip().split("\n")] == [2]
 
 
 def test_chunked_multi_field_over_the_wire(server):

@@ -1723,6 +1723,12 @@ def test_raw_point_transforms(spark, tmp_path):
     res = eng.execute("SELECT difference(v) FROM m GROUP BY host", db="rt3")
     by_tag = {s["tags"]["host"]: [v[1] for v in s["values"]] for s in res["results"][0]["series"]}
     assert by_tag == {"a": [10.0], "b": [0.0]}
+    # a resent batch stores a point twice: the copy does not advance
+    # time, so it emits no derivative (InfluxDB) instead of dividing by 0
+    store3.write_batch(spark.createDataFrame([(lines3[1],)], "line string"))
+    res = eng.execute("SELECT derivative(v) FROM m GROUP BY host", db="rt3")
+    by_tag = {s["tags"]["host"]: [v[1] for v in s["values"]] for s in res["results"][0]["series"]}
+    assert by_tag == {"a": [1.0], "b": [0.0]}
     # moving_average still requires N
     with pytest.raises(InfluxQLError, match="moving_average"):
         eng.execute("SELECT moving_average(v) FROM m", db="rt")
@@ -3276,14 +3282,14 @@ def test_explain_chunked_captures_pump_frames(spark, tmp_path):
     store = LPStore(spark, root, db="mydb")
     store.write_batch(spark.createDataFrame([(l,) for l in LINES], "line string"))
     eng = InfluxQLEngine(spark, root)
-    # raw-point statement → streams through _select_raw_chunked
+    # raw-point statement → its one frame streams through the chunk pump
     envs = list(eng.execute_chunked("EXPLAIN SELECT user FROM cpu", db="mydb"))
     assert len(envs) == 1  # one explain envelope, not row chunks
     s = envs[0]["results"][0]["series"][0]
     assert s["columns"] == ["QUERY PLAN"]
     plan = "\n".join(v[0] for v in s["values"])
     assert "parquet" in plan.lower()
-    # multi-field aggregate → _select_agg_chunked streams ONE merged
+    # multi-field aggregate → the chunked sink streams ONE merged
     # bucket-aligned frame (per-spec frames full-outer-joined), so the
     # chunked EXPLAIN shows a single plan — unlike the unchunked path's
     # one-plan-per-field — which is exactly the fidelity the feature is
@@ -3331,3 +3337,98 @@ def test_chunked_select_into_writes(spark, tmp_path):
     envs2 = list(eng.execute_chunked("SELECT user INTO cpu_raw FROM cpu", db="mydb"))
     assert _values(envs2[0])[0][1] >= 1
     assert ["cpu_raw"] in _values(eng.execute("SHOW MEASUREMENTS", db="mydb"))
+
+
+@pytest.fixture(scope="module")
+def into_engine(spark, tmp_path_factory):
+    """An isolated store for INTO round trips: INTO adds measurements,
+    which would shift the shared fixture's cardinality counts."""
+    root = str(tmp_path_factory.mktemp("intomatch"))
+    store = LPStore(spark, root, db="mydb")
+    store.write_batch(spark.createDataFrame([(l,) for l in LINES], "line string"))
+    return InfluxQLEngine(spark, root)
+
+
+@pytest.mark.parametrize(
+    "q",
+    [
+        "SELECT mean(user) AS mu FROM cpu GROUP BY time(60s)",
+        "SELECT user AS u FROM cpu",
+        "SELECT max(user) FROM cpu",
+        "SELECT abs(user) FROM cpu",
+        "SELECT derivative(user) FROM cpu GROUP BY host",
+        "SELECT top(user, 2) FROM cpu",
+        "SELECT distinct(user) FROM cpu",
+        "SELECT elapsed(user) FROM cpu WHERE host = 'a'",
+        "SELECT mean(user), sys FROM cpu GROUP BY time(60s)",
+        "SELECT mean(user) FROM cpu GROUP BY time(60s) LIMIT 1",
+    ],
+)
+def test_into_writes_what_select_returns(into_engine, q):
+    """SELECT ... INTO writes exactly the rows the same SELECT returns
+    — field key = output column name, tags = GROUP BY tags, time = the
+    row's time — and rejects what the SELECT rejects, with the same
+    message."""
+    import zlib
+
+    dst = f"dst_{zlib.crc32(q.encode())}"
+    into = q.replace(" FROM ", f" INTO {dst} FROM ", 1)
+    try:
+        want = into_engine.execute(q, db="mydb")
+    except InfluxQLError as exc:
+        with pytest.raises(InfluxQLError) as got:
+            into_engine.execute(into, db="mydb")
+        assert str(got.value) == str(exc)
+        return
+    into_engine.execute(into, db="mydb")
+    back = into_engine.execute(f"SELECT * FROM {dst} GROUP BY *", db="mydb")
+
+    def by_series(res):
+        return {
+            tuple(sorted(s.get("tags", {}).items())): (s["columns"], sorted(s["values"]))
+            for s in res["results"][0].get("series", [])
+        }
+
+    assert by_series(want)  # the statement answers something
+    assert by_series(back) == by_series(want)
+
+
+def test_into_rejects_limit_it_cannot_apply(into_engine):
+    """Point-emitting fields do not join into one frame, so INTO cannot
+    apply the LIMIT their merged rows owe: it rejects rather than
+    write every row."""
+    with pytest.raises(InfluxQLError, match="LIMIT/OFFSET"):
+        into_engine.execute(
+            "SELECT user + sys AS t, user * 2 AS u INTO dst_limit FROM cpu LIMIT 1", db="mydb"
+        )
+
+
+def test_into_raw_copy_keeps_ns_and_type(spark, tmp_path):
+    """A raw copy and raw arithmetic INTO keep each point's exact
+    epoch-ns timestamp, and a raw copy keeps the stored type: floats
+    in ``value``, strings in ``message`` even when they read as a
+    number."""
+    root = str(tmp_path / "intotyped")
+    store = LPStore(spark, root, db="mydb")
+    lines = [
+        'm,host=a user=0.5,sys=0.25,code="1.5" 1704067200000123456',
+        "m,host=a user=0.75,sys=0.5 1704067201000654321",
+    ]
+    store.write_batch(spark.createDataFrame([(l,) for l in lines], "line string"))
+    eng = InfluxQLEngine(spark, root)
+    eng.execute("SELECT user, code INTO cp FROM m", db="mydb")
+    eng.execute("SELECT user + sys AS t INTO ca FROM m", db="mydb")
+
+    def samples(meas):
+        rows = store.read_samples().filter(f"measurement = '{meas}'").collect()
+        return sorted((r.field, r.ts_ns, r.value, r.message) for r in rows)
+
+    assert samples("cp") == [
+        ("code", 1704067200000123456, None, "1.5"),
+        ("user", 1704067200000123456, 0.5, None),
+        ("user", 1704067201000654321, 0.75, None),
+    ]
+    assert samples("ca") == [
+        ("t", 1704067200000123456, 0.75, None),
+        ("t", 1704067201000654321, 1.25, None),
+    ]
