@@ -11,82 +11,8 @@ the post-shuffle partitions.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from cflux_spark.operators.timeops import bucket_ts, minute_trunc
-
-
-def minute_avg(
-    df: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "value",
-    keys: list[str] | None = None,
-    round_to: int | None = 4,
-) -> DataFrame:
-    """A1 — ``toStartOfMinute`` bucket + avg, grouped per series keys
-    (cflux.js:749). Output columns: keys..., minute, mean."""
-    keys = keys or []
-    mean: Column = F.avg(value_col)
-    if round_to is not None:
-        mean = F.round(mean, round_to)
-    return (
-        df.groupBy(*keys, minute_trunc(ts_col).alias("minute"))
-        .agg(mean.alias("mean"))
-        .orderBy(*keys, "minute")
-    )
-
-
-def time_bucket_agg(
-    df: DataFrame,
-    seconds: int,
-    ts_col: str = "ts",
-    value_col: str = "value",
-    keys: list[str] | None = None,
-    round_to: int | None = 4,
-) -> DataFrame:
-    """A2 — parameterized GROUP BY time(N seconds): the operator the
-    reference declares but regex-strips (cflux.js:378-379)."""
-    keys = keys or []
-    mean: Column = F.avg(value_col)
-    if round_to is not None:
-        mean = F.round(mean, round_to)
-    return (
-        df.groupBy(*keys, bucket_ts(ts_col, seconds).alias("bucket"))
-        .agg(mean.alias("mean"))
-        .orderBy(*keys, "bucket")
-    )
-
-
-def agg_suite(
-    df: DataFrame,
-    value_col: str = "value",
-    keys: list[str] | None = None,
-    round_to: int = 4,
-) -> DataFrame:
-    """Extended aggregate set (InfluxQL defines these; the reference
-    implements only avg — SURVEY §2.4 'Not present' row)."""
-    keys = keys or []
-    v = F.col(value_col)
-    return (
-        df.groupBy(*keys)
-        .agg(
-            F.count(v).alias("n"),
-            F.round(F.sum(v), round_to).alias("sum_v"),
-            F.round(F.min(v), round_to).alias("min_v"),
-            F.round(F.max(v), round_to).alias("max_v"),
-            F.round(F.avg(v), round_to).alias("avg_v"),
-            F.round(F.expr(f"percentile({value_col}, 0.5)"), round_to).alias("median_v"),
-            F.round(F.stddev_samp(v), round_to).alias("stddev_v"),
-        )
-        .orderBy(*keys)
-    )
-
-
-def distinct_values(df: DataFrame, col: str, where: Column | None = None) -> DataFrame:
-    """A3 — distinct via GROUP BY (cflux.js:459,480,645)."""
-    out = df.filter(where) if where is not None else df
-    return out.select(col).distinct().orderBy(col)
 
 
 def sessionize(

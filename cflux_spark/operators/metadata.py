@@ -118,17 +118,3 @@ def show_cardinality(registry: DataFrame, what: str, measurement: str | None = N
         raise ValueError(f"unknown cardinality subject {what!r}")
     spark = df.sparkSession
     return spark.createDataFrame([(c,)], "count long")
-
-
-def show_databases(spark) -> DataFrame:
-    """M1 — catalog passthrough."""
-    return spark.sql("SHOW DATABASES")
-
-
-def show_retention_policies(db: str, spark) -> DataFrame:
-    """M7 — the reference fakes a static autogen policy
-    (cflux.js:419-448); same static row here."""
-    return spark.createDataFrame(
-        [("autogen", "0s", "168h0m0s", 1, True)],
-        "name string, duration string, shardGroupDuration string, replicaN int, `default` boolean",
-    )

@@ -27,24 +27,26 @@ Emission: EMA/DEMA/TEMA emit every point; TRIX from the 2nd;
 RSI/CMO from the (N+1)-th (they consume N differences);
 KER/KAMA from the (N+1)-th (they look back N points).
 
-Execution shape: every rolling piece (SMA, gain/loss sums, lag-N) is
-a JVM window — per-series when grouping keys exist, the segmented
-``merged_window_stage`` otherwise (no single-partition WindowExec).
-The recursions run through ``operators.recurrence.linear_recurrence``
-(segmented affine scan) with coefficients computed as JVM columns —
-Python appears only inside that operator's per-segment kernel.
+Execution shape: ``ta_transform`` stages its input once, through
+``operators.windows.merged_window_stage`` — per-series windows when
+grouping keys exist, the segmented merged series otherwise (no
+single-partition WindowExec) — which also numbers the rows ``_t``.
+Every rolling piece (lag-1 difference, gain/loss sums, |Δ| sum, lag-N)
+runs in that one stage, with carry equal to the look-back N; the
+recursions then run through ``operators.recurrence.linear_recurrence``
+(segmented affine scan) with coefficients computed as JVM columns and
+no window stage after them — Python appears only inside that
+operator's per-segment kernel. The 'simple' warmup is the cumulative
+mean (a = (t-1)/t, b = v/t for t <= N), so each EMA stage is one
+recurrence; TRIX reads EMA^3's previous value from the recurrence.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cflux_spark.operators.recurrence import (
-    DEFAULT_SEGMENT_SPAN_NS,
-    linear_recurrence,
-    merged_row_number,
-)
+from cflux_spark.operators.recurrence import DEFAULT_SEGMENT_SPAN_NS, linear_recurrence
 from cflux_spark.operators.windows import merged_window_stage
 
 TA_FNS = {
@@ -58,62 +60,38 @@ TA_FNS = {
     "kaufmans_adaptive_moving_average",
 }
 
+# the functions with input-side rolling windows; each looks back N rows
+_WINDOWED_FNS = {
+    "relative_strength_index",
+    "chande_momentum_oscillator",
+    "kaufmans_efficiency_ratio",
+    "kaufmans_adaptive_moving_average",
+}
+
 # Kaufman's fast/slow smoothing constants (the standard 2/30 pair,
 # which InfluxDB hard-codes as well)
 _KAMA_FAST = 2.0 / (2 + 1)
 _KAMA_SLOW = 2.0 / (30 + 1)
 
 
-def _rn(df: DataFrame, keys, order_col, span) -> DataFrame:
-    """1-based per-series row number as column ``_t``."""
-    if keys:
-        w = Window.partitionBy(*keys).orderBy(order_col)
-        return df.withColumn("_t", F.row_number().over(w).cast("long"))
-    return merged_row_number(df, order_col, "_t", segment_span=span)
-
-
-def _windowed(df: DataFrame, keys, order_col, carry, span, build):
-    """Apply ``build(df, window) -> df`` with a per-series window when
-    grouped, the segmented merged stage otherwise."""
-    if keys:
-        w = Window.partitionBy(*keys).orderBy(order_col)
-        return build(df, w)
-    staged, w, fin = merged_window_stage(
-        df, order_col=order_col, carry_rows=carry, segment_span=span
-    )
-    return fin(build(staged, w))
-
-
-def _ema_once(
-    df: DataFrame, keys, order_col, val_col, n: int, warmup: str, span, out_col: str
-) -> DataFrame:
+def _ema_once(df: DataFrame, rec, val_col, n: int, warmup: str, out_col: str, **kw):
     """One EMA stage over ``val_col`` (rows must already carry ``_t``)."""
-    alpha = F.lit(2.0) / (F.least(F.col("_t"), F.lit(n)) + F.lit(1.0))
+    t = F.col("_t")
     if warmup == "exponential":
+        alpha = F.lit(2.0) / (F.least(t, F.lit(n)) + F.lit(1.0))
         a = F.lit(1.0) - alpha
         b = alpha * F.col(val_col)
-        df = df.withColumn("_a", a).withColumn("_b", b)
     elif warmup == "simple":
+        # the first N points emit their running mean — the trailing
+        # N-window holds exactly the first t points while t <= N
         const_alpha = 2.0 / (n + 1)
-
-        def build(d, w):
-            sma = F.avg(val_col).over(w.rowsBetween(-(n - 1), 0))
-            return d.withColumn("_sma", sma)
-
-        df = _windowed(df, keys, order_col, n - 1, span, build)
-        warm = F.col("_t") <= n
-        df = (
-            df.withColumn("_a", F.when(warm, 0.0).otherwise(1.0 - const_alpha))
-            .withColumn(
-                "_b", F.when(warm, F.col("_sma")).otherwise(F.lit(const_alpha) * F.col(val_col))
-            )
-            .drop("_sma")
-        )
+        warm = t <= n
+        a = F.when(warm, (t - 1) / t).otherwise(1.0 - const_alpha)
+        b = F.when(warm, F.col(val_col) / t).otherwise(F.lit(const_alpha) * F.col(val_col))
     else:
         raise ValueError(f"unsupported warmup type: {warmup!r} (exponential|simple)")
-    return linear_recurrence(
-        df, keys, order_col, "_a", "_b", out_col, segment_span=span
-    ).drop("_a", "_b")
+    df = df.withColumn("_a", a).withColumn("_b", b)
+    return rec(df, "_a", "_b", out_col, **kw).drop("_a", "_b")
 
 
 def ta_transform(
@@ -135,145 +113,105 @@ def ta_transform(
     if n < 1:
         raise ValueError(f"{fn} period must be >= 1, got {n}")
     df = df.filter(F.col(val_col).isNotNull())
-    df = _rn(df, keys, order_col, segment_span)
+    windowed = fn in _WINDOWED_FNS
+    staged, w, fin = merged_window_stage(
+        df, order_col, n if windowed else 0, segment_span, keys=keys
+    )
     v = F.col(val_col)
+    t = F.col("_t")
 
-    if fn == "exponential_moving_average":
-        out = _ema_once(df, keys, order_col, val_col, n, warmup, segment_span, out_col)
-    elif fn in (
-        "double_exponential_moving_average",
-        "triple_exponential_moving_average",
-        "triple_exponential_derivative",
-    ):
-        e1 = _ema_once(df, keys, order_col, val_col, n, warmup, segment_span, "_e1")
-        e2 = _ema_once(e1, keys, order_col, "_e1", n, warmup, segment_span, "_e2")
+    def rec(d, a_col, b_col, o_col, **kw):
+        return linear_recurrence(
+            d, keys, order_col, a_col, b_col, o_col, segment_span=segment_span, **kw
+        )
+
+    if not windowed:  # the EMA family: recurrences only
+        df = fin(staged)
+        if fn == "exponential_moving_average":
+            return _ema_once(df, rec, val_col, n, warmup, out_col).drop("_t")
+        e1 = _ema_once(df, rec, val_col, n, warmup, "_e1")
+        e2 = _ema_once(e1, rec, "_e1", n, warmup, "_e2")
         if fn == "double_exponential_moving_average":
-            out = e2.withColumn(
-                out_col, F.lit(2.0) * F.col("_e1") - F.col("_e2")
-            ).drop("_e1", "_e2")
-        else:
-            e3 = _ema_once(e2, keys, order_col, "_e2", n, warmup, segment_span, "_e3")
-            if fn == "triple_exponential_moving_average":
-                out = e3.withColumn(
-                    out_col,
-                    F.lit(3.0) * F.col("_e1")
-                    - F.lit(3.0) * F.col("_e2")
-                    + F.col("_e3"),
-                ).drop("_e1", "_e2", "_e3")
-            else:  # TRIX: 1-point percent change of the triple-smoothed EMA
-
-                def build(d, w):
-                    prev = F.lag("_e3").over(w)
-                    return d.withColumn(
-                        out_col,
-                        F.when(prev != 0, (F.col("_e3") / prev - 1.0) * 100.0),
-                    )
-
-                out = _windowed(e3, keys, order_col, 1, segment_span, build)
-                out = out.filter(F.col("_t") >= 2).filter(
-                    F.col(out_col).isNotNull()
-                ).drop("_e1", "_e2", "_e3")
-    elif fn in ("relative_strength_index", "chande_momentum_oscillator"):
-        # both consume the difference series; index u = _t - 1 on it
-        def build(d, w):
-            return d.withColumn("_d", v - F.lag(val_col).over(w))
-
-        diffs = _windowed(df, keys, order_col, 1, segment_span, build).filter(
-            F.col("_d").isNotNull()
-        )
-        diffs = (
-            diffs.withColumn("_u", F.col("_t") - 1)
-            .withColumn("_g", F.greatest(F.col("_d"), F.lit(0.0)))
-            .withColumn("_lo", F.greatest(-F.col("_d"), F.lit(0.0)))
-        )
-        if fn == "chande_momentum_oscillator":
-
-            def build2(d, w):
-                wr = w.rowsBetween(-(n - 1), 0)
-                return d.withColumn("_sg", F.sum("_g").over(wr)).withColumn(
-                    "_sl", F.sum("_lo").over(wr)
-                )
-
-            out = _windowed(diffs, keys, order_col, n - 1, segment_span, build2)
-            denom = F.col("_sg") + F.col("_sl")
+            out = e2.withColumn(out_col, F.lit(2.0) * F.col("_e1") - F.col("_e2"))
+        elif fn == "triple_exponential_moving_average":
+            e3 = _ema_once(e2, rec, "_e2", n, warmup, "_e3")
+            out = e3.withColumn(
+                out_col,
+                F.lit(3.0) * F.col("_e1") - F.lit(3.0) * F.col("_e2") + F.col("_e3"),
+            )
+        else:  # TRIX: 1-point percent change of the triple-smoothed EMA
+            e3 = _ema_once(e2, rec, "_e2", n, warmup, "_e3", prev_col="_e3p")
+            prev = F.col("_e3p")
             out = (
-                out.filter(F.col("_u") >= n)
-                .withColumn(
-                    out_col,
-                    F.when(denom == 0, 0.0).otherwise(
-                        100.0 * (F.col("_sg") - F.col("_sl")) / denom
-                    ),
-                )
-                .drop("_d", "_u", "_g", "_lo", "_sg", "_sl")
+                e3.withColumn(out_col, F.when(prev != 0, (F.col("_e3") / prev - 1.0) * 100.0))
+                .filter(t >= 2)
+                .filter(F.col(out_col).isNotNull())
+            )
+        return out.drop("_t", "_e1", "_e2", "_e3", "_e3p")
+
+    if fn in ("relative_strength_index", "chande_momentum_oscillator"):
+        # both consume the difference series; index u = _t - 1 on it.
+        # The rolling window runs over the unfiltered rows: the first
+        # row's null difference is skipped by avg/sum.
+        d = F.col("_d")
+        wr = w.rowsBetween(-(n - 1), 0)
+        agg = F.sum if fn == "chande_momentum_oscillator" else F.avg
+        staged = (
+            staged.withColumn("_d", v - F.lag(val_col).over(w))
+            .withColumn("_g", F.when(d.isNotNull(), F.greatest(d, F.lit(0.0))))
+            .withColumn("_lo", F.when(d.isNotNull(), F.greatest(-d, F.lit(0.0))))
+            .withColumn("_sg", agg("_g").over(wr))
+            .withColumn("_sl", agg("_lo").over(wr))
+        )
+        diffs = fin(staged).filter(d.isNotNull()).withColumn("_u", t - 1)
+        if fn == "chande_momentum_oscillator":
+            denom = F.col("_sg") + F.col("_sl")
+            out = diffs.filter(F.col("_u") >= n).withColumn(
+                out_col,
+                F.when(denom == 0, 0.0).otherwise(
+                    100.0 * (F.col("_sg") - F.col("_sl")) / denom
+                ),
             )
         else:  # RSI — Wilder smoothing seeded with the first-N simple mean
-
-            def build2(d, w):
-                wr = w.rowsBetween(-(n - 1), 0)
-                return d.withColumn("_mg", F.avg("_g").over(wr)).withColumn(
-                    "_ml", F.avg("_lo").over(wr)
-                )
-
-            staged = _windowed(diffs, keys, order_col, n - 1, segment_span, build2)
             warm = F.col("_u") <= n
-            wilder_a = F.when(warm, 0.0).otherwise((n - 1) / float(n))
-            staged = (
-                staged.withColumn("_ag", wilder_a)
-                .withColumn("_bg", F.when(warm, F.col("_mg")).otherwise(F.col("_g") / n))
-                .withColumn("_bl", F.when(warm, F.col("_ml")).otherwise(F.col("_lo") / n))
-            )
-            r1 = linear_recurrence(
-                staged, keys, order_col, "_ag", "_bg", "_avg", segment_span=segment_span
-            )
-            r2 = linear_recurrence(
-                r1, keys, order_col, "_ag", "_bl", "_avl", segment_span=segment_span
+            diffs = (
+                diffs.withColumn("_ag", F.when(warm, 0.0).otherwise((n - 1) / float(n)))
+                .withColumn("_bg", F.when(warm, F.col("_sg")).otherwise(F.col("_g") / n))
+                .withColumn("_bl", F.when(warm, F.col("_sl")).otherwise(F.col("_lo") / n))
             )
             out = (
-                r2.filter(F.col("_u") >= n)
+                rec(diffs, "_ag", ["_bg", "_bl"], ["_avg", "_avl"])
+                .filter(F.col("_u") >= n)
                 .withColumn(
                     out_col,
                     F.when(F.col("_avl") == 0, 100.0).otherwise(
                         100.0 - 100.0 / (1.0 + F.col("_avg") / F.col("_avl"))
                     ),
                 )
-                .drop(
-                    "_d", "_u", "_g", "_lo", "_mg", "_ml", "_ag", "_bg", "_bl",
-                    "_avg", "_avl",
-                )
             )
-    else:  # kaufmans_efficiency_ratio / kaufmans_adaptive_moving_average
+        return out.drop(
+            "_t", "_d", "_u", "_g", "_lo", "_sg", "_sl", "_ag", "_bg", "_bl", "_avg", "_avl"
+        )
 
-        def build(d, w):
-            dabs = F.abs(v - F.lag(val_col).over(w))
-            d = d.withColumn("_dabs", dabs)
-            vol = F.sum("_dabs").over(w.rowsBetween(-(n - 1), 0))
-            direction = F.abs(v - F.lag(val_col, n).over(w))
-            return d.withColumn("_vol", vol).withColumn("_dir", direction)
-
-        staged = _windowed(df, keys, order_col, n, segment_span, build)
-        er = F.when(F.col("_vol") == 0, 0.0).otherwise(F.col("_dir") / F.col("_vol"))
-        staged = staged.withColumn("_er", er)
-        if fn == "kaufmans_efficiency_ratio":
-            out = (
-                staged.filter(F.col("_t") >= n + 1)
-                .withColumn(out_col, F.col("_er"))
-                .drop("_dabs", "_vol", "_dir", "_er")
-            )
-        else:
-            # explicit product, not F.pow(x, 2): libm pow is only
-            # 1-ulp-accurate and differs between JVM and C runtimes;
-            # x*x is one IEEE rounding everywhere, so the DuckDB
-            # oracle (q_ta_kama) reproduces sc bit-for-bit
-            sc_base = F.col("_er") * F.lit(_KAMA_FAST - _KAMA_SLOW) + F.lit(_KAMA_SLOW)
-            sc = sc_base * sc_base
-            seedrow = F.col("_t") <= n + 1
-            staged = staged.withColumn(
-                "_a", F.when(seedrow, 0.0).otherwise(1.0 - sc)
-            ).withColumn("_b", F.when(seedrow, v).otherwise(sc * v))
-            rec = linear_recurrence(
-                staged, keys, order_col, "_a", "_b", out_col, segment_span=segment_span
-            )
-            out = rec.filter(F.col("_t") >= n + 1).drop(
-                "_dabs", "_vol", "_dir", "_er", "_a", "_b"
-            )
-    return out.drop("_t")
+    # kaufmans_efficiency_ratio / kaufmans_adaptive_moving_average
+    staged = staged.withColumn("_dabs", F.abs(v - F.lag(val_col).over(w)))
+    staged = staged.withColumn(
+        "_vol", F.sum("_dabs").over(w.rowsBetween(-(n - 1), 0))
+    ).withColumn("_dir", F.abs(v - F.lag(val_col, n).over(w)))
+    er = F.when(F.col("_vol") == 0, 0.0).otherwise(F.col("_dir") / F.col("_vol"))
+    df = fin(staged).withColumn("_er", er)
+    if fn == "kaufmans_efficiency_ratio":
+        out = df.filter(t >= n + 1).withColumn(out_col, F.col("_er"))
+    else:
+        # explicit product, not F.pow(x, 2): libm pow is only
+        # 1-ulp-accurate and differs between JVM and C runtimes;
+        # x*x is one IEEE rounding everywhere, so the DuckDB
+        # oracle (q_ta_kama) reproduces sc bit-for-bit
+        sc_base = F.col("_er") * F.lit(_KAMA_FAST - _KAMA_SLOW) + F.lit(_KAMA_SLOW)
+        sc = sc_base * sc_base
+        seedrow = t <= n + 1
+        df = df.withColumn("_a", F.when(seedrow, 0.0).otherwise(1.0 - sc)).withColumn(
+            "_b", F.when(seedrow, v).otherwise(sc * v)
+        )
+        out = rec(df, "_a", "_b", out_col).filter(t >= n + 1)
+    return out.drop("_t", "_dabs", "_vol", "_dir", "_er", "_a", "_b")

@@ -48,14 +48,6 @@ def filter_time_absolute(
     return df.filter((F.col(ts_col) > lo) & (F.col(ts_col) < hi))
 
 
-def filter_time_iso(df: DataFrame, ts_col: str, lo_iso: str, hi_iso: str) -> DataFrame:
-    """ISO-string bounds (F3). No 5-minute floor (reference bug,
-    cflux.js:32-34, not copied)."""
-    return df.filter(
-        (F.col(ts_col) > F.to_timestamp(F.lit(lo_iso))) & (F.col(ts_col) < F.to_timestamp(F.lit(hi_iso)))
-    )
-
-
 def filter_time_relative_to(df: DataFrame, ts_col: str, anchor: Column, seconds: int) -> DataFrame:
     """``time > anchor - Ns`` (F1). The reference anchors at now();
     for reproducible tests the anchor is injectable (e.g. max(ts))."""
@@ -64,11 +56,6 @@ def filter_time_relative_to(df: DataFrame, ts_col: str, anchor: Column, seconds:
 
 def filter_time_relative_now(df: DataFrame, ts_col: str, seconds: int) -> DataFrame:
     return filter_time_relative_to(df, ts_col, F.current_timestamp(), seconds)
-
-
-def default_time_window(df: DataFrame, ts_col: str, seconds: int = 300) -> DataFrame:
-    """Missing/unparsable range → last `seconds` (F4, cflux.js:719-726)."""
-    return filter_time_relative_now(df, ts_col, seconds)
 
 
 def bucket_start(ts_col: str | Column, seconds: int) -> Column:

@@ -84,101 +84,100 @@ def merged_window_stage(
     order_col: str = "ts_ns",
     carry_rows: int = 1,
     segment_span: int = 3600 * 1_000_000_000,
+    keys: list[str] | None = None,
 ):
-    """Stage an UNGROUPED row-frame window (`partitionBy()` over the
-    whole frame) without a single-partition WindowExec.
+    """Stage a row-frame window per series, numbering each row ``_t``
+    (1-based, in ``order_col`` order) — the one place that chooses
+    between a grouped and a merged window.
 
-    An ungrouped InfluxQL transform (``SELECT difference(v) FROM m``
-    with no GROUP BY) is semantically one merged series — but
-    ``Window.partitionBy(F.lit(1))`` moves EVERY row to one task, the
-    exact skew `series_difference_segmented` exists to avoid. Same
-    two-phase trick, generalized to any row window that reaches back at
-    most ``carry_rows`` rows:
+    With ``keys``, the window is ``partitionBy(*keys)`` and the frame is
+    only numbered. Without them the frame is ONE merged series (InfluxQL
+    ``SELECT difference(v) FROM m`` with no GROUP BY), but
+    ``Window.partitionBy(F.lit(1))`` would move EVERY row to one task,
+    the skew `series_difference_segmented` exists to avoid. The merged
+    stage reads ``df`` twice — once for per-segment counts, once for
+    the rows — for any window that reaches back at most ``carry_rows``
+    rows:
 
       1. rows bucket into fixed ``segment_span`` slices of
-         ``order_col``; slices are DENSE-ranked (a tiny
-         distinct-segments frame — the only global window left runs on
-         ~rows/segment_span rows, thousands at most, not the fact set);
-      2. the last ``carry_rows`` rows of each segment are cloned into
-         the NEXT dense segment flagged ``_carry`` — dense ranking
-         makes "next" the next NON-EMPTY segment, so sparse data
-         carries correctly across empty slices;
-      3. the caller's lag/rowsBetween window runs partitioned by the
-         dense segment; carry rows supply the cross-boundary history
-         and are dropped by ``finalize``.
+         ``order_col``. Windows over the tiny one-row-per-segment
+         count frame give each non-empty slice its DENSE id, the
+         number of rows ``_before`` it, and the ``_before`` of the
+         next ``carry_rows`` non-empty slices;
+      2. the rows join that frame as a broadcast, and each row's
+         global number is ``_t = _before + row_number()`` within its
+         slice;
+      3. each row explodes into itself plus one ``_carry`` clone for
+         every following slice whose first row still reaches back to
+         it (``_before_d - _t < carry_rows``). Dense ids make "next"
+         the next NON-EMPTY slice and let history reach through
+         slices thinner than ``carry_rows``;
+      4. the caller's lag/rowsBetween window runs partitioned by the
+         dense slice; carry rows supply the cross-boundary history.
 
     Returns ``(staged, window, finalize)``: run window expressions over
     ``staged`` with ``window``, then ``finalize(result)`` to drop carry
-    rows and helper columns. Exact for lag(n<=carry_rows) and
-    ``rowsBetween(-carry_rows, 0)`` frames; NOT for unbounded frames —
-    use :func:`merged_running_sum` for those.
+    rows and helper columns (``_t`` stays). Exact for
+    lag(n<=carry_rows) and ``rowsBetween(-carry_rows, 0)`` frames; NOT
+    for unbounded frames — use :func:`merged_running_sum` for those.
     """
     if carry_rows < 0:
         raise ValueError(f"carry_rows must be >= 0, got {carry_rows}")
+    if keys:
+        w = Window.partitionBy(*keys).orderBy(order_col)
+        return df.withColumn("_t", F.row_number().over(w).cast("long")), w, lambda d: d
     seg = F.floor(F.col(order_col) / F.lit(segment_span)).cast("long")
-    segs = df.select(seg.alias("_seg")).distinct()
+    base = df.withColumn("_seg", seg)
     # tiny frame: one row per non-empty segment. The single-group
     # partition key must be NON-FOLDABLE (pmod(_seg, 1) ≡ 0) — the
     # optimizer strips a literal from the spec and WindowExec would
     # then log its no-partition warning, which must stay meaningful
     # for REAL unbounded windows (VERDICT r4 'what's wrong' #3)
     w0 = Window.partitionBy(F.pmod(F.col("_seg"), F.lit(1))).orderBy("_seg")
-    dense = segs.withColumn("_dseg", F.row_number().over(w0))
-    base = (
-        df.withColumn("_seg", seg)
-        .join(F.broadcast(dense), "_seg")
-        .withColumn("_carry", F.lit(False))
+    segs = (
+        base.groupBy("_seg")
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .select(
+            "_seg",
+            F.row_number().over(w0).alias("_dseg"),
+            (F.sum("_n").over(w0.rowsBetween(Window.unboundedPreceding, 0)) - F.col("_n"))
+            .alias("_before"),
+        )
     )
     if carry_rows:
-        # A segment THINNER than carry_rows can't satisfy its
-        # successor's history alone — carries must reach through it.
-        # Per-segment prefix counts (tiny frame) decide, for each
-        # (source, destination) segment pair, how many of the source's
-        # trailing rows the destination still needs: source k feeds
-        # destination d iff fewer than carry_rows rows lie strictly
-        # between them, taking its last carry_rows - gap rows. Each
-        # destination touches at most carry_rows + 1 sources (every
-        # non-empty segment holds >= 1 row), so the pair frame stays
-        # tiny and the row-side fan-out is bounded by carry_rows
-        # clones per destination.
-        wlast = Window.partitionBy("_dseg").orderBy(F.col(order_col).desc())
-        ranked = base.withColumn("_rnd", F.row_number().over(wlast))
-        counts = ranked.groupBy("_dseg").agg(F.count(F.lit(1)).alias("_n"))
-        wc = Window.partitionBy(F.pmod(F.col("_dseg"), F.lit(1))).orderBy(
-            "_dseg"
-        ).rowsBetween(Window.unboundedPreceding, 0)
-        cum = counts.withColumn("_cum", F.sum("_n").over(wc))
-        src = cum.select(F.col("_dseg").alias("_srcseg"), F.col("_cum").alias("_srccum"))
-        dst = cum.select(
-            F.col("_dseg").alias("_dstseg"), (F.col("_cum") - F.col("_n")).alias("_before")
+        segs = segs.withColumn(
+            "_next", F.collect_list("_before").over(w0.rowsBetween(1, carry_rows))
         )
-        pairs = (
-            src.join(
-                dst,
-                (F.col("_dstseg") > F.col("_srcseg"))
-                & (F.col("_before") - F.col("_srccum") < carry_rows),
-            )
-            .select(
-                "_srcseg",
-                "_dstseg",
-                (F.lit(carry_rows) - (F.col("_before") - F.col("_srccum"))).alias("_take"),
-            )
+    numbered = base.join(F.broadcast(segs), "_seg").withColumn(
+        "_t",
+        F.col("_before") + F.row_number().over(Window.partitionBy("_dseg").orderBy(order_col)),
+    )
+    dests = F.array("_dseg")
+    if carry_rows:
+        # the k-th following segment has dense id _dseg + k + 1; a
+        # clone goes to each one whose first row still reaches back
+        # to this row
+        dests = F.concat(
+            dests,
+            F.filter(
+                F.transform(
+                    "_next",
+                    lambda before, k: F.when(
+                        before - F.col("_t") < carry_rows, F.col("_dseg") + k + 1
+                    ),
+                ),
+                lambda d: d.isNotNull(),
+            ),
         )
-        carries = (
-            ranked.withColumnRenamed("_dseg", "_srcseg")
-            .join(F.broadcast(pairs), "_srcseg")
-            .filter(F.col("_rnd") <= F.col("_take"))
-            .withColumnRenamed("_dstseg", "_dseg")
-            .withColumn("_carry", F.lit(True))
-            .drop("_srcseg", "_rnd", "_take")
-        )
-        staged = base.unionByName(carries)
-    else:
-        staged = base
+    staged = (
+        numbered.select(*df.columns, "_t", F.posexplode(dests).alias("_pos", "_dseg"))
+        .withColumn("_carry", F.col("_pos") > 0)
+        .drop("_pos")
+    )
     w_in = Window.partitionBy("_dseg").orderBy(order_col)
 
     def finalize(d: DataFrame) -> DataFrame:
-        return d.filter(~F.col("_carry")).drop("_seg", "_dseg", "_carry")
+        return d.filter(~F.col("_carry")).drop("_dseg", "_carry")
 
     return staged, w_in, finalize
 
@@ -355,23 +354,3 @@ def cumulative_sum(
     if round_to is not None:
         cs = F.round(cs, round_to)
     return df.withColumn("cumsum", cs)
-
-
-def series_rate(
-    df: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "ts",
-    value_col: str = "value",
-    order_tiebreak: list[str] | None = None,
-    round_to: int | None = 4,
-) -> DataFrame:
-    """Per-second rate: difference / seconds-elapsed (InfluxQL
-    derivative(); natural companion of series_difference)."""
-    order = [F.col(ts_col)] + [F.col(c) for c in (order_tiebreak or [])]
-    w = Window.partitionBy(*key_cols).orderBy(*order)
-    dv = F.col(value_col) - F.lag(value_col).over(w)
-    dt = F.unix_timestamp(ts_col).cast("double") - F.unix_timestamp(F.lag(ts_col).over(w)).cast("double")
-    rate = F.when(dt > 0, dv / dt)
-    if round_to is not None:
-        rate = F.round(rate, round_to)
-    return df.withColumn("rate", rate)

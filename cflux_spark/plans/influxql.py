@@ -2557,15 +2557,7 @@ class InfluxQLEngine:
         if stmt.field_filters or stmt.field_or_groups:
             key = ["fingerprint", "ts_ns"]
             if reg is not None:
-                skey = F.xxhash64(
-                    F.to_json(
-                        F.array_sort(
-                            F.map_entries(F.coalesce(F.col("tags"), F.create_map()))
-                        )
-                    )
-                )
-                fp2s = reg.select("fingerprint", skey.alias("_skey")).distinct()
-                facts = facts.join(F.broadcast(fp2s), "fingerprint", "left")
+                facts = facts.join(F.broadcast(_fp2s(reg)), "fingerprint", "left")
                 key = ["_skey", "ts_ns"]
             def _point_pred(fname, fop, fval):
                 if isinstance(fval, bool):
@@ -2938,12 +2930,8 @@ class InfluxQLEngine:
         key. String fields ride as strings (string-over-float,
         cflux.js:795); each field's typed ``_value{i}``/``_message{i}``
         and the point's ``ts_ns`` ride along for the write sink."""
-        skey = F.xxhash64(
-            F.to_json(
-                F.array_sort(F.map_entries(F.coalesce(F.col("tags"), F.create_map())))
-            )
-        )
-        fp2s = reg.select("fingerprint", skey.alias("_skey")).distinct()
+        skey = _series_key()
+        fp2s = _fp2s(reg)
         joined = None
         for i, spec in enumerate(stmt.fields):
             if spec.tag:
@@ -3036,28 +3024,7 @@ class InfluxQLEngine:
             )
         if reg is None:
             return None
-        if len(fields_used) == 1:
-            skey1 = F.xxhash64(
-                F.to_json(
-                    F.array_sort(
-                        F.map_entries(F.coalesce(F.col("tags"), F.create_map()))
-                    )
-                )
-            )
-            fp2s1 = reg.select("fingerprint", skey1.alias("_skey")).distinct()
-            base = facts.filter(
-                (F.col("field") == fields_used[0]) & F.col("value").isNotNull()
-            ).join(F.broadcast(fp2s1), "fingerprint")
-            val = F.round(self._arith_col(node, lambda lf: F.col("value")), 6)
-            return base.select("_skey", "ts_ns", *tkeys, val.alias("val")).filter(
-                F.col("val").isNotNull()
-            )
-        skey = F.xxhash64(
-            F.to_json(
-                F.array_sort(F.map_entries(F.coalesce(F.col("tags"), F.create_map())))
-            )
-        )
-        fp2s = reg.select("fingerprint", skey.alias("_skey")).distinct()
+        fp2s = _fp2s(reg)
         joined = None
         for i, fname in enumerate(fields_used):
             d = (
@@ -3088,18 +3055,12 @@ class InfluxQLEngine:
         of a series, emitted at the later point's timestamp (InfluxDB
         semantics; default unit 1ns). A raw-point transform, not an
         aggregate: per-series window over ts_ns."""
-        from pyspark.sql import Window as _W
+        from cflux_spark.operators.windows import merged_window_stage
 
         unit_ns = max(1, int(round((spec.agg_arg or 1e-9) * 1e9)))
-        if tkeys:
-            w = _W.partitionBy(*tkeys).orderBy("ts_ns")
-            staged, fin = ff, (lambda d: d)
-        else:
-            # ungrouped = one merged series; segmented two-phase lag
-            # instead of a single-partition window (VERDICT r4 weak #2)
-            from cflux_spark.operators.windows import merged_window_stage
-
-            staged, w, fin = merged_window_stage(ff)
+        # ungrouped = one merged series; segmented lag instead of a
+        # single-partition window (VERDICT r4 weak #2)
+        staged, w, fin = merged_window_stage(ff, keys=tkeys)
         sel = (
             fin(staged.withColumn("_dt", F.col("ts_ns") - F.lag("ts_ns").over(w)))
             .filter(F.col("_dt").isNotNull())
@@ -3160,15 +3121,11 @@ class InfluxQLEngine:
                 n = int(spec.tx_arg or 2)
                 if n < 1:
                     raise InfluxQLError(f"moving_average window must be >= 1, got {n}")
-            if tkeys:
-                w = _W.partitionBy(*tkeys).orderBy("ts_ns")
-                staged, fin = base, (lambda d: d)
-            else:
-                # ungrouped: the row frame reaches back n-1 rows
-                # (moving_average) or 1 (lag transforms) — segmented
-                # carry preserves exact merged-series semantics
-                n_carry = (int(spec.tx_arg or 2) - 1) if spec.tx == "moving_average" else 1
-                staged, w, fin = merged_window_stage(base, carry_rows=max(0, n_carry))
+            # the row frame reaches back n-1 rows (moving_average) or
+            # 1 (lag transforms) — an ungrouped frame's segmented carry
+            # preserves exact merged-series semantics
+            carry = (n - 1) if spec.tx == "moving_average" else 1
+            staged, w, fin = merged_window_stage(base, carry_rows=carry, keys=tkeys)
             if spec.tx == "cumulative_sum":
                 sel = staged.withColumn(
                     "_v", F.round(F.sum(v).over(w.rowsBetween(_W.unboundedPreceding, 0)), 6)
@@ -3622,15 +3579,11 @@ class InfluxQLEngine:
             if stmt.group_by_time_s is not None:
                 raise InfluxQLError("elapsed() does not support GROUP BY time()")
             unit_ns = max(1, int(round((spec.agg_arg or 1e-9) * 1e9)))
-            if tkeys:
-                w = _W.partitionBy(*tkeys).orderBy("ts_ms")
-                staged, fin = base, (lambda d: d)
-            else:
-                from cflux_spark.operators.windows import merged_window_stage
+            from cflux_spark.operators.windows import merged_window_stage
 
-                staged, w, fin = merged_window_stage(
-                    base, order_col="ts_ms", carry_rows=1, segment_span=3600 * 1000
-                )
+            staged, w, fin = merged_window_stage(
+                base, order_col="ts_ms", carry_rows=1, segment_span=3600 * 1000, keys=tkeys
+            )
             grouped = (
                 fin(
                     staged.withColumn(
@@ -3999,13 +3952,7 @@ class InfluxQLEngine:
 
         if reg is None:
             return None
-        skey = F.xxhash64(
-            F.to_json(
-                F.array_sort(F.map_entries(F.coalesce(F.col("tags"), F.create_map())))
-            )
-        )
-        fp2s = reg.select("fingerprint", skey.alias("_skey")).distinct()
-        base = facts.join(F.broadcast(fp2s), "fingerprint")
+        base = facts.join(F.broadcast(_fp2s(reg)), "fingerprint")
         joined = None
         n = len(stmt.fields)
         for i, sp in enumerate(stmt.fields):
@@ -4181,18 +4128,12 @@ class InfluxQLEngine:
             # is assigned to the bucket of its LATER point (no
             # boundary clipping — documented simplification; InfluxDB
             # splits trapezoids at bucket edges).
-            from pyspark.sql import Window as _W
+            from cflux_spark.operators.windows import merged_window_stage
 
             unit_s = spec.agg_arg or 1.0
-            if tkeys:
-                w = _W.partitionBy(*tkeys).orderBy("ts_ns")
-                staged, fin = ff, (lambda d: d)
-            else:
-                # ungrouped: segmented lag instead of a single-partition
-                # window over all raw points (VERDICT r4 weak #2)
-                from cflux_spark.operators.windows import merged_window_stage
-
-                staged, w, fin = merged_window_stage(ff)
+            # ungrouped: segmented lag instead of a single-partition
+            # window over all raw points (VERDICT r4 weak #2)
+            staged, w, fin = merged_window_stage(ff, keys=tkeys)
             area = (
                 (F.col("value") + F.lag("value").over(w))
                 / 2.0
@@ -4285,15 +4226,11 @@ class InfluxQLEngine:
                     grouped, "val", "_cs", order_col="ts_ms", segment_span=3600 * 1000
                 )
                 return grouped.withColumn("val", F.round(F.col("_cs"), 6)).drop("_cs")
-            if tkeys:
-                wt = _W.partitionBy(*tkeys).orderBy("ts_ms")
-                staged, fin = grouped, (lambda d: d)
-            else:
-                carry = (n - 1) if spec.tx == "moving_average" else 1
-                staged, wt, fin = merged_window_stage(
-                    grouped, order_col="ts_ms", carry_rows=max(0, carry),
-                    segment_span=3600 * 1000,
-                )
+            carry = (n - 1) if spec.tx == "moving_average" else 1
+            staged, wt, fin = merged_window_stage(
+                grouped, order_col="ts_ms", carry_rows=carry, segment_span=3600 * 1000,
+                keys=tkeys,
+            )
             if spec.tx == "cumulative_sum":
                 wc = wt.rowsBetween(_W.unboundedPreceding, 0)
                 grouped = staged.withColumn("val", F.round(F.sum("val").over(wc), 6))
@@ -4323,8 +4260,24 @@ class InfluxQLEngine:
                 if spec.tx == "non_negative_derivative":
                     grouped = grouped.filter(F.col("_d") >= 0)
                 grouped = grouped.withColumn("val", F.col("_d")).drop("_d")
-            grouped = fin(grouped)
+            grouped = fin(grouped).drop("_t")
         return grouped
+
+
+def _series_key() -> Column:
+    """A registry row's field-independent series key: the hash of its
+    sorted tag entries. Rows are stored one per field and fingerprints
+    include the field name, so (series key, ts_ns) is the identity of
+    a point across its fields."""
+    return F.xxhash64(
+        F.to_json(F.array_sort(F.map_entries(F.coalesce(F.col("tags"), F.create_map()))))
+    )
+
+
+def _fp2s(reg: DataFrame) -> DataFrame:
+    """fingerprint → ``_skey`` (:func:`_series_key`), for a broadcast
+    join onto fact rows."""
+    return reg.select("fingerprint", _series_key().alias("_skey")).distinct()
 
 
 def _derivative(v: Column, t: str, w, ticks_per_s: float, unit_s: float) -> Column:

@@ -209,6 +209,53 @@ def test_merged_window_engine_path_no_unpartitioned_fact_window(spark, tmp_path)
     assert fact_windows and all("_dseg" in ln for ln in fact_windows), plan
 
 
+@pytest.fixture(scope="module")
+def ta_parquet(spark, tmp_path_factory):
+    """40 points for each of two keys, read back from parquet so each
+    use of the input shows as a scan node in the plan."""
+    path = str(tmp_path_factory.mktemp("ta_plan") / "px")
+    rows = [
+        (k, i * 15_000_000_000 + (10**9 if k == "b" else 0), float((i * 7 + len(k)) % 11))
+        for i in range(40)
+        for k in ("a", "b")
+    ]
+    spark.createDataFrame(rows, "k string, ts long, v double").write.parquet(path)
+    return spark.read.parquet(path)
+
+
+@pytest.mark.parametrize(
+    "fn,warmup",
+    [
+        ("exponential_moving_average", "exponential"),
+        ("double_exponential_moving_average", "exponential"),
+        ("triple_exponential_moving_average", "exponential"),
+        ("triple_exponential_derivative", "exponential"),
+        ("relative_strength_index", "exponential"),
+        ("chande_momentum_oscillator", "exponential"),
+        ("kaufmans_efficiency_ratio", "exponential"),
+        ("kaufmans_adaptive_moving_average", "exponential"),
+        ("exponential_moving_average", "simple"),
+        ("double_exponential_moving_average", "simple"),
+        ("triple_exponential_moving_average", "simple"),
+    ],
+)
+def test_ungrouped_ta_plan_linear_in_stages(ta_parquet, fn, warmup):
+    """A TA transform over ONE merged series must not copy its input
+    plan per stage: the ungrouped plan reads the parquet input at most
+    twice as often as the per-series (grouped) plan of the same
+    function. Plan-only — nothing executes."""
+    from cflux_spark.operators.ta import ta_transform
+    from cflux_spark.plans.influxql import _explain_string
+
+    def scans(keys, df):
+        out = ta_transform(df, keys, "ts", "v", fn, 3, warmup=warmup)
+        return _explain_string(out).count("Scan parquet")
+
+    grouped = scans(["k"], ta_parquet)
+    ungrouped = scans([], ta_parquet.filter(F.col("k") == "a").drop("k"))
+    assert 0 < ungrouped <= 2 * grouped, (grouped, ungrouped)
+
+
 def test_minhash_index_probe_never_shuffles_index(spark, tmp_path):
     """MinHashIndex.probe (round 7): the persisted signature table —
     the 100 TB-side artifact — must never be hash-repartitioned. The

@@ -222,7 +222,8 @@ def _stream_ta_harness(spark, tmp_path, tag, op, out_field, vals, n_expect, spli
     """Feed ``vals`` as two micro-batches through a file stream into
     stateful operator ``op``; return {value: out_field} once
     ``n_expect`` rows have emitted (polling, not a fixed sleep — a
-    loaded box made a sleep-based wait flaky)."""
+    loaded box made a sleep-based wait flaky). Batch 2 is written only
+    once batch 1 has been processed, so state crosses the boundary."""
     src = str(tmp_path / f"in_{tag}")
     os.makedirs(src)
 
@@ -251,7 +252,9 @@ def _stream_ta_harness(spark, tmp_path, tag, op, out_field, vals, n_expect, spli
         .start()
     )
     try:
-        _wait_rows(spark, f"ta_{tag}", 1, timeout=90)
+        # batch 1 may by design emit nothing (RSI/KAMA need n+1
+        # points), so wait for it to be processed, not for a row
+        q.processAllAvailable()
         write_batch(
             "b2.csv",
             [("s1", (i + 1 + split) * 10**9, v) for i, v in enumerate(vals[split:])],

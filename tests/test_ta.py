@@ -170,25 +170,57 @@ def test_ker_kama_grouped(frames):
     _check(out.collect(), {k: _kama_ref(v, 10) for k, v in series.items()}, 11, atol=1e-8)
 
 
+def _dema_ref(v, n, warmup="exponential"):
+    e1 = _ema_ref(v, n, warmup)
+    return [2 * a - b for a, b in zip(e1, _ema_ref(e1, n, warmup))]
+
+
+def _tema_ref(v, n, warmup="exponential"):
+    e1 = _ema_ref(v, n, warmup)
+    e2 = _ema_ref(e1, n, warmup)
+    return [3 * a - 3 * b + c for a, b, c in zip(e1, e2, _ema_ref(e2, n, warmup))]
+
+
+def _trix_ref(v, n, warmup="exponential"):
+    e3 = _ema_ref(_ema_ref(_ema_ref(v, n, warmup), n, warmup), n, warmup)
+    return [(e3[i] / e3[i - 1] - 1) * 100 for i in range(1, len(e3))]
+
+
+_UNGROUPED_CASES = [
+    ("exponential_moving_average", 10, "exponential"),
+    ("relative_strength_index", 14, "exponential"),
+    ("kaufmans_adaptive_moving_average", 10, "exponential"),
+    ("chande_momentum_oscillator", 14, "exponential"),
+    ("double_exponential_moving_average", 8, "exponential"),
+    ("triple_exponential_moving_average", 8, "exponential"),
+    ("triple_exponential_derivative", 8, "exponential"),
+    ("kaufmans_efficiency_ratio", 10, "exponential"),
+    ("exponential_moving_average", 10, "simple"),
+    ("double_exponential_moving_average", 8, "simple"),
+]
+
+
 @pytest.mark.parametrize(
-    "fn,n",
+    "fn,n,warmup",
     [
-        ("exponential_moving_average", 10),
-        ("relative_strength_index", 14),
-        ("kaufmans_adaptive_moving_average", 10),
-        ("chande_momentum_oscillator", 14),
+        pytest.param(fn, n, w, id=f"{fn}-{n}" + ("" if w == "exponential" else f"-{w}"))
+        for fn, n, w in _UNGROUPED_CASES
     ],
 )
-def test_ungrouped_matches_grouped_semantics(frames, fn, n):
+def test_ungrouped_matches_grouped_semantics(frames, fn, n, warmup):
     """keys=[] (merged-series segmented path) equals the single-series
     reference on one series's rows."""
     df, series = frames
     one = df.filter("k = 'a'").drop("k")
-    out = ta_transform(one, [], "ts", "v", fn, n).collect()
+    out = ta_transform(one, [], "ts", "v", fn, n, warmup=warmup).collect()
     ref = {
-        "exponential_moving_average": _ema_ref,
+        "exponential_moving_average": lambda v, n: _ema_ref(v, n, warmup),
+        "double_exponential_moving_average": lambda v, n: _dema_ref(v, n, warmup),
+        "triple_exponential_moving_average": lambda v, n: _tema_ref(v, n, warmup),
+        "triple_exponential_derivative": lambda v, n: _trix_ref(v, n, warmup),
         "relative_strength_index": _rsi_ref,
         "chande_momentum_oscillator": _cmo_ref,
+        "kaufmans_efficiency_ratio": _er_ref,
         "kaufmans_adaptive_moving_average": _kama_ref,
     }[fn](series["a"], n)
     got = sorted((r.ts, r._ta) for r in out)

@@ -70,6 +70,9 @@ def test_merged_window_stage_lag_equals_global(spark):
         ).collect()
     }
     assert got == want and len(got) == 400
+    # the stage numbers rows globally: _t is the merged row_number
+    rn = {r.ts_ns: r.rn for r in df.withColumn("rn", F.row_number().over(wg)).collect()}
+    assert {r.ts_ns: r._t for r in fin(staged).collect()} == rn
 
 
 def test_merged_window_stage_trailing_frame_equals_global(spark):
