@@ -53,8 +53,10 @@ from itertools import islice
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cflux_spark.operators import metadata as _md
 from cflux_spark.operators import pivot as pivot_ops
 from cflux_spark.sources.ingest import LPStore, validate_db_name
+from cflux_spark.sources.series_index import ABOVE_CAP, SeriesIndex
 
 _DUR_UNITS = {"ns": 1e-9, "u": 1e-6, "µ": 1e-6, "ms": 1e-3, "s": 1, "m": 60, "h": 3600, "d": 86400, "w": 604800}
 
@@ -646,17 +648,6 @@ def _parse_show(qs: str) -> _ShowClauses:
         on_db = _unquote(m.group(1))
         head = (on_parts[0].rstrip() + " " + m.group(2).strip()).strip()
     return _ShowClauses(head, where, limit, offset, on_db)
-
-
-def _show_meas_filter(reg: DataFrame, meas: str | None) -> DataFrame:
-    """FROM <m> on a SHOW statement — equality, or ``FROM /regex/``
-    (round 6: the slash form used to compare the literal slashes and
-    silently match nothing)."""
-    if meas is None:
-        return reg
-    if len(meas) >= 2 and meas.startswith("/") and meas.endswith("/"):
-        return reg.filter(F.col("measurement").rlike(meas[1:-1]))
-    return reg.filter(F.col("measurement") == meas)
 
 
 def _slice_values(vals: list, limit: int | None, offset: int | None) -> list:
@@ -1469,6 +1460,11 @@ class InfluxQLEngine:
         import threading
 
         self._explain_local = threading.local()
+        # db → driver-side series index answering the SHOW
+        # family (sources/series_index.py); the lock guards the dict,
+        # each index locks its own refresh
+        self._series_indexes: dict[str, SeriesIndex] = {}
+        self._series_index_lock = threading.Lock()
 
     def _bounded_collect(self, df: DataFrame) -> list:
         """Collect for envelope assembly with a loud cap. The result
@@ -1591,23 +1587,23 @@ class InfluxQLEngine:
                 f"use SHOW {singular} CARDINALITY"
             )
         if upper.startswith("SHOW MEASUREMENTS"):
-            return self._show_measurements(qs, db)
+            return self._show(self._show_measurements, qs, db)
         if upper.startswith("SHOW FIELD KEYS"):
-            return self._show_field_keys(qs, db)
+            return self._show(self._show_field_keys, qs, db)
         if upper.startswith("SHOW TAG KEYS"):
-            return self._show_tag_keys(qs, db)
+            return self._show(self._show_tag_keys, qs, db)
         if re.match(r"SHOW TAG VALUES\s+(EXACT\s+)?CARDINALITY", upper):
             # must dispatch BEFORE the plain TAG VALUES branch, which
             # previously swallowed the CARDINALITY token and answered
             # with the VALUES — silently wrong (round 8)
-            return self._show_tag_values_cardinality(qs, db)
+            return self._show(self._show_tag_values_cardinality, qs, db)
         if upper.startswith("SHOW TAG VALUES"):
-            return self._show_tag_values(qs, db)
+            return self._show(self._show_tag_values, qs, db)
         if re.match(r"SHOW (SERIES|MEASUREMENT|FIELD KEY|TAG KEY)\s+(EXACT\s+)?CARDINALITY", upper):
             subject = re.match(r"SHOW (SERIES|MEASUREMENT|FIELD KEY|TAG KEY)", upper).group(1).lower()
-            return self._show_cardinality(subject, qs, db)
+            return self._show(self._show_cardinality, subject, qs, db)
         if upper.startswith("SHOW SERIES"):
-            return self._show_series(qs, db)
+            return self._show(self._show_series, qs, db)
         if upper.startswith("CREATE RETENTION POLICY"):
             return self._create_retention_policy(qs, db)
         if upper.startswith("SHOW RETENTION POLICIES"):
@@ -1686,6 +1682,8 @@ class InfluxQLEngine:
         if not target.startswith(os.path.realpath(self.root) + os.sep):
             raise InfluxQLError(f"invalid database name: {name!r}")
         shutil.rmtree(target, ignore_errors=True)
+        with self._series_index_lock:
+            self._series_indexes.pop(name, None)
         self.retention_policies.pop(name, None)
         self.subscriptions.pop(name, None)
         self.continuous_queries.pop(name, None)
@@ -1716,7 +1714,7 @@ class InfluxQLEngine:
             # equality or FROM /regex/ (round 6 — InfluxDB allows the
             # slash form here; comparing the literal slashes silently
             # dropped nothing)
-            sel = _show_meas_filter(sel, _unquote(m.group("m")))
+            sel = _md.measurement_filter(sel, _unquote(m.group("m")))
         if m.group("w"):
             from cflux_spark.functions.scalars import label_matcher
 
@@ -1841,6 +1839,34 @@ class InfluxQLEngine:
     def _registry(self, db: str | None) -> DataFrame | None:
         return self.store(db).read_registry()
 
+    def _series_index(self, db: str | None) -> SeriesIndex:
+        store = self.store(db)
+        with self._series_index_lock:
+            if store.db not in self._series_indexes:
+                self._series_indexes[store.db] = SeriesIndex(store.registry_path)
+            return self._series_indexes[store.db]
+
+    def _show_registry(self, db: str | None, indexed: bool):
+        """The registry a SHOW statement reads, or None when the store
+        has no registry: the series index (``ArrowRegistry``, no Spark
+        job) when ``indexed`` and the registry is under
+        ``SERIES_INDEX_MAX_ROWS``, else the latest-wins frame
+        (``SparkRegistry``)."""
+        if indexed:
+            rows = self._series_index(db).refresh()
+            if rows is not ABOVE_CAP:
+                return None if rows is None else _md.ArrowRegistry(rows)
+        reg = self._registry(db)
+        return None if reg is None else _md.SparkRegistry(reg)
+
+    def _show(self, handler: Callable[..., dict], *args) -> dict:
+        """Run a SHOW handler on the series index. A regex Python cannot
+        compile reruns it on the Spark path, whose ``rlike`` judges it."""
+        try:
+            return handler(*args, indexed=True)
+        except re.error:
+            return handler(*args, indexed=False)
+
     def _show_databases(self) -> dict:
         import os
 
@@ -1849,20 +1875,17 @@ class InfluxQLEngine:
         )
         return _envelope([_series("databases", ["name"], [[d] for d in dbs])])
 
-    def _show_where_filter(self, reg: DataFrame, where: str | None) -> DataFrame:
+    def _show_filter(self, reg, sc: _ShowClauses, meas: str | None = None):
         """WHERE clause on SHOW statements: tag matchers ANDed, applied
-        to the registry (InfluxDB meta queries filter by series tags).
-        Time/field conditions are out of grammar — loud, never the
-        silently-unfiltered results this replaced (round 5). The
-        condition text arrives pre-carved by the quote-aware
-        ``_parse_show`` (round 6 — the old non-greedy regex truncated
-        matchers whose quoted value contained ' LIMIT 5')."""
-        if where is None:
-            return reg
-        from cflux_spark.functions.scalars import label_matcher
-
-        cond = None
-        for c in _split_on_and(where):
+        to the registry (InfluxDB meta queries filter by series tags),
+        then ``FROM m`` / ``FROM /regex/``. Time/field conditions are
+        out of grammar — loud, never the silently-unfiltered results
+        this replaced (round 5). The condition text arrives pre-carved
+        by the quote-aware ``_parse_show`` (round 6 — the old
+        non-greedy regex truncated matchers whose quoted value
+        contained ' LIMIT 5')."""
+        matchers = []
+        for c in _split_on_and(sc.where) if sc.where is not None else []:
             c = c.strip()
             while c.startswith("(") and c.endswith(")") and _parens_balanced(c[1:-1]):
                 c = c[1:-1].strip()
@@ -1873,126 +1896,103 @@ class InfluxQLEngine:
                 raise InfluxQLError(
                     f"SHOW ... WHERE supports tag matchers only, got {c!r}"
                 )
-            key, op, val = tm
-            e = label_matcher(F.element_at(F.col("tags"), key), op, val)
-            cond = e if cond is None else (cond & e)
-        return reg.filter(cond) if cond is not None else reg
+            matchers.append(tm)
+        return reg.where(matchers).from_measurement(meas)
 
-    def _show_measurements(self, qs: str, db: str | None) -> dict:
+    def _show_measurements(self, qs: str, db: str | None, indexed: bool) -> dict:
         """SHOW MEASUREMENTS [WITH MEASUREMENT =~ /re/ | = name]
         [WHERE tag matchers] [LIMIT n] [OFFSET n] — all four clauses
-        were previously ignored silently (round-5 conformance fix)."""
+        were previously ignored silently (round-5 conformance fix).
+        Answered from the series index (``_show_registry``)."""
         sc = _parse_show(qs)
-        db = sc.on_db or db
-        reg = self._registry(db)
+        reg = self._show_registry(sc.on_db or db, indexed)
         if reg is None:
             return _envelope([_series("measurements", ["name"], [])])
-        reg = self._show_where_filter(reg, sc.where)
+        reg = self._show_filter(reg, sc)
         wm = sc.with_clause("MEASUREMENT") if "WITH" in sc.head.upper() else None
-        names = reg.select("measurement").distinct()
+        op = pattern = None
         if wm is not None:
             m = re.match(r"(=~|=)\s*(.+)$", wm, re.DOTALL)
             if not m:
                 raise InfluxQLError(f"unparsable WITH MEASUREMENT {wm!r}")
             op, rhs = m.group(1), m.group(2).strip()
             if op == "=~":
-                if not (len(rhs) >= 2 and rhs.startswith("/") and rhs.endswith("/")):
+                pattern = _md.slash_regex(rhs)
+                if pattern is None:
                     raise InfluxQLError(
                         f"WITH MEASUREMENT =~ requires a /regex/: {rhs!r}"
                     )
-                names = names.filter(F.col("measurement").rlike(rhs[1:-1]))
             else:
-                names = names.filter(F.col("measurement") == _unquote(rhs))
-        vals = [[r.measurement] for r in names.orderBy("measurement").collect()]
+                pattern = _unquote(rhs)
+        vals = [[name] for name in reg.measurements(op, pattern)]
         vals = _slice_values(vals, sc.limit, sc.offset)
         return _envelope([_series("measurements", ["name"], vals)])
 
-    def _show_series(self, qs: str, db: str | None) -> dict:
+    def _show_series(self, qs: str, db: str | None, indexed: bool) -> dict:
         """SHOW SERIES [FROM m] — series keys 'measurement,k=v,...'
         (InfluxDB 1.x; beyond the reference, whose dispatch ladder
-        answers it with the M11 empty envelope — Grafana issues it)."""
-        from cflux_spark.operators import metadata as _md
-
+        answers it with the M11 empty envelope — Grafana issues it).
+        Answered from the series index (``_show_registry``)."""
         sc = _parse_show(qs)
-        db = sc.on_db or db
-        reg = self._registry(db)
+        reg = self._show_registry(sc.on_db or db, indexed)
         if reg is None:
             return _envelope([])
-        reg = self._show_where_filter(reg, sc.where)
-        reg = _show_meas_filter(reg, sc.from_name)
-        rows = _md.show_series(reg, None).collect()
-        if not rows:
+        keys = self._show_filter(reg, sc, sc.from_name).series_keys()
+        if not keys:
             return _envelope([])
-        vals = _slice_values([[r.key] for r in rows], sc.limit, sc.offset)
+        vals = _slice_values([[k] for k in keys], sc.limit, sc.offset)
         # InfluxDB emits a nameless series with a single `key` column
         return _envelope([{"columns": ["key"], "values": vals}])
 
-    def _show_cardinality(self, subject: str, qs: str, db: str | None) -> dict:
+    def _show_cardinality(self, subject: str, qs: str, db: str | None, indexed: bool) -> dict:
         """SHOW <subject> [EXACT] CARDINALITY [FROM m] — exact counts
-        over the registry (capacity-planning family, InfluxDB 1.x)."""
-        from cflux_spark.operators import metadata as _md
-
+        over the registry (capacity-planning family, InfluxDB 1.x).
+        Answered from the series index (``_show_registry``)."""
         sc = _parse_show(qs)
-        db = sc.on_db or db
-        reg = self._registry(db)
+        reg = self._show_registry(sc.on_db or db, indexed)
         n = 0
         if reg is not None:
-            reg = self._show_where_filter(reg, sc.where)
-            reg = _show_meas_filter(reg, sc.from_name)
-            n = _md.show_cardinality(reg, subject, None).collect()[0]["count"]
+            n = self._show_filter(reg, sc, sc.from_name).cardinality(subject)
         return _envelope([{"columns": ["count"], "values": [[n]]}])
 
-    def _show_field_keys(self, qs: str, db: str | None) -> dict:
+    def _show_field_keys(self, qs: str, db: str | None, indexed: bool) -> dict:
+        """SHOW FIELD KEYS [FROM m] — one series per measurement,
+        answered from the series index (``_show_registry``)."""
         sc = _parse_show(qs)
-        db = sc.on_db or db
-        meas = sc.from_name
-        reg = self._registry(db)
+        reg = self._show_registry(sc.on_db or db, indexed)
         if reg is None:
             return _envelope([])
-        reg = self._show_where_filter(reg, sc.where)
-        reg = _show_meas_filter(reg, meas)
-        rows = reg.select("measurement", "name").distinct().orderBy("measurement", "name").collect()
         out: dict[str, list] = {}
-        for r in rows:
-            fieldname = r.name.split(".", 1)[1] if "." in r.name else r.name
+        for meas, name in self._show_filter(reg, sc, sc.from_name).field_keys():
+            fieldname = name.split(".", 1)[1] if "." in name else name
             # the reference reports every field as float (cflux.js:461)
-            out.setdefault(r.measurement, []).append([fieldname, "float"])
+            out.setdefault(meas, []).append([fieldname, "float"])
         return _envelope(
             [_series(m, ["fieldKey", "fieldType"], _slice_values(v, sc.limit, sc.offset))
              for m, v in out.items()]
         )
 
-    def _show_tag_keys(self, qs: str, db: str | None) -> dict:
+    def _show_tag_keys(self, qs: str, db: str | None, indexed: bool) -> dict:
+        """SHOW TAG KEYS [FROM m] — one series per measurement,
+        answered from the series index (``_show_registry``)."""
         sc = _parse_show(qs)
-        db = sc.on_db or db
-        meas = sc.from_name
-        reg = self._registry(db)
+        reg = self._show_registry(sc.on_db or db, indexed)
         if reg is None:
             return _envelope([])
-        reg = self._show_where_filter(reg, sc.where)
-        reg = _show_meas_filter(reg, meas)
-        rows = (
-            reg.select("measurement", F.explode(F.map_keys("tags")).alias("tagKey"))
-            .distinct()
-            .orderBy("measurement", "tagKey")
-            .collect()
-        )
         out: dict[str, list] = {}
-        for r in rows:
-            out.setdefault(r.measurement, []).append([r.tagKey])
+        for meas, key in self._show_filter(reg, sc, sc.from_name).tag_keys():
+            out.setdefault(meas, []).append([key])
         return _envelope(
             [_series(m, ["tagKey"], _slice_values(v, sc.limit, sc.offset))
              for m, v in out.items()]
         )
 
-    def _tag_values_kv(self, qs: str, db: str | None):
+    def _tag_values_kv(self, qs: str, db: str | None, indexed: bool):
         """Shared carving for the TAG VALUES family: parse WITH KEY
         (=, IN, =~), apply ON/FROM/WHERE, and return the filtered
-        (measurement, key, value) frame (or None with no registry) +
-        the parsed show clause."""
+        registry view (or None with no registry), the WITH KEY key list
+        and regex, and the parsed show clause."""
         sc = _parse_show(qs)
-        db = sc.on_db or db
-        meas = sc.from_name
         wk = sc.with_clause("KEY") if "WITH" in sc.head.upper() else None
         if wk is None:
             # InfluxDB: "SHOW TAG VALUES requires a WITH KEY clause" —
@@ -2001,46 +2001,40 @@ class InfluxQLEngine:
             raise InfluxQLError("SHOW TAG VALUES requires a WITH KEY clause")
         keys: list[str] | None = None
         key_rx: str | None = None
-        if wk is not None:
-            km = re.match(r"(?:IN\s*\(([^)]*)\)|=~\s*(.+)|=\s*(.+))$", wk,
-                          re.IGNORECASE | re.DOTALL)
-            if not km:
-                raise InfluxQLError(f"unparsable WITH KEY {wk!r}")
-            if km.group(1) is not None:
-                keys = [_unquote(k) for k in km.group(1).split(",") if k.strip()]
-            elif km.group(2) is not None:
-                rhs = km.group(2).strip()
-                if not (len(rhs) >= 2 and rhs.startswith("/") and rhs.endswith("/")):
-                    raise InfluxQLError(f"WITH KEY =~ requires a /regex/: {rhs!r}")
-                key_rx = rhs[1:-1]
-            else:
-                keys = [_unquote(km.group(3))]
-        reg = self._registry(db)
-        if reg is None:
-            return None, sc
-        reg = self._show_where_filter(reg, sc.where)
-        reg = _show_meas_filter(reg, meas)
-        kv = reg.select("measurement", F.explode("tags").alias("key", "value"))
-        if keys is not None:
-            kv = kv.filter(F.col("key").isin(keys))
-        if key_rx is not None:
-            kv = kv.filter(F.col("key").rlike(key_rx))
-        return kv, sc
+        km = re.match(r"(?:IN\s*\(([^)]*)\)|=~\s*(.+)|=\s*(.+))$", wk,
+                      re.IGNORECASE | re.DOTALL)
+        if not km:
+            raise InfluxQLError(f"unparsable WITH KEY {wk!r}")
+        if km.group(1) is not None:
+            keys = [_unquote(k) for k in km.group(1).split(",") if k.strip()]
+        elif km.group(2) is not None:
+            rhs = km.group(2).strip()
+            key_rx = _md.slash_regex(rhs)
+            if key_rx is None:
+                raise InfluxQLError(f"WITH KEY =~ requires a /regex/: {rhs!r}")
+        else:
+            keys = [_unquote(km.group(3))]
+        reg = self._show_registry(sc.on_db or db, indexed)
+        if reg is not None:
+            reg = self._show_filter(reg, sc, sc.from_name)
+        return reg, keys, key_rx, sc
 
-    def _show_tag_values(self, qs: str, db: str | None) -> dict:
-        kv, sc = self._tag_values_kv(qs, db)
-        if kv is None:
+    def _show_tag_values(self, qs: str, db: str | None, indexed: bool) -> dict:
+        """SHOW TAG VALUES [FROM m] WITH KEY ... — one series per
+        measurement, answered from the series index
+        (``_show_registry``)."""
+        reg, keys, key_rx, sc = self._tag_values_kv(qs, db, indexed)
+        if reg is None:
             return _envelope([])
-        rows = kv.distinct().orderBy("measurement", "key", "value").collect()
         out: dict[str, list] = {}
-        for r in rows:
-            out.setdefault(r.measurement, []).append([r.key, r.value])
+        for meas, key, value in reg.tag_values(keys, key_rx):
+            out.setdefault(meas, []).append([key, value])
         return _envelope(
             [_series(m, ["key", "value"], _slice_values(v, sc.limit, sc.offset))
              for m, v in out.items()]
         )
 
-    def _show_tag_values_cardinality(self, qs: str, db: str | None) -> dict:
+    def _show_tag_values_cardinality(self, qs: str, db: str | None, indexed: bool) -> dict:
         """SHOW TAG VALUES [EXACT] CARDINALITY [FROM m] WITH KEY ... —
         the count of distinct (key, value) pairs the matching VALUES
         statement would list (house cardinality convention: one exact
@@ -2048,8 +2042,8 @@ class InfluxQLEngine:
         CARDINALITY token fell through to the VALUES handler and the
         statement answered with the values themselves."""
         qs2 = re.sub(r"(?i)\s+EXACT\s+CARDINALITY\b|\s+CARDINALITY\b", "", qs, count=1)
-        kv, _sc = self._tag_values_kv(qs2, db)
-        n = 0 if kv is None else kv.select("key", "value").distinct().count()
+        reg, keys, key_rx, _sc = self._tag_values_kv(qs2, db, indexed)
+        n = 0 if reg is None else reg.tag_value_count(keys, key_rx)
         return _envelope([{"columns": ["count"], "values": [[n]]}])
 
     def _show_subscriptions(self) -> dict:

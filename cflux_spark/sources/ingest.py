@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from cflux_spark.model.fingerprint import NAME_LABEL
 from cflux_spark.model.schemas import PARSED_LINE_SCHEMA
 from cflux_spark.sources.lineprotocol import parse_line
+from cflux_spark.sources.series_index import registry_files
 
 # epoch(ns) to use when a line carries no timestamp; injected as a
 # literal so the whole batch is deterministic & testable (the reference
@@ -278,6 +279,9 @@ class LPStore:
         """Append facts + new-series registry rows from an identity-
         attached frame (the shared tail of batch ingest and
         SELECT INTO)."""
+        # read the registry before any file lands, so an unreadable
+        # registry fails the write instead of leaving unregistered facts
+        existing = self.read_registry_raw()
         facts = fact_rows(exploded)
         # sortWithinPartitions(fingerprint, ts) mirrors the MergeTree
         # ORDER BY (cflux.js:152): parquet row-group min/max stats then
@@ -294,7 +298,6 @@ class LPStore:
             .parquet(self.samples_path)
         )
         new_series = registry_rows(exploded)
-        existing = self.read_registry_raw()
         if existing is not None:
             new_series = new_series.join(
                 existing.select("fingerprint").distinct(), "fingerprint", "left_anti"
@@ -597,10 +600,13 @@ class LPStore:
             shutil.rmtree(tmp)
 
     def read_registry_raw(self) -> DataFrame | None:
-        try:
-            return self.spark.read.parquet(self.registry_path)
-        except Exception:
+        """The registry's appended rows; None only when the registry
+        directory is absent or holds no data file. Any other read error
+        propagates: an unreadable registry is an error, never an empty
+        store whose next write re-registers every series."""
+        if not registry_files(self.registry_path):
             return None
+        return self.spark.read.parquet(self.registry_path)
 
     def read_registry(self) -> DataFrame | None:
         raw = self.read_registry_raw()
