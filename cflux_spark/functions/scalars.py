@@ -9,6 +9,10 @@ matcher table (=, !=, =~, !~) exists in the reference as dead code
 
 from __future__ import annotations
 
+import operator
+from collections.abc import Callable
+from functools import reduce
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -36,3 +40,23 @@ def label_matcher(value: Column, op: str, pattern: str) -> Column:
     if op == "!~":
         return ~value.rlike(pattern)
     raise ValueError(f"unknown matcher op {op!r}")
+
+
+_ORDER_OPS = {">": operator.gt, ">=": operator.ge, "<": operator.lt, "<=": operator.le}
+
+
+def matcher_cond(
+    filters: list[tuple], or_groups: list[list[tuple]], col_of: Callable[[str], Column]
+) -> Column | None:
+    """WHERE matchers ``(key, op, value)`` as one condition: ``filters``
+    ANDed with each OR group of ``or_groups``; None when there are none.
+    ``col_of(key)`` is the column a key names. The ops are
+    ``label_matcher``'s four, which also serve ``=``/``!=`` on field
+    values, and the field ordering comparisons."""
+    def one(key: str, op: str, value) -> Column:
+        col = col_of(key)
+        return _ORDER_OPS[op](col, value) if op in _ORDER_OPS else label_matcher(col, op, value)
+
+    groups = [[f] for f in filters] + list(or_groups)
+    conds = [reduce(operator.or_, (one(*m) for m in g)) for g in groups]
+    return reduce(operator.and_, conds) if conds else None

@@ -12,10 +12,14 @@ For the driver's `events` fixture a registry is derived via
 `events_registry` (user_id → series key, event_type → name, props →
 tags), per FIXTURES.md.
 
-The InfluxQL engine answers SHOW through one of two registry views with
-the same methods, each turning registry rows into sorted distinct rows
-(the clause carving, LIMIT/OFFSET and envelope stay in
-``plans/influxql.py``):
+The InfluxQL engine looks the registry up through one of two registry
+views with the same methods, each turning registry rows into sorted
+distinct rows (the clause carving, LIMIT/OFFSET and envelope stay in
+``plans/influxql.py``). They answer SHOW, and the registry lookups of
+other statements: the measurements of ``SELECT``/``DELETE FROM
+/regex/`` and the tag keys of ``GROUP BY *``. ``SparkRegistry.where``
+also selects the fingerprint set that ``DROP SERIES`` and a
+tag-conditioned ``DELETE`` remove.
 
 - ``ArrowRegistry`` — the driver-side series index
   (``sources/series_index.py``), vectorized with ``pyarrow.compute``:
@@ -30,6 +34,7 @@ the same methods, each turning registry rows into sorted distinct rows
 from __future__ import annotations
 
 import re
+from functools import reduce
 
 import numpy as np
 import pyarrow as pa
@@ -37,7 +42,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cflux_spark.functions.scalars import label_matcher, props_map
+from cflux_spark.functions.scalars import matcher_cond, props_map
 
 
 def events_registry(events: DataFrame) -> DataFrame:
@@ -163,13 +168,10 @@ class SparkRegistry:
     def __init__(self, df: DataFrame):
         self.df = df
 
-    def where(self, matchers: list[tuple[str, str, str]]) -> "SparkRegistry":
-        """Tag matchers ANDed; a missing tag matches none of the four
-        ops (``element_at`` gives NULL)."""
-        cond = None
-        for key, op, val in matchers:
-            e = label_matcher(F.element_at(F.col("tags"), key), op, val)
-            cond = e if cond is None else (cond & e)
+    def where(self, matchers: list[tuple[str, str, str]], or_groups=()) -> "SparkRegistry":
+        """Tag matchers ANDed with each OR group; a missing tag matches
+        none of the four ops (``element_at`` gives NULL)."""
+        cond = matcher_cond(matchers, or_groups, lambda key: F.element_at(F.col("tags"), key))
         return self if cond is None else SparkRegistry(self.df.filter(cond))
 
     def from_measurement(self, meas: str | None) -> "SparkRegistry":
@@ -261,15 +263,17 @@ class ArrowRegistry:
     def __init__(self, table: pa.Table):
         self.t = table
 
-    def where(self, matchers: list[tuple[str, str, str]]) -> "ArrowRegistry":
-        """Tag matchers ANDed, through ``map_lookup``; a missing tag
-        matches none of the four ops."""
-        mask = None
-        for key, op, val in matchers:
+    def where(self, matchers: list[tuple[str, str, str]], or_groups=()) -> "ArrowRegistry":
+        """Tag matchers ANDed with each OR group, through ``map_lookup``
+        and Spark's three-valued logic: a missing tag matches none of
+        the four ops."""
+        def one(key: str, op: str, val: str):
             tag = pc.map_lookup(self.t["tags"], pa.scalar(key, pa.string()), "first")
-            m = _arrow_match(tag, op, val)
-            mask = m if mask is None else pc.and_(mask, m)
-        return self if mask is None else ArrowRegistry(self.t.filter(mask))
+            return _arrow_match(tag, op, val)
+
+        groups = [[m] for m in matchers] + list(or_groups)
+        masks = [reduce(pc.or_kleene, (one(*m) for m in g)) for g in groups]
+        return ArrowRegistry(self.t.filter(reduce(pc.and_kleene, masks))) if masks else self
 
     def from_measurement(self, meas: str | None) -> "ArrowRegistry":
         if meas is None:

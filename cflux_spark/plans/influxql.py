@@ -53,6 +53,7 @@ from itertools import islice
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cflux_spark.functions.scalars import matcher_cond
 from cflux_spark.operators import metadata as _md
 from cflux_spark.operators import pivot as pivot_ops
 from cflux_spark.sources.ingest import LPStore, validate_db_name
@@ -419,7 +420,31 @@ def _parens_balanced(s: str) -> bool:
 
 
 @dataclass
-class SelectStmt:
+class _Where:
+    """A WHERE clause as ``_parse_where`` reads it, for every statement
+    that has one (SELECT, SHOW, DELETE, DROP SERIES)."""
+
+    time_lo_ns: int | None = None  # canonical half-open [lo, hi) in ns
+    time_hi_ns: int | None = None
+    relative_s: int | None = None  # lower bound: ts > now() - relative_s
+    relative_lo_inclusive: bool = False
+    relative_hi_s: int | None = None  # upper bound: ts < now() - relative_hi_s
+    relative_hi_inclusive: bool = False
+    #: a now()-relative bound was read, the no-op ``time < now()`` too
+    relative: bool = False
+    tag_filters: list[tuple[str, str, str]] = field(default_factory=list)  # (key, op, value)
+    #: OR groups, each ANDed with the rest of the WHERE clause:
+    #: tag_or_groups — [[(key, op, value), ...], ...] of tag matchers;
+    #: field_or_groups — same shape over field-value predicates
+    tag_or_groups: list[list[tuple[str, str, str]]] = field(default_factory=list)
+    field_or_groups: list[list[tuple]] = field(default_factory=list)
+    #: WHERE field-value predicates: (field, op, value) with value a
+    #: float (numeric compare) or bool ("b = true" on boolean fields)
+    field_filters: list[tuple] = field(default_factory=list)
+
+
+@dataclass(kw_only=True)
+class SelectStmt(_Where):
     fields: list[FieldSpec]
     measurement: str
     db: str | None = None
@@ -427,18 +452,6 @@ class SelectStmt:
     group_by_star: bool = False  # GROUP BY * — all tag keys of the measurement
     slimit: int | None = None  # series-level LIMIT/OFFSET (InfluxQL SLIMIT/SOFFSET)
     soffset: int | None = None
-    time_lo_ns: int | None = None  # canonical half-open [lo, hi) in ns
-    time_hi_ns: int | None = None
-    relative_s: int | None = None  # lower bound: ts > now() - relative_s
-    relative_lo_inclusive: bool = False
-    relative_hi_s: int | None = None  # upper bound: ts < now() - relative_hi_s
-    relative_hi_inclusive: bool = False
-    tag_filters: list[tuple[str, str, str]] = field(default_factory=list)  # (key, op, value)
-    #: OR groups, each ANDed with the rest of the WHERE clause:
-    #: tag_or_groups — [[(key, op, value), ...], ...] of tag matchers;
-    #: field_or_groups — same shape over field-value predicates
-    tag_or_groups: list[list[tuple[str, str, str]]] = field(default_factory=list)
-    field_or_groups: list[list[tuple]] = field(default_factory=list)
     #: two-part FROM prefix ("x"."m") pending rp-vs-db resolution at
     #: execute time (the parser has no retention-policy registry)
     from_prefix: str | None = None
@@ -446,9 +459,6 @@ class SelectStmt:
     group_by_tags: list[str] = field(default_factory=list)
     group_by_time_offset_s: float = 0.0  # GROUP BY time(N, offset)
     tz: str | None = None  # tz('Area/City') — local-wall-clock buckets
-    #: WHERE field-value predicates: (field, op, value) with value a
-    #: float (numeric compare) or bool ("b = true" on boolean fields)
-    field_filters: list[tuple] = field(default_factory=list)
     fill: str | None = None  # none|null|previous|<number>
     order_desc: bool = False
     limit: int | None = None
@@ -661,12 +671,19 @@ def _slice_values(vals: list, limit: int | None, offset: int | None) -> list:
     return vals
 
 
+#: one literal: a quoted string, a /regex/ (``\/`` escapes a slash)
+#: or a bare token
+_TAG_RHS_RX = re.compile(r"'[^']*'|\"[^\"]*\"|/(?:[^/\\]|\\.)*/|[^\s'\"()/]+")
+
+
 def _parse_tag_matcher(cond: str) -> tuple[str, str, str] | None:
-    """``"host" = 'a'`` / ``host =~ /web.*/`` → (key, op, value) or
-    None; the four matcher ops are the labelParser table
+    """``"host" = 'a'`` / ``host =~ /web.*/`` → (key, op, value), or
+    None unless the right-hand side is exactly one literal (so
+    ``host = 'a' OR host = 'b'`` is not one matcher whose value runs to
+    the end); the four matcher ops are the labelParser table
     (cflux.js:140-148)."""
     gm = re.fullmatch(r"([\w\"']+)\s*(=~|!~|!=|=)\s*(.+)", cond)
-    if not gm:
+    if not gm or not _TAG_RHS_RX.fullmatch(gm.group(3).strip()):
         return None
     key, op, rhs = _unquote(gm.group(1)), gm.group(2), gm.group(3).strip()
     if op in ("=~", "!~"):
@@ -709,6 +726,156 @@ def _parse_time_value(v: str) -> int:
         except ValueError:
             continue
     raise InfluxQLError(f"bad time literal {v!r}")
+
+
+def _parse_where(text: str) -> _Where:
+    """The one WHERE grammar, for SELECT, SHOW, DELETE and DROP SERIES:
+    time bounds, tag matchers and field predicates ANDed, each side of
+    an AND optionally a parenthesized group or a homogeneous OR group.
+    Each statement rejects what its own grammar excludes."""
+    w = _Where()
+    # paren-aware AND split: "(a AND b) AND c" first yields the group
+    # and c; a group that unwraps to contain more top-level ANDs is
+    # re-split (worklist), so "(host = 'a' AND region = 'eu')" parses
+    # instead of shredding at the inner AND (round 5)
+    work = [c.strip() for c in _split_on_and(text)]
+    while work:
+        cond = work.pop(0)
+        # Grafana wraps template conditions in parens: ("host" =~ /^a$/)
+        stripped = False
+        while (
+            cond.startswith("(")
+            and cond.endswith(")")
+            and _parens_balanced(cond[1:-1])
+        ):
+            cond = cond[1:-1].strip()
+            stripped = True
+        if not cond:
+            continue
+        if stripped:
+            parts = [c.strip() for c in _split_on_and(cond)]
+            if len(parts) > 1:
+                work = parts + work
+                continue
+        disjuncts = [d.strip() for d in _split_on_or(cond)]
+        if len(disjuncts) > 1:
+            # OR group: Grafana templated multi-tag queries emit
+            # ("host" = 'a' OR "host" = 'b'); the reference PARSES OR
+            # via ifql-parser (cflux.js:691) then silently walks only
+            # ANDed conditions (cflux.js:737-743) — silently-empty.
+            # Here: a homogeneous disjunction of tag matchers or of
+            # field predicates becomes one or-group ANDed with the
+            # rest of the WHERE; anything mixed (or touching time)
+            # still rejects loudly.
+            tag_group: list[tuple[str, str, str]] = []
+            field_group: list[tuple] = []
+            for d in disjuncts:
+                while d.startswith("(") and d.endswith(")") and _parens_balanced(d[1:-1]):
+                    d = d[1:-1].strip()
+                if re.match(r"time\b", d, re.IGNORECASE):
+                    raise InfluxQLError(
+                        f"OR over time bounds is not supported ({cond!r})"
+                    )
+                fp = _parse_field_pred(d)
+                if fp is not None:
+                    field_group.append(fp)
+                    continue
+                tm_ = _parse_tag_matcher(d)
+                if tm_ is not None:
+                    tag_group.append(tm_)
+                    continue
+                raise InfluxQLError(f"unsupported OR disjunct {d!r} in {cond!r}")
+            if tag_group and field_group:
+                raise InfluxQLError(
+                    f"OR may not mix tag and field predicates ({cond!r}): a tag "
+                    "matcher filters series, a field predicate filters points"
+                )
+            if tag_group:
+                w.tag_or_groups.append(tag_group)
+            else:
+                w.field_or_groups.append(field_group)
+            continue
+        if re.fullmatch(r"time\s*(!=|<>)\s*.+", cond, re.IGNORECASE):
+            # InfluxDB has no time-inequality predicate; letting it
+            # fall through would read it as a FIELD named "time" and
+            # return silently empty (round 8)
+            raise InfluxQLError(f"time != is not valid InfluxQL ({cond!r})")
+        tm = re.fullmatch(r"time\s*(>=|<=|>|<|=)\s*(.+)", cond, re.IGNORECASE)
+        if tm:
+            op, val = tm.group(1), tm.group(2).strip()
+            rel = re.fullmatch(r"now\s*\(\s*\)\s*(?:-\s*(\S+))?", val, re.IGNORECASE)
+            if op == "=":
+                # exact-instant equality (round 8; previously parsed as
+                # a field predicate on a field named "time" — silently
+                # empty): canonicalize to the 1 ns half-open window
+                if rel:
+                    raise InfluxQLError(
+                        "time = now() is not supported; use a range"
+                    )
+                ns = _parse_time_value(val)
+                w.time_lo_ns = ns if w.time_lo_ns is None else max(w.time_lo_ns, ns)
+                w.time_hi_ns = (
+                    ns + 1 if w.time_hi_ns is None else min(w.time_hi_ns, ns + 1)
+                )
+                continue
+            if rel:
+                w.relative = True
+                dur_s = int(_parse_duration(rel.group(1))) if rel.group(1) else 0
+                if op in (">", ">="):
+                    w.relative_s = dur_s
+                    w.relative_lo_inclusive = op == ">="
+                elif dur_s == 0:
+                    pass  # 'time < now()' — no-op upper bound (cflux.js:689 strips it; same, knowingly)
+                else:
+                    w.relative_hi_s = dur_s
+                    w.relative_hi_inclusive = op == "<="
+                continue
+            # absolute bounds canonicalize to half-open [lo, hi) in ns,
+            # so strict vs inclusive operators keep InfluxDB semantics
+            # (ts_ns is integer ns — the ±1 adjustment is exact)
+            ns = _parse_time_value(val)
+            if op == ">":
+                lo = ns + 1
+            elif op == ">=":
+                lo = ns
+            elif op == "<=":
+                hi = ns + 1
+            else:  # <
+                hi = ns
+            if op in (">", ">="):
+                w.time_lo_ns = lo if w.time_lo_ns is None else max(w.time_lo_ns, lo)
+            else:
+                w.time_hi_ns = hi if w.time_hi_ns is None else min(w.time_hi_ns, hi)
+            continue
+        # field-value predicates: ordering ops are always field
+        # comparisons (tags have no order), and =/!= with an UNQUOTED
+        # numeric or boolean literal is a field comparison too —
+        # InfluxQL's quoting rule: 'quoted' RHS → tag, bare number/
+        # bool → field value
+        fp = _parse_field_pred(cond)
+        if fp is not None:
+            w.field_filters.append(fp)
+            continue
+        tg = _parse_tag_matcher(cond)
+        if tg is not None:
+            w.tag_filters.append(tg)
+            continue
+        raise InfluxQLError(f"unsupported WHERE condition {cond!r}")
+    return w
+
+
+def _series_where(text: str | None, verb: str, absolute_time: bool = False) -> _Where:
+    """``_parse_where`` for the statements whose WHERE selects series
+    (SHOW, DROP SERIES, DELETE): field predicates reject, and so do
+    time bounds, except DELETE's absolute ones."""
+    w = _parse_where(text or "")
+    timed = w.relative or (
+        not absolute_time and (w.time_lo_ns is not None or w.time_hi_ns is not None)
+    )
+    if timed or w.field_filters or w.field_or_groups:
+        allowed = "tag matchers and absolute time bounds" if absolute_time else "tag matchers"
+        raise InfluxQLError(f"{verb} ... WHERE supports {allowed} only, got {text!r}")
+    return w
 
 
 def parse_select(q: str) -> SelectStmt:
@@ -1117,133 +1284,8 @@ def parse_select(q: str) -> SelectStmt:
             raise InfluxQLError(f"bad FROM {raw_from!r}")
         stmt = SelectStmt(fields=fields, measurement=meas, db=db, from_prefix=prefix)
 
-    where = m.group("where") or ""
-    # paren-aware AND split: "(a AND b) AND c" first yields the group
-    # and c; a group that unwraps to contain more top-level ANDs is
-    # re-split (worklist), so "(host = 'a' AND region = 'eu')" parses
-    # instead of shredding at the inner AND (round 5)
-    work = [c.strip() for c in _split_on_and(where)]
-    while work:
-        cond = work.pop(0)
-        # Grafana wraps template conditions in parens: ("host" =~ /^a$/)
-        stripped = False
-        while (
-            cond.startswith("(")
-            and cond.endswith(")")
-            and _parens_balanced(cond[1:-1])
-        ):
-            cond = cond[1:-1].strip()
-            stripped = True
-        if not cond:
-            continue
-        if stripped:
-            parts = [c.strip() for c in _split_on_and(cond)]
-            if len(parts) > 1:
-                work = parts + work
-                continue
-        disjuncts = [d.strip() for d in _split_on_or(cond)]
-        if len(disjuncts) > 1:
-            # OR group: Grafana templated multi-tag queries emit
-            # ("host" = 'a' OR "host" = 'b'); the reference PARSES OR
-            # via ifql-parser (cflux.js:691) then silently walks only
-            # ANDed conditions (cflux.js:737-743) — silently-empty.
-            # Here: a homogeneous disjunction of tag matchers or of
-            # field predicates becomes one or-group ANDed with the
-            # rest of the WHERE; anything mixed (or touching time)
-            # still rejects loudly.
-            tag_group: list[tuple[str, str, str]] = []
-            field_group: list[tuple] = []
-            for d in disjuncts:
-                while d.startswith("(") and d.endswith(")") and _parens_balanced(d[1:-1]):
-                    d = d[1:-1].strip()
-                if re.match(r"time\b", d, re.IGNORECASE):
-                    raise InfluxQLError(
-                        f"OR over time bounds is not supported ({cond!r})"
-                    )
-                fp = _parse_field_pred(d)
-                if fp is not None:
-                    field_group.append(fp)
-                    continue
-                tm_ = _parse_tag_matcher(d)
-                if tm_ is not None:
-                    tag_group.append(tm_)
-                    continue
-                raise InfluxQLError(f"unsupported OR disjunct {d!r} in {cond!r}")
-            if tag_group and field_group:
-                raise InfluxQLError(
-                    f"OR may not mix tag and field predicates ({cond!r}): a tag "
-                    "matcher filters series, a field predicate filters points"
-                )
-            if tag_group:
-                stmt.tag_or_groups.append(tag_group)
-            else:
-                stmt.field_or_groups.append(field_group)
-            continue
-        if re.fullmatch(r"time\s*(!=|<>)\s*.+", cond, re.IGNORECASE):
-            # InfluxDB has no time-inequality predicate; letting it
-            # fall through would read it as a FIELD named "time" and
-            # return silently empty (round 8)
-            raise InfluxQLError(f"time != is not valid InfluxQL ({cond!r})")
-        tm = re.fullmatch(r"time\s*(>=|<=|>|<|=)\s*(.+)", cond, re.IGNORECASE)
-        if tm:
-            op, val = tm.group(1), tm.group(2).strip()
-            rel = re.fullmatch(r"now\s*\(\s*\)\s*(?:-\s*(\S+))?", val, re.IGNORECASE)
-            if op == "=":
-                # exact-instant equality (round 8; previously parsed as
-                # a field predicate on a field named "time" — silently
-                # empty): canonicalize to the 1 ns half-open window
-                if rel:
-                    raise InfluxQLError(
-                        "time = now() is not supported; use a range"
-                    )
-                ns = _parse_time_value(val)
-                stmt.time_lo_ns = ns if stmt.time_lo_ns is None else max(stmt.time_lo_ns, ns)
-                stmt.time_hi_ns = (
-                    ns + 1 if stmt.time_hi_ns is None else min(stmt.time_hi_ns, ns + 1)
-                )
-                continue
-            if rel:
-                dur_s = int(_parse_duration(rel.group(1))) if rel.group(1) else 0
-                if op in (">", ">="):
-                    stmt.relative_s = dur_s
-                    stmt.relative_lo_inclusive = op == ">="
-                elif dur_s == 0:
-                    pass  # 'time < now()' — no-op upper bound (cflux.js:689 strips it; same, knowingly)
-                else:
-                    stmt.relative_hi_s = dur_s
-                    stmt.relative_hi_inclusive = op == "<="
-                continue
-            # absolute bounds canonicalize to half-open [lo, hi) in ns,
-            # so strict vs inclusive operators keep InfluxDB semantics
-            # (ts_ns is integer ns — the ±1 adjustment is exact)
-            ns = _parse_time_value(val)
-            if op == ">":
-                lo = ns + 1
-            elif op == ">=":
-                lo = ns
-            elif op == "<=":
-                hi = ns + 1
-            else:  # <
-                hi = ns
-            if op in (">", ">="):
-                stmt.time_lo_ns = lo if stmt.time_lo_ns is None else max(stmt.time_lo_ns, lo)
-            else:
-                stmt.time_hi_ns = hi if stmt.time_hi_ns is None else min(stmt.time_hi_ns, hi)
-            continue
-        # field-value predicates: ordering ops are always field
-        # comparisons (tags have no order), and =/!= with an UNQUOTED
-        # numeric or boolean literal is a field comparison too —
-        # InfluxQL's quoting rule: 'quoted' RHS → tag, bare number/
-        # bool → field value
-        fp = _parse_field_pred(cond)
-        if fp is not None:
-            stmt.field_filters.append(fp)
-            continue
-        tg = _parse_tag_matcher(cond)
-        if tg is not None:
-            stmt.tag_filters.append(tg)
-            continue
-        raise InfluxQLError(f"unsupported WHERE condition {cond!r}")
+    for name, value in vars(_parse_where(m.group("where") or "")).items():
+        setattr(stmt, name, value)
 
     groupby = m.group("groupby") or ""
     if groupby:
@@ -1690,12 +1732,12 @@ class InfluxQLEngine:
         return _envelope([])
 
     def _drop_series(self, qs: str, db: str | None) -> dict:
-        """``DROP SERIES FROM m [WHERE tag op 'v' [AND ...]]`` —
-        resolve the doomed fingerprint set from the registry (tag
-        matchers =, !=, =~, !~), then anti-join it out of facts and
-        registry (LPStore.delete_series). The fingerprint set stays a
-        DataFrame end-to-end — no driver materialization, so a drop
-        matching 10^7 series is still a broadcast of longs."""
+        """``DROP SERIES FROM m [WHERE tag matchers]`` — resolve the
+        doomed fingerprint set from the registry (``_series_where``),
+        then anti-join it out of facts and registry
+        (LPStore.delete_series). The fingerprint set stays a DataFrame
+        end-to-end — no driver materialization, so a drop matching
+        10^7 series is still a broadcast of longs."""
         m = re.fullmatch(
             r"\s*DROP\s+SERIES(?:\s+FROM\s+(?P<m>\"[^\"]+\"|\S+))?(?:\s+WHERE\s+(?P<w>.+?))?\s*",
             qs,
@@ -1705,43 +1747,28 @@ class InfluxQLEngine:
             # InfluxDB requires at least one of FROM/WHERE — a bare
             # DROP SERIES would silently nuke every series
             raise InfluxQLError(f"bad DROP SERIES (need FROM and/or WHERE): {qs!r}")
+        w = _series_where(m.group("w"), "DROP SERIES")
         store = self.store(db)
         reg = store.read_registry()
         if reg is None:
             return _envelope([])
-        sel = reg
-        if m.group("m") is not None:
-            # equality or FROM /regex/ (round 6 — InfluxDB allows the
-            # slash form here; comparing the literal slashes silently
-            # dropped nothing)
-            sel = _md.measurement_filter(sel, _unquote(m.group("m")))
-        if m.group("w"):
-            from cflux_spark.functions.scalars import label_matcher
-
-            # quote/paren-aware AND split + the shared matcher grammar:
-            # accepts '=~ /regex/' (round 6 — the old RHS pattern only
-            # took quoted strings, so slash regexes rejected loudly)
-            for cond in _split_on_and(m.group("w")):
-                cond = cond.strip()
-                while cond.startswith("(") and cond.endswith(")") and _parens_balanced(cond[1:-1]):
-                    cond = cond[1:-1].strip()
-                tm = _parse_tag_matcher(cond)
-                if tm is None or re.match(r"time\b", cond, re.IGNORECASE):
-                    raise InfluxQLError(f"DROP SERIES supports only tag matchers: {cond!r}")
-                key, op, val = tm
-                sel = sel.filter(
-                    label_matcher(F.element_at(F.col("tags"), key), op, val)
-                )
-        n = store.delete_series(sel.select("fingerprint"))
+        # FROM m or FROM /regex/ (round 6 — InfluxDB allows the slash
+        # form here; comparing the literal slashes dropped nothing)
+        meas = None if m.group("m") is None else _unquote(m.group("m"))
+        sel = _md.SparkRegistry(reg).from_measurement(meas).where(w.tag_filters, w.tag_or_groups)
+        n = store.delete_series(sel.df.select("fingerprint"))
         return _envelope(
             [_series("result", ["time", "partitions_rewritten"], [[0, n]])]
         )
 
     def _delete(self, qs: str, db: str | None) -> dict:
-        """``DELETE FROM m [WHERE time >= a AND time < b]`` — InfluxDB
-        1.x point deletion. Time bounds accept the same ns/ISO literals
-        as SELECT; no bounds deletes the whole measurement's points
-        (registry kept — series metadata outlives points until DROP)."""
+        """``DELETE FROM m [WHERE ...]`` — InfluxDB 1.x point deletion.
+        The WHERE takes SELECT's absolute time bounds and tag matchers
+        (``_series_where``); no bounds deletes the whole measurement's
+        points. Tag matchers narrow the deletion to the series they
+        select in the registry; registry rows are kept either way
+        (series metadata outlives points until DROP). ``FROM /regex/``
+        (round 6) deletes from every matching measurement."""
         m = re.fullmatch(
             r"\s*DELETE\s+FROM\s+(?P<m>\"[^\"]+\"|\S+)(?:\s+WHERE\s+(?P<w>.+?))?\s*",
             qs,
@@ -1749,89 +1776,32 @@ class InfluxQLEngine:
         )
         if not m:
             raise InfluxQLError(f"bad DELETE: {qs!r}")
-        lo_ns = hi_ns = None
-        tag_conds: list[tuple[str, str, str]] = []
-        if m.group("w"):
-            for cond in _split_on_and(m.group("w")):
-                cond = cond.strip()
-                while cond.startswith("(") and cond.endswith(")") and _parens_balanced(cond[1:-1]):
-                    cond = cond[1:-1].strip()
-                if not cond:
-                    continue
-                cm = re.fullmatch(
-                    r"\s*time\s*(?P<op>>=|>|<=|<)\s*(?P<v>'[^']*'|\S+)\s*", cond, re.IGNORECASE
-                )
-                if cm:
-                    ns = _parse_time_value(cm.group("v"))
-                    op = cm.group("op")
-                    # canonicalize to half-open [lo, hi) ns like SELECT
-                    if op in (">", ">="):
-                        lo_ns = ns + (1 if op == ">" else 0)
-                    else:
-                        hi_ns = ns + (1 if op == "<=" else 0)
-                    continue
-                tm = _parse_tag_matcher(cond)
-                if tm is None:
-                    raise InfluxQLError(
-                        f"DELETE supports time bounds and tag matchers: {cond!r}"
-                    )
-                tag_conds.append(tm)
+        w = _series_where(m.group("w"), "DELETE", absolute_time=True)
         store = self.store(db)
         meas = _unquote(m.group("m"))
-        if len(meas) >= 2 and meas.startswith("/") and meas.endswith("/"):
-            # DELETE FROM /regex/ (round 6; previously the literal
-            # slashes were compared and the statement silently deleted
-            # nothing): resolve matching measurements from the
-            # registry, delete each with the same bounds/matchers
-            reg = store.read_registry()
-            names: list[str] = []
-            if reg is not None:
-                pat = re.compile(meas[1:-1])
-                names = sorted(
-                    r.measurement
-                    for r in reg.select("measurement").distinct().collect()
-                    if pat.search(r.measurement)
-                )
-            dropped = rewritten = 0
-            for name in names:
-                st = self._delete_one(store, name, lo_ns, hi_ns, tag_conds)
-                dropped += st["partitions_dropped"]
-                rewritten += st["partitions_rewritten"]
-            return _envelope(
-                [_series("result", ["time", "partitions_dropped", "partitions_rewritten"],
-                         [[0, dropped, rewritten]])]
-            )
-        stats = self._delete_one(store, meas, lo_ns, hi_ns, tag_conds)
-        return _envelope(
-            [_series("result", ["time", "partitions_dropped", "partitions_rewritten"],
-                     [[0, stats["partitions_dropped"], stats["partitions_rewritten"]]])]
-        )
-
-    def _delete_one(
-        self,
-        store: LPStore,
-        meas: str,
-        lo_ns: int | None,
-        hi_ns: int | None,
-        tag_conds: list[tuple[str, str, str]],
-    ) -> dict:
-        fps = None
-        if tag_conds:
-            # tag-conditioned delete (round 5; previously rejected):
-            # resolve the doomed series set from the registry, then
-            # rewrite only the touched partitions with the broadcast
-            # fingerprint set (registry rows kept — DELETE semantics)
-            from cflux_spark.functions.scalars import label_matcher
-
+        names = [meas]
+        rx = _md.slash_regex(meas)
+        if rx is not None:
+            names = self._lookup(store.db, lambda r: r.measurements("=~", rx)) or []
+        reg = None
+        if w.tag_filters or w.tag_or_groups:
             reg = store.read_registry()
             if reg is None:
-                return {"partitions_dropped": 0, "partitions_rewritten": 0}
-            cond = F.col("measurement") == meas
-            for key, op, val in tag_conds:
-                cond = cond & label_matcher(F.element_at(F.col("tags"), key), op, val)
-            fps = reg.filter(cond).select("fingerprint")
-        return store.delete_where(
-            measurement=meas, lo_ns=lo_ns, hi_ns=hi_ns, fingerprints=fps
+                names = []
+        dropped = rewritten = 0
+        for name in names:
+            fps = None
+            if reg is not None:
+                sel = _md.SparkRegistry(reg).from_measurement(name)
+                fps = sel.where(w.tag_filters, w.tag_or_groups).df.select("fingerprint")
+            st = store.delete_where(
+                measurement=name, lo_ns=w.time_lo_ns, hi_ns=w.time_hi_ns, fingerprints=fps
+            )
+            dropped += st["partitions_dropped"]
+            rewritten += st["partitions_rewritten"]
+        return _envelope(
+            [_series("result", ["time", "partitions_dropped", "partitions_rewritten"],
+                     [[0, dropped, rewritten]])]
         )
 
     # ------------------------------------------------------------ metadata
@@ -1867,6 +1837,16 @@ class InfluxQLEngine:
         except re.error:
             return handler(*args, indexed=False)
 
+    def _lookup(self, db: str | None, answer: Callable):
+        """``answer(view)`` over ``db``'s registry view, or None when the
+        store has no registry: SHOW's ``_show_registry`` with ``_show``'s
+        fallback rule, for the registry lookups of other statements."""
+        def run(indexed: bool):
+            reg = self._show_registry(db, indexed)
+            return None if reg is None else answer(reg)
+
+        return self._show(run)
+
     def _show_databases(self) -> dict:
         import os
 
@@ -1876,28 +1856,16 @@ class InfluxQLEngine:
         return _envelope([_series("databases", ["name"], [[d] for d in dbs])])
 
     def _show_filter(self, reg, sc: _ShowClauses, meas: str | None = None):
-        """WHERE clause on SHOW statements: tag matchers ANDed, applied
-        to the registry (InfluxDB meta queries filter by series tags),
-        then ``FROM m`` / ``FROM /regex/``. Time/field conditions are
-        out of grammar — loud, never the silently-unfiltered results
-        this replaced (round 5). The condition text arrives pre-carved
-        by the quote-aware ``_parse_show`` (round 6 — the old
-        non-greedy regex truncated matchers whose quoted value
-        contained ' LIMIT 5')."""
-        matchers = []
-        for c in _split_on_and(sc.where) if sc.where is not None else []:
-            c = c.strip()
-            while c.startswith("(") and c.endswith(")") and _parens_balanced(c[1:-1]):
-                c = c[1:-1].strip()
-            if not c:
-                continue
-            tm = _parse_tag_matcher(c)
-            if tm is None or re.match(r"time\b", c, re.IGNORECASE):
-                raise InfluxQLError(
-                    f"SHOW ... WHERE supports tag matchers only, got {c!r}"
-                )
-            matchers.append(tm)
-        return reg.where(matchers).from_measurement(meas)
+        """WHERE clause on SHOW statements: the tag matchers and OR
+        groups of ``_series_where`` over the registry (InfluxDB meta
+        queries filter by series tags), then ``FROM m`` /
+        ``FROM /regex/``. Time bounds and field predicates reject. The
+        condition text arrives pre-carved by the quote-aware
+        ``_parse_show``."""
+        if sc.where is not None:
+            w = _series_where(sc.where, "SHOW")
+            reg = reg.where(w.tag_filters, w.tag_or_groups)
+        return reg.from_measurement(meas)
 
     def _show_measurements(self, qs: str, db: str | None, indexed: bool) -> dict:
         """SHOW MEASUREMENTS [WITH MEASUREMENT =~ /re/ | = name]
@@ -2222,9 +2190,11 @@ class InfluxQLEngine:
         if stmt.measurement_regex is not None:
             from dataclasses import replace as _replace
 
+            rx = stmt.measurement_regex
+            names = self._lookup(store.db, lambda r: r.measurements("=~", rx))
             subs = [
                 _replace(stmt, measurement=meas, measurement_regex=None)
-                for meas in self._regex_measurements(stmt, reg)
+                for meas in names or []
             ]
         plans = (self._plan_select(sub, store, reg) for sub in subs)
         if stmt.into is not None:
@@ -2243,19 +2213,6 @@ class InfluxQLEngine:
         if stmt.slimit is not None:
             series = series[: stmt.slimit]
         return _envelope(series)
-
-    @staticmethod
-    def _regex_measurements(stmt: SelectStmt, reg: DataFrame | None) -> list[str]:
-        """Measurements matching ``FROM /re/``, resolved from the
-        (small) registry."""
-        if reg is None:
-            return []
-        pat = re.compile(stmt.measurement_regex)
-        return sorted(
-            r.measurement
-            for r in reg.select("measurement").distinct().collect()
-            if pat.search(r.measurement)
-        )
 
     # ------------------------------------------------- retention policies
 
@@ -2517,22 +2474,12 @@ class InfluxQLEngine:
 
         # tag filters via the registry (J1 broadcast join); the four
         # matcher ops are the labelParser table (cflux.js:140-148)
-        if (stmt.tag_filters or stmt.tag_or_groups) and reg is not None:
-            from cflux_spark.functions.scalars import label_matcher
-
-            cond = None
-            for key, op, val in stmt.tag_filters:
-                c = label_matcher(F.element_at(F.col("tags"), key), op, val)
-                cond = c if cond is None else (cond & c)
-            # OR groups: each group is a disjunction of tag matchers,
-            # ANDed with the rest — one registry filter either way, so
-            # the fact-side plan is unchanged (single broadcast semi-join)
-            for group in stmt.tag_or_groups:
-                gcond = None
-                for key, op, val in group:
-                    c = label_matcher(F.element_at(F.col("tags"), key), op, val)
-                    gcond = c if gcond is None else (gcond | c)
-                cond = gcond if cond is None else (cond & gcond)
+        # OR groups are one registry filter too, so the fact-side plan
+        # is a single broadcast semi-join either way
+        cond = matcher_cond(
+            stmt.tag_filters, stmt.tag_or_groups, lambda key: F.element_at(F.col("tags"), key)
+        )
+        if cond is not None and reg is not None:
             slice_ = reg.filter(cond).select("fingerprint")
             facts = facts.join(F.broadcast(slice_.distinct()), "fingerprint", "left_semi")
 
@@ -2587,13 +2534,9 @@ class InfluxQLEngine:
             # GROUP BY * — every tag key the measurement's series carry
             if reg is None:
                 return None, [], []
-            gtags = sorted(
-                r.k
-                for r in reg.filter(F.col("measurement") == stmt.measurement)
-                .select(F.explode(F.map_keys("tags")).alias("k"))
-                .distinct()
-                .collect()
-            )
+            meas = stmt.measurement
+            keys = self._lookup(store.db, lambda r: r.from_measurement(meas).tag_keys())
+            gtags = [k for _m, k in keys or []]
         if gtags:
             if reg is None:
                 return None, [], []
@@ -3636,60 +3579,36 @@ class InfluxQLEngine:
         never-silently-wrong violation) compare the subquery's output
         column: WHERE mean_v > τ over SELECT ... AS mean_v is
         InfluxQL's HAVING idiom. Any other field name rejects loudly."""
-        if stmt.tag_filters or stmt.tag_or_groups:
-            from cflux_spark.functions.scalars import label_matcher
+        def _tagcol(key: str):
+            if key not in igtags:
+                raise InfluxQLError(
+                    f"outer tag filter on {key!r} requires the subquery to "
+                    f"GROUP BY {key!r} (grouped tags: {igtags or 'none'})"
+                )
+            return F.col(itkeys[igtags.index(key)])
 
-            def _tagcol(key: str):
-                if key not in igtags:
-                    raise InfluxQLError(
-                        f"outer tag filter on {key!r} requires the subquery to "
-                        f"GROUP BY {key!r} (grouped tags: {igtags or 'none'})"
-                    )
-                return F.col(itkeys[igtags.index(key)])
+        colmap = dict(outputs)
 
-            cond = None
-            for key, op, val in stmt.tag_filters:
-                c = label_matcher(_tagcol(key), op, val)
-                cond = c if cond is None else (cond & c)
-            for group in stmt.tag_or_groups:
-                gcond = None
-                for key, op, val in group:
-                    c = label_matcher(_tagcol(key), op, val)
-                    gcond = c if gcond is None else (gcond | c)
-                cond = gcond if cond is None else (cond & gcond)
-            inner_df = inner_df.filter(cond)
+        def _valcol(fname: str):
+            if fname not in colmap:
+                raise InfluxQLError(
+                    f"outer field filter on {fname!r} does not match "
+                    f"subquery output {sorted(colmap)}"
+                )
+            return F.col(colmap[fname])
 
-        if stmt.field_filters or stmt.field_or_groups:
-            colmap = dict(outputs)
-
-            def _valpred(fname, fop, fval):
-                if fname not in colmap:
-                    raise InfluxQLError(
-                        f"outer field filter on {fname!r} does not match "
-                        f"subquery output {sorted(colmap)}"
-                    )
-                if isinstance(fval, bool):
-                    raise InfluxQLError(
-                        "boolean field filters do not apply to subquery "
-                        "output (aggregates are numeric)"
-                    )
-                v = F.col(colmap[fname])
-                return {
-                    ">": v > fval, ">=": v >= fval, "<": v < fval,
-                    "<=": v <= fval, "=": v == fval, "!=": v != fval,
-                }[fop]
-
-            cond = None
-            for fname, fop, fval in stmt.field_filters:
-                c = _valpred(fname, fop, fval)
-                cond = c if cond is None else (cond & c)
-            for group in stmt.field_or_groups:
-                gcond = None
-                for fname, fop, fval in group:
-                    c = _valpred(fname, fop, fval)
-                    gcond = c if gcond is None else (gcond | c)
-                cond = gcond if cond is None else (cond & gcond)
-            inner_df = inner_df.filter(cond)
+        preds = [m for g in [stmt.field_filters, *stmt.field_or_groups] for m in g]
+        if any(isinstance(value, bool) for _f, _op, value in preds):
+            raise InfluxQLError(
+                "boolean field filters do not apply to subquery "
+                "output (aggregates are numeric)"
+            )
+        for cond in (
+            matcher_cond(stmt.tag_filters, stmt.tag_or_groups, _tagcol),
+            matcher_cond(stmt.field_filters, stmt.field_or_groups, _valcol),
+        ):
+            if cond is not None:
+                inner_df = inner_df.filter(cond)
         return inner_df
 
     _MAX_SUBQUERY_DEPTH = 8

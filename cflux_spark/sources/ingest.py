@@ -436,16 +436,29 @@ class LPStore:
         set (``DELETE FROM m WHERE host = 'a' [AND time ...]``): the
         doomed set is broadcast into each touched partition's rewrite
         — no O(1) drop shortcut (one series' rows spread across every
-        partition), same honest cost as delete_series."""
+        partition). An empty set deletes nothing and rewrites nothing.
+
+        Crash safety: a rewrite is written complete to ``_delete_tmp``,
+        the live partition is renamed aside to ``_delete_old`` (both
+        outside ``samples/``, where a leftover directory would break
+        partition discovery), the rewrite is renamed in, and only then
+        is the aside copy removed; a dropped partition is renamed aside
+        and removed. ``_recover_delete`` (run on store construction)
+        repairs a crash at any point: each partition reads all of its
+        rows from before the delete or all from after."""
         import shutil
-        from datetime import date, timedelta
+        from datetime import date
 
         DAY_NS = 86_400_000_000_000
         lo = lo_ns if lo_ns is not None else -(2**62)
         hi = hi_ns if hi_ns is not None else 2**62
         dropped = rewritten = 0
-        if not os.path.isdir(self.samples_path):
+        if not os.path.isdir(self.samples_path) or (
+            fingerprints is not None and fingerprints.isEmpty()
+        ):
             return {"partitions_dropped": 0, "partitions_rewritten": 0}
+        tmp_root, aside_root = self._delete_dirs
+        os.makedirs(aside_root, exist_ok=True)
         for entry in sorted(os.listdir(self.samples_path)):
             if not entry.startswith("date="):
                 continue
@@ -458,8 +471,10 @@ class LPStore:
             if part_hi <= lo or part_lo >= hi:
                 continue  # untouched
             part_dir = os.path.join(self.samples_path, entry)
+            aside = os.path.join(aside_root, entry)
             if measurement is None and fingerprints is None and lo <= part_lo and part_hi <= hi:
-                shutil.rmtree(part_dir)
+                os.rename(part_dir, aside)
+                shutil.rmtree(aside)
                 dropped += 1
                 continue
             dcond = (F.col("ts_ns") >= F.lit(lo)) & (F.col("ts_ns") < F.lit(hi))
@@ -477,75 +492,58 @@ class LPStore:
             kept = part.filter(~dcond)
             if fingerprints is not None:
                 kept = kept.drop("_doom")
-            # rewrite-aside OUTSIDE the partitioned root: a leftover
-            # tmp dir under samples/ would break partition discovery
-            # (compact() follows the same discipline)
-            tmp = os.path.join(self.root, self.db, "_delete_tmp", entry)
+            tmp = os.path.join(tmp_root, entry)
             (
                 kept.sortWithinPartitions("fingerprint", "ts_ns")
                 .write.mode("overwrite")
                 .parquet(tmp)
             )
-            shutil.rmtree(part_dir)
-            os.replace(tmp, part_dir)
+            os.rename(part_dir, aside)
+            os.rename(tmp, part_dir)
+            shutil.rmtree(aside)
             rewritten += 1
-        tmp_root = os.path.join(self.root, self.db, "_delete_tmp")
-        if os.path.isdir(tmp_root):
-            shutil.rmtree(tmp_root, ignore_errors=True)
+        for d in (tmp_root, aside_root):
+            shutil.rmtree(d, ignore_errors=True)
         return {"partitions_dropped": dropped, "partitions_rewritten": rewritten}
 
+    @property
+    def _delete_dirs(self) -> tuple[str, str]:
+        """``delete_where``'s rewrite and aside directories."""
+        base = os.path.join(self.root, self.db)
+        return os.path.join(base, "_delete_tmp"), os.path.join(base, "_delete_old")
+
     def _recover_delete(self) -> None:
-        """Finish an interrupted delete_where: a tmp rewrite whose
-        partition is already removed is moved into place; stale tmps
-        (partition still present — crash before the swap) are dropped,
-        leaving the pre-delete data intact."""
+        """Finish an interrupted ``delete_where``, per partition: absent
+        with a rewrite present, the rewrite is complete (the live copy
+        moves aside only after it is written) and is adopted; absent
+        with none, the aside copy was a drop, which is finished. A
+        rewrite whose partition is still live is unadopted and goes, as
+        does an aside copy the rewrite already replaced."""
         import shutil
 
-        tmp_root = os.path.join(self.root, self.db, "_delete_tmp")
-        if not os.path.isdir(tmp_root):
-            return
-        for entry in os.listdir(tmp_root):
-            src = os.path.join(tmp_root, entry)
-            dst = os.path.join(self.samples_path, entry)
-            if not os.path.exists(dst):
-                os.replace(src, dst)
-        shutil.rmtree(tmp_root, ignore_errors=True)
+        tmp_root, aside_root = self._delete_dirs
+        if os.path.isdir(tmp_root):
+            for entry in os.listdir(tmp_root):
+                dst = os.path.join(self.samples_path, entry)
+                if not os.path.exists(dst):
+                    os.replace(os.path.join(tmp_root, entry), dst)
+        for d in (tmp_root, aside_root):
+            shutil.rmtree(d, ignore_errors=True)
 
     def delete_series(self, fingerprints: DataFrame) -> int:
         """DROP SERIES support: remove all facts and registry rows for
         the given fingerprint set (a one-column ``fingerprint`` frame).
-
-        Facts: every date partition is rewritten with a broadcast
-        LEFT ANTI join — fingerprints of one series are spread across
-        all partitions, so unlike time-ranged deletes there is no O(1)
-        directory-drop shortcut; the anti-join is the honest cost
-        (InfluxDB pays it as tombstone compactions). The doomed set is
-        broadcast: facts never shuffle. Returns rewritten-partition
-        count."""
-        import shutil
-
-        doomed = F.broadcast(fingerprints.select("fingerprint").distinct())
-        rewritten = 0
-        if os.path.isdir(self.samples_path):
-            for entry in sorted(os.listdir(self.samples_path)):
-                if not entry.startswith("date="):
-                    continue
-                part_dir = os.path.join(self.samples_path, entry)
-                kept = self.spark.read.parquet(part_dir).join(
-                    doomed, "fingerprint", "left_anti"
-                )
-                tmp = os.path.join(self.root, self.db, "_delete_tmp", entry)
-                kept.sortWithinPartitions("fingerprint", "ts_ns").write.mode(
-                    "overwrite"
-                ).parquet(tmp)
-                shutil.rmtree(part_dir)
-                os.replace(tmp, part_dir)
-                rewritten += 1
-            tmp_root = os.path.join(self.root, self.db, "_delete_tmp")
-            if os.path.isdir(tmp_root):
-                shutil.rmtree(tmp_root, ignore_errors=True)
+        Facts go through ``delete_where``, whose every touched partition
+        is rewritten with the set broadcast (InfluxDB pays the same cost
+        as tombstone compactions); the registry is rewritten without
+        the set. Returns the rewritten-partition count; an empty set
+        rewrites nothing."""
+        if fingerprints.isEmpty():
+            return 0
+        rewritten = self.delete_where(fingerprints=fingerprints)["partitions_rewritten"]
         raw = self.read_registry_raw()
         if raw is not None:
+            doomed = F.broadcast(fingerprints.select("fingerprint").distinct())
             self._rewrite_registry(raw.join(doomed, "fingerprint", "left_anti"))
         return rewritten
 

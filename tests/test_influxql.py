@@ -2801,6 +2801,136 @@ def test_delete_with_tag_condition(spark, tmp_path):
     assert [v[1] for s in left2["results"][0]["series"] for v in s["values"]] == [0.3]
 
 
+def test_tag_matcher_takes_one_literal():
+    """A matcher's right-hand side is exactly one literal: a quoted
+    string, a /regex/ or a bare token. Text running on past it is no
+    matcher, so an OR or a paren group is never read as one matcher
+    whose value selects nothing."""
+    from cflux_spark.plans.influxql import _parse_tag_matcher
+
+    assert _parse_tag_matcher("host = 'a'") == ("host", "=", "a")
+    assert _parse_tag_matcher('"host" =~ /^a\\/b$/') == ("host", "=~", "^a\\/b$")
+    assert _parse_tag_matcher("host != web1") == ("host", "!=", "web1")
+    for cond in (
+        "host = 'a' OR host = 'b'",
+        "region = 'eu' AND host = 'a'",
+        "host =~ /a/ OR host =~ /b/",
+        "host = 'a' 'b'",
+    ):
+        assert _parse_tag_matcher(cond) is None, cond
+
+
+SERIES_LINES = [
+    f"cpu,host={h},region={r} v={i}.{d} {1704067200 + d * 86400}000000000"
+    for i, (h, r) in enumerate([("a", "eu"), ("b", "eu"), ("c", "us"), ("d", "us"), ("e", "eu")])
+    for d in range(2)
+]
+
+
+def _by_series(eng, db, where=""):
+    res = eng.execute(f"SELECT v FROM cpu {where} GROUP BY host, region", db=db)
+    return {
+        (s["tags"]["host"], s["tags"]["region"]): s["values"]
+        for s in res["results"][0].get("series", [])
+    }
+
+
+@pytest.mark.parametrize("verb", ["DELETE FROM cpu", "DROP SERIES FROM cpu"])
+def test_delete_and_drop_series_remove_what_select_selects(spark, tmp_path, verb):
+    """DELETE and DROP SERIES read WHERE with SELECT's grammar: OR
+    groups and paren groups remove exactly the series the same WHERE
+    selects in SELECT (they used to remove nothing)."""
+    root = str(tmp_path / "sel")
+    LPStore(spark, root, db="s").write_batch(
+        spark.createDataFrame([(l,) for l in SERIES_LINES], "line string")
+    )
+    eng = InfluxQLEngine(spark, root)
+    for where in (
+        "host = 'a' OR host = 'c'",
+        "(region = 'eu' AND host = 'b')",
+        "(host = 'd' OR host = 'e') AND region = 'eu'",
+    ):
+        before = _by_series(eng, "s")
+        selected = _by_series(eng, "s", f"WHERE {where}")
+        assert selected, where
+        eng.execute(f"{verb} WHERE {where}", db="s")
+        assert _by_series(eng, "s") == {k: v for k, v in before.items() if k not in selected}
+    assert list(_by_series(eng, "s")) == [("d", "us")]
+    keys = [v[0] for v in _values(eng.execute("SHOW SERIES", db="s"))]
+    # DROP SERIES also purges the registry; DELETE keeps series metadata
+    assert len(keys) == (1 if verb.startswith("DROP") else 5)
+
+
+def test_delete_where_time_equals(spark, tmp_path):
+    """DELETE takes SELECT's absolute time forms, ``time = t`` included
+    (it used to be read as a matcher on a tag named time)."""
+    root = str(tmp_path / "teq")
+    lines = [
+        "cpu,host=a v=1 1704067200000000000",
+        "cpu,host=a v=2 1704067230000000000",
+        "cpu,host=b v=3 1704067200000000000",
+        "cpu,host=b v=4 1704067230000000000",
+    ]
+    LPStore(spark, root, db="t").write_batch(spark.createDataFrame([(l,) for l in lines], "line string"))
+    eng = InfluxQLEngine(spark, root)
+    eng.execute("DELETE FROM cpu WHERE time = '2024-01-01T00:00:30Z' AND host = 'a'", db="t")
+    assert [v[1] for v in _values(eng.execute("SELECT v FROM cpu", db="t"))] == [1.0, 3.0, 4.0]
+    eng.execute("DELETE FROM cpu WHERE time = 1704067200000000000", db="t")
+    assert _values(eng.execute("SELECT v FROM cpu", db="t")) == [[1704067230000, 4.0]]
+
+
+@pytest.mark.parametrize(
+    "q",
+    [
+        "SHOW SERIES WHERE v = 1",
+        "SHOW TAG VALUES WITH KEY = host WHERE host = 'a' AND v > 0",
+        "DELETE FROM cpu WHERE v = 1",
+        "DELETE FROM cpu WHERE (v = 1 OR v = 2)",
+        "DROP SERIES FROM cpu WHERE v = 1",
+        "DROP SERIES WHERE host = 'a' AND time > 0",
+    ],
+)
+def test_series_statements_reject_field_predicates(spark, tmp_path, q):
+    """SHOW, DELETE and DROP SERIES select series by tag: a field
+    predicate (a bare number or boolean on the right) is an error, not
+    a tag matcher on a tag named after the field; SHOW and DROP SERIES
+    reject time bounds too."""
+    root = str(tmp_path / "rej")
+    LPStore(spark, root, db="r").write_batch(
+        spark.createDataFrame([("cpu,host=a v=1 1704067200000000000",)], "line string")
+    )
+    eng = InfluxQLEngine(spark, root)
+    with pytest.raises(InfluxQLError, match="tag matchers"):
+        eng.execute(q, db="r")
+    assert _values(eng.execute("SELECT v FROM cpu", db="r")) == [[1704067200000, 1.0]]
+
+
+def test_delete_selecting_no_series_rewrites_nothing(spark, tmp_path):
+    """A DELETE or DROP SERIES whose tag matchers select no series
+    answers 0 partitions and leaves every file as it was (it used to
+    rewrite every partition)."""
+    root = str(tmp_path / "none")
+    lines = [f"cpu,host=a v={d} {1704067200 + d * 86400}000000000" for d in range(3)]
+    store = LPStore(spark, root, db="n")
+    store.write_batch(spark.createDataFrame([(l,) for l in lines], "line string"))
+
+    def files():
+        return {
+            os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _dirs, names in os.walk(os.path.join(root, "n"))
+            for f in names
+        }
+
+    before = files()
+    assert sum(p.endswith(".parquet") and "date=" in p for p in before) == 3
+    eng = InfluxQLEngine(spark, root)
+    res = eng.execute("DELETE FROM cpu WHERE host = 'nosuch'", db="n")
+    assert _values(res) == [[0, 0, 0]]
+    res = eng.execute("DROP SERIES FROM cpu WHERE host = 'nosuch' OR region = 'x'", db="n")
+    assert _values(res) == [[0, 0]]
+    assert files() == before
+
+
 def test_regex_from_single_field_wildcard_limit_offset(spark, tmp_path):
     """round-7 ADVICE: SELECT * FROM /re/ over a SINGLE-field
     measurement applied OFFSET twice — once distributed in the

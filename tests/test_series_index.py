@@ -106,6 +106,12 @@ PARITY = [
     ("SHOW SERIES CARDINALITY", "nosuch"),
     ("SHOW TAG VALUES CARDINALITY WITH KEY = host", "nosuch"),
     ("SHOW MEASUREMENTS WHERE time > 0", "nosuch"),
+    # OR groups and paren groups: SELECT's WHERE grammar
+    ("SHOW TAG VALUES WITH KEY = host WHERE host = 'a' OR host = 'b'", "mydb"),
+    ("SHOW SERIES WHERE (region = 'eu' AND host = 'a')", "mydb"),
+    ("SHOW MEASUREMENTS WHERE (host = 'a' OR host = 'b') AND region = 'eu'", "mydb"),
+    # a row without host: its missing tag is null, and null OR true holds
+    ("SHOW SERIES WHERE host = 'b' OR region = 'eu'", "mydb"),
 ]
 
 
@@ -164,6 +170,15 @@ def test_index_and_spark_path_give_identical_envelopes(spark, root, monkeypatch)
     assert indexed["SHOW SERIES ON mydb", "qdb"]["results"][0]["series"][0]["values"] == [
         ["app,host=a"], ["cpu,host=a,region=eu"], ["cpu,host=b,region=us"], ["disk,region=eu"],
     ]
+    assert indexed["SHOW TAG VALUES WITH KEY = host WHERE host = 'a' OR host = 'b'", "mydb"][
+        "results"
+    ][0]["series"] == [
+        {"name": "app", "columns": ["key", "value"], "values": [["host", "a"]]},
+        {"name": "cpu", "columns": ["key", "value"], "values": [["host", "a"], ["host", "b"]]},
+    ]
+    assert indexed["SHOW SERIES WHERE host = 'b' OR region = 'eu'", "mydb"]["results"][0][
+        "series"
+    ][0]["values"] == [["cpu,host=a,region=eu"], ["cpu,host=b,region=us"], ["disk,region=eu"]]
 
 
 def test_show_reflects_writes_rewrites_and_drops(spark, tmp_path):
@@ -265,6 +280,32 @@ def test_perfbench_show_panels_run_no_spark_job(spark, tmp_path, monkeypatch):
     for q in shows:
         _res, jobs = count_jobs(spark, lambda: eng.execute(q, db="telegraf"))
         assert jobs > 0, q
+
+
+def test_select_registry_lookups_run_no_spark_job(spark, root, monkeypatch):
+    """``SELECT ... FROM /regex/`` expansion and ``GROUP BY *`` key
+    discovery look the registry up through the series index with no
+    Spark job; with the cap at 0 the same lookups run on Spark."""
+    eng = InfluxQLEngine(spark, root)
+    lookup = eng._lookup
+    jobs: list[int] = []
+
+    def counted(db, answer):
+        out, n = count_jobs(spark, lambda: lookup(db, answer))
+        jobs.append(n)
+        return out
+
+    monkeypatch.setattr(eng, "_lookup", counted)
+    for cap in ("index", "spark"):
+        jobs.clear()
+        res = eng.execute("SELECT mean(user) FROM /^c.u$|^app$/", db="mydb")
+        assert [s["name"] for s in res["results"][0]["series"]] == ["cpu"]
+        res = eng.execute("SELECT mean(user) FROM cpu GROUP BY *", db="mydb")
+        assert [s["tags"] for s in res["results"][0]["series"]] == [
+            {"host": "a", "region": "eu"}, {"host": "b", "region": "us"},
+        ]
+        assert len(jobs) == 2 and all((n == 0) == (cap == "index") for n in jobs), (cap, jobs)
+        monkeypatch.setattr(series_index, "SERIES_INDEX_MAX_ROWS", 0)
 
 
 def test_concurrent_show_while_registry_grows(spark, tmp_path):

@@ -5,6 +5,8 @@ mirroring."""
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cflux_spark.sources.ingest import LPStore
@@ -138,6 +140,64 @@ def test_compact_crash_recovery(spark, tmp_path):
     recovered2 = LPStore(spark, root, db="c")
     assert sorted(tuple(r) for r in recovered2.read_samples().collect()) == expect
     assert not pathlib.Path(store.samples_path + "._old").exists()
+
+
+@pytest.mark.parametrize(
+    "kind,fault", [("rewrite", "rmtree"), ("drop", "rmtree"), ("rewrite", "swap-in")]
+)
+def test_delete_crash_recovery(spark, tmp_path, monkeypatch, kind, fault):
+    """A crash inside ``delete_where`` — an rmtree that deletes one
+    file and fails, or a failed swap-in of the rewrite — leaves a state
+    the next store construction repairs: the partition reads all of its
+    rows from before the delete or all from after, never a part."""
+    import shutil
+
+    root = str(tmp_path / "store")
+    store = LPStore(spark, root, db="d")
+    for j in range(2):  # two writes: the one date partition holds two files
+        lines = [(f"m,host=h{j}{k} v={j}.{k} {1704067200 + k}000000000",) for k in range(3)]
+        store.write_batch(spark.createDataFrame(lines, "line string"), collect_stats=False)
+
+    def rows(s):
+        return sorted(tuple(r) for r in s.read_samples_or_empty().collect())
+
+    before = rows(store)
+    if kind == "rewrite":
+        lo = 1704067201 * 10**9
+        kwargs = {"measurement": "m", "lo_ns": lo}
+        after = sorted(tuple(r) for r in store.read_samples().collect() if r.ts_ns < lo)
+    else:
+        kwargs = {"lo_ns": 1704067200 * 10**9, "hi_ns": 1704153600 * 10**9}
+        after = []
+    assert len(before) == 6 and len(after) == (2 if kind == "rewrite" else 0)
+
+    real_rmtree, real_rename = shutil.rmtree, os.rename
+
+    def crash_rmtree(path, *a, **k):
+        for d, _dirs, names in os.walk(path):
+            for n in sorted(names):
+                if n.endswith(".parquet"):
+                    os.remove(os.path.join(d, n))
+                    raise OSError(f"injected crash in rmtree({path!r})")
+        raise OSError(f"injected crash in rmtree({path!r})")
+
+    def crash_rename(src, dst, *a, **k):
+        if "_delete_tmp" in str(src):
+            raise OSError("injected crash before the swap-in")
+        return real_rename(src, dst, *a, **k)
+
+    if fault == "rmtree":
+        monkeypatch.setattr(shutil, "rmtree", crash_rmtree)
+    else:
+        monkeypatch.setattr(os, "rename", crash_rename)
+    with pytest.raises(OSError, match="injected crash"):
+        store.delete_where(**kwargs)
+    monkeypatch.setattr(shutil, "rmtree", real_rmtree)
+    monkeypatch.setattr(os, "rename", real_rename)
+    recovered = LPStore(spark, root, db="d")  # __init__ runs recovery
+    assert rows(recovered) in (before, after)
+    assert not os.path.exists(os.path.join(root, "d", "_delete_tmp"))
+    assert not os.path.exists(os.path.join(root, "d", "_delete_old"))
 
 
 def test_registry_rewrite_crash_recovery(spark, tmp_path):
