@@ -67,11 +67,6 @@ class CFluxApp:
         self.forward_errors: deque[str] = deque(maxlen=self.FORWARD_ERRORS_KEPT)
         self.forward_errors_total = 0
         self._forward_errors_lock = threading.Lock()
-        # single-writer rule enforced in-process: concurrent write_batch
-        # calls to one store race on the registry anti-join, so /write
-        # serializes here even under a threaded WSGI server. Cross-
-        # PROCESS deployments still need one writer per store root.
-        self._write_lock = threading.Lock()
 
     # ------------------------------------------------------------- WSGI
 
@@ -126,7 +121,8 @@ class CFluxApp:
         self._forward(db, raw)
         lines = [(l,) for l in body.split("\n") if l.strip()]
         if lines:
-            with self._write_lock:
+            # the engine's single writer (write_batch races on the registry)
+            with self.engine.write_lock:
                 store = self.engine.store(db)
                 df = self.spark.createDataFrame(lines, "line string")
                 try:
@@ -224,10 +220,8 @@ class _QuietHandler(WSGIRequestHandler):
 def serve(spark: SparkSession, root: str, host: str = "127.0.0.1", port: int = 0):
     """Start a dev/test HTTP server; returns (server, app, bound_port).
     Run ``server.serve_forever()`` (e.g. in a thread). Requests are
-    served serially — deliberate: concurrent ``write_batch`` calls to
-    one store would race on the registry anti-join. Production mounts
-    ``CFluxApp`` under a real WSGI server with a single writer per db
-    (SURVEY §7 'streaming registry upsert races — single-writer')."""
+    served serially; a threaded WSGI mount of ``CFluxApp`` still runs
+    one writer per engine (``InfluxQLEngine.write_lock``)."""
     app = CFluxApp(spark, root)
     server = make_server(host, port, app, server_class=WSGIServer, handler_class=_QuietHandler)
     return server, app, server.server_port

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cflux_spark.sources import commit
+
 
 def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """X1 — keep the lowest id per exact text. groupBy(min) rather than
@@ -837,6 +839,7 @@ class MinHashIndex:
 
         self.spark = spark
         self.path = path.rstrip("/")
+        commit.recover(self.path)
         with open(os.path.join(self.path, "meta.json")) as fh:
             meta = json.load(fh)
         self.n = int(meta["n"])
@@ -894,30 +897,16 @@ class MinHashIndex:
         signature twice — both only cost scan time, but a
         long-running streaming index should compact periodically.
         Dedups by doc_id (signatures of a given doc are identical by
-        construction — same text, same hash family) and rewrites via
-        a temp directory + atomic swap so concurrent probes never see
-        a half-written table. Returns the compacted row count.
-
-        The swap relies on POSIX rename atomicity (``os.replace``) —
-        correct on local/NFS/HDFS-mounted stores; on an OBJECT store
-        (S3A et al.) rename is copy+delete and NOT atomic, so there
-        compact during a probe-quiet window or front the table with a
-        manifest pointer instead."""
-        import os
-        import shutil
-
+        construction — same text, same hash family) and swaps the
+        rewrite in through the store's commit protocol
+        (``sources/commit.py``), which ``__init__`` recovers. Returns
+        the compacted row count. On an object store (S3A et al.) rename
+        is copy+delete, so compact there in a probe-quiet window."""
         sig = self.signatures().groupBy("doc_id").agg(
             *[F.expr(f"first(h{i}) AS h{i}") for i in range(self.num_hashes)]
         )
-        tmp = self.path + "/signatures.compact"
-        sig.write.mode("overwrite").parquet(tmp)
-        n = self.spark.read.parquet(tmp).count()
-        old = self.path + "/signatures.old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.replace(self.path + "/signatures", old)
-        os.replace(tmp, self.path + "/signatures")
-        shutil.rmtree(old, ignore_errors=True)
-        return n
+        commit.replace_dir(self.path, "signatures", sig.write.parquet)
+        return self.signatures().count()
 
     def probe(
         self,

@@ -45,9 +45,10 @@ Grafana emits it for non-UTC dashboards).
 from __future__ import annotations
 
 import re
+import threading
 from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
-from functools import reduce
+from functools import reduce, wraps
 from itertools import islice
 
 from pyspark.sql import Column, DataFrame
@@ -1467,6 +1468,23 @@ class _OuterLevel(NamedTuple):
     series_kept: bool
 
 
+def _writes(method):
+    """Run an ``InfluxQLEngine`` method under its ``write_lock``. When
+    it fails, a commit may have stopped midway, so every store is
+    reopened, and so recovered, on its next use."""
+
+    @wraps(method)
+    def locked(self, *args, **kwargs):
+        with self.write_lock:
+            try:
+                return method(self, *args, **kwargs)
+            except BaseException:
+                self._stores.clear()
+                raise
+
+    return locked
+
+
 class InfluxQLEngine:
     """Executes the statement surface against LPStore-backed databases."""
 
@@ -1499,14 +1517,18 @@ class InfluxQLEngine:
         # EXPLAIN capture (round 9): thread-local so a dashboard's
         # concurrent statements on one engine can't cross-capture
         # (the 32-thread fan-in regime, scripts/concurrency_probe.py)
-        import threading
-
         self._explain_local = threading.local()
         # db → driver-side series index answering the SHOW
         # family (sources/series_index.py); the lock guards the dict,
         # each index locks its own refresh
         self._series_indexes: dict[str, SeriesIndex] = {}
         self._series_index_lock = threading.Lock()
+        # the single writer, even under a threaded WSGI mount: /write
+        # and every mutating statement hold it, so no commit races a
+        # write, and store recovery never runs beside a commit.
+        # Reentrant: a CQ run writes through SELECT ... INTO.
+        self.write_lock = threading.RLock()
+        self._stores: dict[str, LPStore] = {}
 
     def _bounded_collect(self, df: DataFrame) -> list:
         """Collect for envelope assembly with a loud cap. The result
@@ -1534,6 +1556,7 @@ class InfluxQLEngine:
             )
         return rows
 
+    @_writes
     def _write_samples_or_capture(self, target: LPStore, out: DataFrame) -> dict:
         """The write sink's twin of ``_bounded_collect``: write the
         sample rows, or under EXPLAIN record the write frame's Catalyst
@@ -1547,10 +1570,17 @@ class InfluxQLEngine:
         return target.write_samples(out)
 
     def store(self, db: str | None) -> LPStore:
-        try:
-            return LPStore(self.spark, self.root, db=db or "default")
-        except ValueError as exc:  # bad db name → client error, not a 500
-            raise InfluxQLError(str(exc)) from None
+        """The db's store, opened (so recovered) under ``write_lock``,
+        once per engine."""
+        name = db or "default"
+        store = self._stores.get(name)
+        if store is None:
+            with self.write_lock:
+                try:
+                    store = self._stores.setdefault(name, LPStore(self.spark, self.root, db=name))
+                except ValueError as exc:  # bad db name → client error, not a 500
+                    raise InfluxQLError(str(exc)) from None
+        return store
 
     def _stmt_store(self, stmt: SelectStmt, db: str | None) -> LPStore:
         """Resolve a SELECT's target store, disambiguating a two-part
@@ -1682,6 +1712,7 @@ class InfluxQLEngine:
 
     # ------------------------------------------------------------ deletion
 
+    @_writes
     def _drop_measurement(self, qs: str, db: str | None) -> dict:
         """``DROP MEASUREMENT "m"`` — delete the measurement's facts
         (partition-targeted, LPStore.delete_where) and purge its
@@ -1703,6 +1734,7 @@ class InfluxQLEngine:
         store.purge_registry(meas)
         return _envelope([])
 
+    @_writes
     def _drop_database(self, qs: str) -> dict:
         """``DROP DATABASE name`` — removes the database directory
         (facts + registry) and its control-table entries (retention
@@ -1724,6 +1756,7 @@ class InfluxQLEngine:
         if not target.startswith(os.path.realpath(self.root) + os.sep):
             raise InfluxQLError(f"invalid database name: {name!r}")
         shutil.rmtree(target, ignore_errors=True)
+        self._stores.pop(name, None)
         with self._series_index_lock:
             self._series_indexes.pop(name, None)
         self.retention_policies.pop(name, None)
@@ -1731,6 +1764,7 @@ class InfluxQLEngine:
         self.continuous_queries.pop(name, None)
         return _envelope([])
 
+    @_writes
     def _drop_series(self, qs: str, db: str | None) -> dict:
         """``DROP SERIES FROM m [WHERE tag matchers]`` — resolve the
         doomed fingerprint set from the registry (``_series_where``),
@@ -1761,6 +1795,7 @@ class InfluxQLEngine:
             [_series("result", ["time", "partitions_rewritten"], [[0, n]])]
         )
 
+    @_writes
     def _delete(self, qs: str, db: str | None) -> dict:
         """``DELETE FROM m [WHERE ...]`` — InfluxDB 1.x point deletion.
         The WHERE takes SELECT's absolute time bounds and tag matchers
@@ -2261,6 +2296,7 @@ class InfluxQLEngine:
             [_series("retention policies", ["name", "duration", "shardGroupDuration", "replicaN", "default"], rows)]
         )
 
+    @_writes
     def enforce_retention_policies(self, db: str | None = None, now=None) -> dict[str, list[str]]:
         """Drop expired date partitions per each db's DEFAULT policy
         (duration 0 = keep forever). Returns {db: dropped partitions}.
@@ -2327,6 +2363,7 @@ class InfluxQLEngine:
         self.continuous_queries.get(target_db, {}).pop(name, None)
         return _envelope([])
 
+    @_writes
     def run_continuous_queries(self, db: str | None = None) -> dict[str, int]:
         """Execute registered CQs incrementally: each run materializes
         only COMPLETE buckets in [watermark, floor(max_source_ts+1,

@@ -20,27 +20,41 @@ Arrow-batched. At 100 TB the parse is embarrassingly parallel
 (per-line), and every downstream op is a narrow transformation until
 the registry anti-join (whose right side is the distinct-fingerprint
 set — small relative to facts, broadcastable).
+
+Every mutation but an append commits through ``sources/commit.py``.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 from collections.abc import Iterator
+from datetime import date
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from cflux_spark.model.fingerprint import NAME_LABEL
-from cflux_spark.model.schemas import PARSED_LINE_SCHEMA
+from cflux_spark.model.schemas import PARSED_LINE_SCHEMA, SAMPLES_SCHEMA
+from cflux_spark.sources import commit
 from cflux_spark.sources.lineprotocol import parse_line
 from cflux_spark.sources.series_index import registry_files
 
-# epoch(ns) to use when a line carries no timestamp; injected as a
-# literal so the whole batch is deterministic & testable (the reference
-# stamps arrival time, cflux.js:360).
-_INGEST_TS_COL = "_ingest_ts_ns"
+_DAY_NS = 86_400_000_000_000
+
+
+def _day_ns(d: date) -> int:
+    """Epoch ns at the start of UTC day ``d``."""
+    return (d - date(1970, 1, 1)).days * _DAY_NS
+
+
+def _doomed_set(fingerprints: DataFrame) -> DataFrame:
+    """A fingerprint set, distinct and broadcast for a join into facts
+    or registry."""
+    return F.broadcast(fingerprints.select("fingerprint").distinct())
 
 
 def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -230,23 +244,28 @@ class LPStore:
 
     facts at  <root>/<db>/samples/      (parquet, partitioned by date)
     registry  <root>/<db>/time_series/  (parquet, append; dedup on read)
+    staging   <root>/<db>/_commit/      (``sources/commit.py``)
+
+    Writes append files; rewrites and drops commit one directory (a
+    ``date=`` partition or the registry) at a time, and construction
+    runs ``commit.recover``. One writer per store (in one process, the
+    engine's ``write_lock``).
     """
 
     def __init__(self, spark: SparkSession, root: str, db: str = "default"):
         self.spark = spark
         self.root = root
         self.db = validate_db_name(db)
-        self._recover_compact()
-        self._recover_delete()
-        self._recover_registry()
+        self.base = os.path.join(root, self.db)
+        commit.recover(self.base)
 
     @property
     def samples_path(self) -> str:
-        return os.path.join(self.root, self.db, "samples")
+        return os.path.join(self.base, "samples")
 
     @property
     def registry_path(self) -> str:
-        return os.path.join(self.root, self.db, "time_series")
+        return os.path.join(self.base, "time_series")
 
     def write_batch(
         self,
@@ -331,58 +350,15 @@ class LPStore:
         MergeTree-merge / OPTIMIZE analogue. Streaming appends produce
         one small file per (micro-batch × date); compaction restores
         scan efficiency and re-establishes the sort for row-group
-        skipping. Returns the number of partitions rewritten.
+        skipping. One partition at a time, each its own commit, so the
+        hot partition can be compacted on its own cadence without
+        copying the table. Returns the number of partitions rewritten."""
+        parts = [entry for entry, _d, _covered in self._date_partitions()]
+        for entry in parts:
+            self._rewrite_partition(entry, target_file_mb=target_file_mb)
+        return len(parts)
 
-        Crash safety: the new data is written to a ``._compact``
-        sibling, the live directory is renamed ASIDE (``._old``), the
-        sibling renamed in, and only then is the old data deleted — a
-        crash at any point leaves a recoverable state that
-        ``_recover_compact`` (run on store construction) repairs. The
-        brief window between the two renames is not atomic for
-        concurrent readers; single-writer maintenance is assumed."""
-        import shutil
-
-        if not os.path.isdir(self.samples_path):
-            return 0
-        df = self.read_samples()
-        dates = [r.date for r in df.select("date").distinct().collect()]
-        tmp_path = self.samples_path + "._compact"
-        old_path = self.samples_path + "._old"
-        bytes_total = sum(
-            f.stat().st_size for f in __import__("pathlib").Path(self.samples_path).rglob("*.parquet")
-        )
-        n_files = max(1, bytes_total // (target_file_mb * 1024 * 1024))
-        (
-            df.repartitionByRange(int(n_files), "date", "fingerprint")
-            .sortWithinPartitions("fingerprint", "ts")
-            .write.mode("overwrite")
-            .partitionBy("date")
-            .parquet(tmp_path)
-        )
-        os.rename(self.samples_path, old_path)
-        os.rename(tmp_path, self.samples_path)
-        shutil.rmtree(old_path)
-        return len(dates)
-
-    def _recover_compact(self) -> None:
-        """Repair any state a crash mid-``compact()`` left behind.
-        Invariant: the original data survives until the rewritten copy
-        is in place, so recovery always restores a readable store."""
-        import shutil
-
-        samples = self.samples_path
-        old, tmp = samples + "._old", samples + "._compact"
-        if not os.path.isdir(samples) and os.path.isdir(old):
-            # crashed between rename-aside and swap-in: restore original
-            os.rename(old, samples)
-        if os.path.isdir(samples) and os.path.isdir(old):
-            # crashed after swap-in, before cleanup: new data is live
-            shutil.rmtree(old)
-        if os.path.isdir(tmp):
-            # incomplete (or superseded) compaction output
-            shutil.rmtree(tmp)
-
-    def enforce_retention(self, keep_days: float, now: "date | None" = None) -> list[str]:
+    def enforce_retention(self, keep_days: float, now: date | None = None) -> list[str]:
         """Drop whole date partitions older than ``now - keep_days`` —
         the InfluxDB retention-policy enforcement step, expressed as
         the O(1)-per-partition directory drop the date partitioning
@@ -390,23 +366,13 @@ class LPStore:
         partitions by time, cflux.js:152). Registry rows are kept:
         series metadata outlives expired points, as in InfluxDB until a
         DROP SERIES. Returns the dropped partition names."""
-        import shutil
-        from datetime import date, timedelta
+        from datetime import timedelta
 
         cutoff = (now or date.today()) - timedelta(days=keep_days)
-        dropped: list[str] = []
-        if not os.path.isdir(self.samples_path):
-            return dropped
-        for entry in sorted(os.listdir(self.samples_path)):
-            if not entry.startswith("date="):
-                continue
-            try:
-                d = date.fromisoformat(entry.split("=", 1)[1])
-            except ValueError:
-                continue
-            if d < cutoff:
-                shutil.rmtree(os.path.join(self.samples_path, entry))
-                dropped.append(entry)
+        parts = self._date_partitions(hi_ns=_day_ns(cutoff))
+        dropped = [entry for entry, _d, covered in parts if covered]
+        for entry in dropped:
+            commit.drop_dir(self.base, os.path.join("samples", entry))
         return dropped
 
     def delete_where(
@@ -417,48 +383,51 @@ class LPStore:
         fingerprints: "DataFrame | None" = None,
     ) -> dict[str, int]:
         """Targeted deletion (InfluxDB ``DELETE FROM m WHERE time ...``
-        / ``DROP MEASUREMENT``): per date partition —
+        / ``DROP MEASUREMENT``): date partitions wholly inside the time
+        range, with no measurement or series filter, are O(1) directory
+        drops (retention's walk and drop); of the others, one Spark job
+        finds those that hold a doomed row, and only they are rewritten.
+        A delete that dooms no row touches no file, and a time-ranged
+        one never rewrites the table. Registry rows are kept (series
+        metadata outlives points, as in InfluxDB); DROP MEASUREMENT
+        purges them via ``purge_registry``.
 
-        - partitions wholly OUTSIDE the time range: untouched (free);
-        - partitions wholly INSIDE it, with no measurement filter:
-          O(1) directory drop (same machinery as retention);
-        - everything else: filtered rewrite of ONLY the touched
-          partitions, written aside and atomically moved into place.
-
-        At 100 TB a time-ranged delete touches at most two edge
-        partitions plus O(1) drops — never a full-table rewrite.
-        Registry rows are kept for DELETE (series metadata outlives
-        points, as in InfluxDB); DROP MEASUREMENT purges them via
-        ``purge_registry``. Single-writer discipline applies (same rule
-        as write_batch).
-
-        ``fingerprints`` (round 5) narrows the deletion to a series
-        set (``DELETE FROM m WHERE host = 'a' [AND time ...]``): the
-        doomed set is broadcast into each touched partition's rewrite
-        — no O(1) drop shortcut (one series' rows spread across every
-        partition). An empty set deletes nothing and rewrites nothing.
-
-        Crash safety: a rewrite is written complete to ``_delete_tmp``,
-        the live partition is renamed aside to ``_delete_old`` (both
-        outside ``samples/``, where a leftover directory would break
-        partition discovery), the rewrite is renamed in, and only then
-        is the aside copy removed; a dropped partition is renamed aside
-        and removed. ``_recover_delete`` (run on store construction)
-        repairs a crash at any point: each partition reads all of its
-        rows from before the delete or all from after."""
-        import shutil
-        from datetime import date
-
-        DAY_NS = 86_400_000_000_000
+        ``fingerprints`` narrows the deletion to a series set
+        (``DELETE FROM m WHERE host = 'a'``), broadcast into each
+        rewrite; it disables the drop shortcut (one series' rows spread
+        across every partition)."""
         lo = lo_ns if lo_ns is not None else -(2**62)
         hi = hi_ns if hi_ns is not None else 2**62
-        dropped = rewritten = 0
-        if not os.path.isdir(self.samples_path) or (
-            fingerprints is not None and fingerprints.isEmpty()
-        ):
-            return {"partitions_dropped": 0, "partitions_rewritten": 0}
-        tmp_root, aside_root = self._delete_dirs
-        os.makedirs(aside_root, exist_ok=True)
+        drop = measurement is None and fingerprints is None
+        candidates = {}
+        dropped = 0
+        for entry, d, covered in self._date_partitions(lo, hi):
+            if drop and covered:
+                commit.drop_dir(self.base, os.path.join("samples", entry))
+                dropped += 1
+            else:
+                candidates[d] = entry
+        doomed = (F.col("ts_ns") >= F.lit(lo)) & (F.col("ts_ns") < F.lit(hi))
+        if measurement is not None:
+            doomed = doomed & (F.col("measurement") == measurement)
+        hit: list[date] = []
+        if candidates:
+            rows = self.read_samples().filter(F.col("date").isin(list(candidates)) & doomed)
+            if fingerprints is not None:
+                rows = rows.join(_doomed_set(fingerprints), "fingerprint", "left_semi")
+            hit = sorted(r.date for r in rows.select("date").distinct().collect())
+        for d in hit:
+            self._rewrite_partition(candidates[d], doomed, fingerprints)
+        return {"partitions_dropped": dropped, "partitions_rewritten": len(hit)}
+
+    def _date_partitions(
+        self, lo_ns: int = -(2**62), hi_ns: int = 2**62
+    ) -> Iterator[tuple[str, date, bool]]:
+        """``(entry, date, covered)`` for each ``date=`` partition that
+        overlaps ``[lo_ns, hi_ns)``, in date order; ``covered`` when the
+        range holds the partition's whole day."""
+        if not os.path.isdir(self.samples_path):
+            return
         for entry in sorted(os.listdir(self.samples_path)):
             if not entry.startswith("date="):
                 continue
@@ -466,69 +435,39 @@ class LPStore:
                 d = date.fromisoformat(entry.split("=", 1)[1])
             except ValueError:
                 continue
-            part_lo = int((d - date(1970, 1, 1)).total_seconds()) * 1_000_000_000
-            part_hi = part_lo + DAY_NS
-            if part_hi <= lo or part_lo >= hi:
-                continue  # untouched
-            part_dir = os.path.join(self.samples_path, entry)
-            aside = os.path.join(aside_root, entry)
-            if measurement is None and fingerprints is None and lo <= part_lo and part_hi <= hi:
-                os.rename(part_dir, aside)
-                shutil.rmtree(aside)
-                dropped += 1
-                continue
-            dcond = (F.col("ts_ns") >= F.lit(lo)) & (F.col("ts_ns") < F.lit(hi))
-            if measurement is not None:
-                dcond = dcond & (F.col("measurement") == measurement)
-            part = self.spark.read.parquet(part_dir)
-            if fingerprints is not None:
-                doomed = F.broadcast(
-                    fingerprints.select("fingerprint")
-                    .distinct()
-                    .withColumn("_doom", F.lit(True))
-                )
-                part = part.join(doomed, "fingerprint", "left")
-                dcond = dcond & F.col("_doom").isNotNull()
-            kept = part.filter(~dcond)
-            if fingerprints is not None:
-                kept = kept.drop("_doom")
-            tmp = os.path.join(tmp_root, entry)
-            (
-                kept.sortWithinPartitions("fingerprint", "ts_ns")
-                .write.mode("overwrite")
-                .parquet(tmp)
+            part_lo = _day_ns(d)
+            part_hi = part_lo + _DAY_NS
+            if part_lo < hi_ns and lo_ns < part_hi:
+                yield entry, d, lo_ns <= part_lo and part_hi <= hi_ns
+
+    def _rewrite_partition(
+        self,
+        entry: str,
+        doomed: Column | None = None,
+        fingerprints: DataFrame | None = None,
+        target_file_mb: int = 128,
+    ) -> None:
+        """Rewrite one date partition without its ``doomed`` rows (of
+        the ``fingerprints`` series, when given) into size-targeted
+        files sorted by (fingerprint, ts_ns) — the one rewrite behind
+        compaction, which dooms none, and DELETE."""
+        part_dir = os.path.join(self.samples_path, entry)
+        part = self.spark.read.parquet(part_dir)
+        if fingerprints is not None:
+            part = part.join(
+                _doomed_set(fingerprints).withColumn("_doom", F.lit(True)), "fingerprint", "left"
             )
-            os.rename(part_dir, aside)
-            os.rename(tmp, part_dir)
-            shutil.rmtree(aside)
-            rewritten += 1
-        for d in (tmp_root, aside_root):
-            shutil.rmtree(d, ignore_errors=True)
-        return {"partitions_dropped": dropped, "partitions_rewritten": rewritten}
-
-    @property
-    def _delete_dirs(self) -> tuple[str, str]:
-        """``delete_where``'s rewrite and aside directories."""
-        base = os.path.join(self.root, self.db)
-        return os.path.join(base, "_delete_tmp"), os.path.join(base, "_delete_old")
-
-    def _recover_delete(self) -> None:
-        """Finish an interrupted ``delete_where``, per partition: absent
-        with a rewrite present, the rewrite is complete (the live copy
-        moves aside only after it is written) and is adopted; absent
-        with none, the aside copy was a drop, which is finished. A
-        rewrite whose partition is still live is unadopted and goes, as
-        does an aside copy the rewrite already replaced."""
-        import shutil
-
-        tmp_root, aside_root = self._delete_dirs
-        if os.path.isdir(tmp_root):
-            for entry in os.listdir(tmp_root):
-                dst = os.path.join(self.samples_path, entry)
-                if not os.path.exists(dst):
-                    os.replace(os.path.join(tmp_root, entry), dst)
-        for d in (tmp_root, aside_root):
-            shutil.rmtree(d, ignore_errors=True)
+            doomed = doomed & F.col("_doom").isNotNull()
+        size = sum(e.stat().st_size for e in os.scandir(part_dir) if e.is_file())
+        n_files = max(1, size // (target_file_mb * 1024 * 1024))
+        kept = part if doomed is None else part.filter(~doomed).drop("_doom")
+        commit.replace_dir(
+            self.base,
+            os.path.join("samples", entry),
+            kept.repartitionByRange(int(n_files), "fingerprint")
+            .sortWithinPartitions("fingerprint", "ts_ns")
+            .write.parquet,
+        )
 
     def delete_series(self, fingerprints: DataFrame) -> int:
         """DROP SERIES support: remove all facts and registry rows for
@@ -543,59 +482,20 @@ class LPStore:
         rewritten = self.delete_where(fingerprints=fingerprints)["partitions_rewritten"]
         raw = self.read_registry_raw()
         if raw is not None:
-            doomed = F.broadcast(fingerprints.select("fingerprint").distinct())
-            self._rewrite_registry(raw.join(doomed, "fingerprint", "left_anti"))
+            kept = raw.join(_doomed_set(fingerprints), "fingerprint", "left_anti")
+            commit.replace_dir(self.base, "time_series", kept.write.parquet)
         return rewritten
 
     def purge_registry(self, measurement: str) -> None:
         """Remove a measurement's series metadata (DROP MEASUREMENT
         companion). The registry is orders of magnitude smaller than
-        facts — a filtered rewrite-aside is the honest cost."""
+        facts — a filtered rewrite is the honest cost, paid only when
+        the measurement has a registry row."""
         raw = self.read_registry_raw()
-        if raw is None:
+        if raw is None or raw.filter(F.col("measurement") == measurement).isEmpty():
             return
-        self._rewrite_registry(raw.filter(F.col("measurement") != measurement))
-
-    def _rewrite_registry(self, kept: DataFrame) -> None:
-        """Crash-safe registry rewrite — the compact() swap discipline:
-        write the new copy aside, move the old registry aside, swap the
-        new one in, THEN delete the old. The original metadata survives
-        on disk until the rewrite is live, so a crash at any point
-        leaves a state ``_recover_registry`` restores (the naive
-        rmtree-then-replace had a window that lost ALL series
-        metadata)."""
-        import shutil
-
-        tmp = self.registry_path + ".rewrite"
-        old = self.registry_path + "._old"
-        kept.write.mode("overwrite").parquet(tmp)
-        os.rename(self.registry_path, old)
-        os.rename(tmp, self.registry_path)
-        shutil.rmtree(old)
-
-    def _recover_registry(self) -> None:
-        """Repair a crash mid-``_rewrite_registry``. Mirrors
-        ``_recover_compact``: rewrite-complete states adopt the new
-        copy, earlier crashes keep the original; either way the store
-        comes back with a readable registry."""
-        import shutil
-
-        reg = self.registry_path
-        old, tmp = reg + "._old", reg + ".rewrite"
-        if not os.path.isdir(reg) and os.path.isdir(old):
-            # crashed between move-aside and swap-in: the tmp copy is
-            # complete (we only move aside after its write finishes)
-            if os.path.isdir(tmp):
-                os.rename(tmp, reg)
-            else:
-                os.rename(old, reg)
-        if os.path.isdir(reg) and os.path.isdir(old):
-            # crashed after swap-in, before cleanup: new registry live
-            shutil.rmtree(old)
-        if os.path.isdir(tmp):
-            # crash before move-aside (possibly mid-write): original
-            # registry still live; the tmp is unadopted — discard
-            shutil.rmtree(tmp)
+        kept = raw.filter(F.col("measurement") != measurement)
+        commit.replace_dir(self.base, "time_series", kept.write.parquet)
 
     def read_registry_raw(self) -> DataFrame | None:
         """The registry's appended rows; None only when the registry
@@ -614,12 +514,18 @@ class LPStore:
         return self.spark.read.parquet(self.samples_path)
 
     def read_samples_or_empty(self) -> DataFrame:
-        """Samples, or an empty frame when the db has never been
-        written (the reference creates DBs lazily and answers queries
-        on unknown tables with empty results)."""
-        try:
+        """Samples, or an empty frame when ``samples/`` is absent or
+        holds no data file: a db never written (the reference creates
+        DBs lazily and answers queries on unknown tables with empty
+        results), or one whose partitions were all dropped. Any other
+        read error propagates: a corrupt store is an error, never an
+        empty store."""
+        # a data file: a partition's entry not named _* or .* (Spark's
+        # rule); the search stops at the first
+        files = glob.iglob(os.path.join(glob.escape(self.samples_path), "[!_.]*", "[!_.]*"))
+        if next(files, None):
             return self.read_samples()
-        except Exception:
-            from cflux_spark.model.schemas import SAMPLES_SCHEMA
+        return self.spark.createDataFrame(
+            [], T.StructType([*SAMPLES_SCHEMA.fields, T.StructField("date", T.DateType())])
+        )
 
-            return self.spark.createDataFrame([], SAMPLES_SCHEMA.add("date", "date"))

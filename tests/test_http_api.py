@@ -419,3 +419,149 @@ def test_gzip_write_body(server):
         raise AssertionError("corrupt gzip accepted")
     except urllib.error.HTTPError as e:
         assert e.code == 400
+
+
+def _wsgi(app, method: str, path: str, query: str = "", body: bytes = b""):
+    """Call the WSGI app in the calling thread, as a threaded server
+    would; returns (status, body)."""
+    import io
+
+    status = []
+    env = {
+        "REQUEST_METHOD": method,
+        "PATH_INFO": path,
+        "QUERY_STRING": query,
+        "CONTENT_LENGTH": str(len(body)),
+        "wsgi.input": io.BytesIO(body),
+    }
+    out = b"".join(app(env, lambda s, _h: status.append(s)))
+    return int(status[0].split()[0]), out
+
+
+def test_corrupt_store_is_an_error_not_empty(spark, tmp_path):
+    """Samples files that do not parse fail the SELECT with a 5xx; only
+    a store with no data file (here: retention dropped every
+    partition) answers empty."""
+    from datetime import date
+    from urllib.parse import quote
+
+    root = str(tmp_path / "corrupt")
+    srv, app, port = serve(spark, root)
+    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t.start()
+    base = f"http://127.0.0.1:{port}"
+    q = quote("SELECT v FROM cpu WHERE time >= 0")
+    try:
+        for db in ("bad", "expired"):
+            body = b"cpu,host=a v=1 1704067200000000000\ncpu,host=a v=2 1704153600000000000"
+            req = urllib.request.Request(base + f"/write?db={db}", data=body, method="POST")
+            with urllib.request.urlopen(req) as r:
+                assert r.status == 204
+        for d, _dirs, names in os.walk(os.path.join(root, "bad", "samples")):
+            for n in names:
+                if n.endswith(".parquet"):
+                    with open(os.path.join(d, n), "wb") as fh:
+                        fh.write(b"not a parquet file")
+        with pytest.raises(urllib.error.HTTPError) as err:
+            _get(base + f"/query?db=bad&q={q}")
+        assert err.value.code >= 500
+
+        app.engine.execute('CREATE RETENTION POLICY "d" ON expired DURATION 1d REPLICATION 1 DEFAULT')
+        dropped = app.engine.enforce_retention_policies("expired", now=date(2024, 2, 1))
+        assert dropped == {"expired": ["date=2024-01-01", "date=2024-01-02"]}
+        status, body = _get(base + f"/query?db=expired&q={q}")
+        assert status == 200 and json.loads(body) == {"results": [{"statement_id": 0}]}
+    finally:
+        srv.shutdown()
+
+
+def test_write_during_delete_rewrite_is_kept(spark, tmp_path, monkeypatch):
+    """A /write into a date partition that a DELETE is rewriting, sent
+    from a second thread while the rewrite is held at its swap, waits
+    for the DELETE to commit and is then readable: the engine runs one
+    writer for /write and every mutating statement."""
+    from urllib.parse import quote
+
+    from cflux_spark.api.http import CFluxApp
+
+    app = CFluxApp(spark, str(tmp_path / "locked"))
+    body = b"cpu,host=a v=1 1704067200000000000\ncpu,host=b v=2 1704067201000000000"
+    assert _wsgi(app, "POST", "/write", "db=w", body)[0] == 204
+
+    at_swap, release = threading.Event(), threading.Event()
+    real_rename = os.rename
+
+    def held_rename(src, dst, *a, **k):
+        if os.path.basename(str(src)).startswith("date=") and not at_swap.is_set():
+            at_swap.set()
+            release.wait(120)
+        return real_rename(src, dst, *a, **k)
+
+    monkeypatch.setattr(os, "rename", held_rename)
+    results = {}
+
+    def delete():
+        q = "db=w&q=" + quote("DELETE FROM cpu WHERE host = 'a'")
+        results["delete"] = _wsgi(app, "POST", "/query", q)
+
+    def write():
+        point = b"cpu,host=c v=3 1704067202000000000"
+        results["write"] = _wsgi(app, "POST", "/write", "db=w", point)
+
+    deleter = threading.Thread(target=delete)
+    deleter.start()
+    assert at_swap.wait(120)
+    writer = threading.Thread(target=write)
+    writer.start()
+    writer.join(2)  # a /write that does not wait lands in the live partition now
+    release.set()
+    deleter.join(120)
+    writer.join(120)
+    monkeypatch.undo()
+    assert not deleter.is_alive() and not writer.is_alive()
+    # a thread that raised left no status
+    assert [results.get(k, (None,))[0] for k in ("delete", "write")] == [200, 204]
+    q = "db=w&q=" + quote("SELECT v FROM cpu WHERE time >= 0 GROUP BY host")
+    status, out = _wsgi(app, "GET", "/query", q)
+    series = json.loads(out)["results"][0]["series"]
+    assert status == 200
+    assert {s["tags"]["host"]: s["values"] for s in series} == {
+        "b": [[1704067201000, 2.0]],
+        "c": [[1704067202000, 3.0]],
+    }
+
+
+def test_threaded_writes_and_deletes_lose_nothing(spark, tmp_path):
+    """More writer threads than cores on one app, switching often:
+    /write and DELETE into one date partition all take effect, and the
+    registry holds each series once."""
+    from urllib.parse import quote
+
+    from cflux_spark.api.http import CFluxApp
+
+    app = CFluxApp(spark, str(tmp_path / "stress"))
+    old = "\n".join(f"cpu,host=old{i} v={i} 170406720{i}000000000" for i in range(3))
+    assert _wsgi(app, "POST", "/write", "db=x", old.encode())[0] == 204
+    jobs = [("POST", "/write", "db=x", f"cpu,host=new{i} v=1{i} 170406721{i}000000000".encode())
+            for i in range(4)]
+    jobs += [("POST", "/query", "db=x&q=" + quote(f"DELETE FROM cpu WHERE host = 'old{i}'"), b"")
+             for i in range(2)]
+    statuses = []
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=lambda j=j: statuses.append(_wsgi(app, *j)[0]))
+                   for j in jobs]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(300)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(th.is_alive() for th in threads)
+    assert sorted(statuses) == [200, 200, 204, 204, 204, 204]
+    q = "db=x&q=" + quote("SELECT v FROM cpu WHERE time >= 0 GROUP BY host")
+    series = json.loads(_wsgi(app, "GET", "/query", q)[1])["results"][0]["series"]
+    assert sorted(s["tags"]["host"] for s in series) == ["new0", "new1", "new2", "new3", "old2"]
+    fps = [r.fingerprint for r in app.engine._registry("x").select("fingerprint").collect()]
+    assert len(fps) == len(set(fps)) == 7

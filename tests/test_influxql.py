@@ -2906,9 +2906,9 @@ def test_series_statements_reject_field_predicates(spark, tmp_path, q):
 
 
 def test_delete_selecting_no_series_rewrites_nothing(spark, tmp_path):
-    """A DELETE or DROP SERIES whose tag matchers select no series
-    answers 0 partitions and leaves every file as it was (it used to
-    rewrite every partition)."""
+    """A DELETE, DROP SERIES or DROP MEASUREMENT that selects no series
+    or no row answers 0 partitions and leaves every file as it was (it
+    used to rewrite every partition)."""
     root = str(tmp_path / "none")
     lines = [f"cpu,host=a v={d} {1704067200 + d * 86400}000000000" for d in range(3)]
     store = LPStore(spark, root, db="n")
@@ -2928,7 +2928,37 @@ def test_delete_selecting_no_series_rewrites_nothing(spark, tmp_path):
     assert _values(res) == [[0, 0, 0]]
     res = eng.execute("DROP SERIES FROM cpu WHERE host = 'nosuch' OR region = 'x'", db="n")
     assert _values(res) == [[0, 0]]
+    res = eng.execute("DELETE FROM nosuch", db="n")
+    assert _values(res) == [[0, 0, 0]]
+    assert eng.execute("DROP MEASUREMENT nosuch", db="n") == {"results": [{"statement_id": 0}]}
     assert files() == before
+
+
+def test_delete_rewrites_only_partitions_holding_doomed_rows(spark, tmp_path):
+    """A measurement present on 1 of 3 dates: DELETE and DROP
+    MEASUREMENT rewrite that one partition and leave the other two
+    partitions' files as they were."""
+    root = str(tmp_path / "one")
+    lines = [f"cpu,host=a v={d} {1704067200 + d * 86400}000000000" for d in range(3)]
+    lines.append("mem,host=a used=5 1704067200000000000")  # first date only
+    store = LPStore(spark, root, db="o")
+    store.write_batch(spark.createDataFrame([(l,) for l in lines], "line string"))
+
+    def files(date):
+        part = os.path.join(store.samples_path, f"date={date}")
+        return {f: os.stat(os.path.join(part, f)).st_mtime_ns for f in os.listdir(part)}
+
+    untouched = {d: files(d) for d in ("2024-01-02", "2024-01-03")}
+    eng = InfluxQLEngine(spark, root)
+    res = eng.execute("DELETE FROM mem", db="o")
+    assert _values(res) == [[0, 0, 1]]
+    assert {d: files(d) for d in untouched} == untouched
+    assert "series" not in eng.execute("SELECT used FROM mem", db="o")["results"][0]
+    assert len(_values(eng.execute("SELECT v FROM cpu", db="o"))) == 3
+    store.write_batch(spark.createDataFrame([(lines[-1],)], "line string"))
+    eng.execute("DROP MEASUREMENT mem", db="o")
+    assert {d: files(d) for d in untouched} == untouched
+    assert [v[0] for v in _values(eng.execute("SHOW MEASUREMENTS", db="o"))] == ["cpu"]
 
 
 def test_regex_from_single_field_wildcard_limit_offset(spark, tmp_path):

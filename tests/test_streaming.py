@@ -127,19 +127,22 @@ def test_compact_crash_recovery(spark, tmp_path):
     store.write_batch(lines, collect_stats=False)
     expect = sorted(tuple(r) for r in store.read_samples().collect())
 
-    # crash between rename-aside and swap-in: samples gone, ._old + ._compact present
-    shutil.copytree(store.samples_path, store.samples_path + "._compact")
-    pathlib.Path(store.samples_path).rename(store.samples_path + "._old")
+    new = os.path.join(root, "c", "_commit", "new", "samples")
+    old = os.path.join(root, "c", "_commit", "old", "samples")
+    # crash between rename-aside and swap-in: samples gone, old + new present
+    shutil.copytree(store.samples_path, new)
+    os.makedirs(os.path.dirname(old), exist_ok=True)
+    pathlib.Path(store.samples_path).rename(old)
     recovered = LPStore(spark, root, db="c")  # __init__ runs recovery
     assert sorted(tuple(r) for r in recovered.read_samples().collect()) == expect
-    assert not pathlib.Path(store.samples_path + "._old").exists()
-    assert not pathlib.Path(store.samples_path + "._compact").exists()
+    assert not pathlib.Path(old).exists()
+    assert not pathlib.Path(new).exists()
 
-    # crash after swap-in, before cleanup: both samples and ._old present
-    shutil.copytree(store.samples_path, store.samples_path + "._old")
+    # crash after swap-in, before cleanup: both samples and old present
+    shutil.copytree(store.samples_path, old)
     recovered2 = LPStore(spark, root, db="c")
     assert sorted(tuple(r) for r in recovered2.read_samples().collect()) == expect
-    assert not pathlib.Path(store.samples_path + "._old").exists()
+    assert not pathlib.Path(old).exists()
 
 
 @pytest.mark.parametrize(
@@ -182,7 +185,7 @@ def test_delete_crash_recovery(spark, tmp_path, monkeypatch, kind, fault):
         raise OSError(f"injected crash in rmtree({path!r})")
 
     def crash_rename(src, dst, *a, **k):
-        if "_delete_tmp" in str(src):
+        if os.path.join("_commit", "new") in str(src):
             raise OSError("injected crash before the swap-in")
         return real_rename(src, dst, *a, **k)
 
@@ -196,8 +199,8 @@ def test_delete_crash_recovery(spark, tmp_path, monkeypatch, kind, fault):
     monkeypatch.setattr(os, "rename", real_rename)
     recovered = LPStore(spark, root, db="d")  # __init__ runs recovery
     assert rows(recovered) in (before, after)
-    assert not os.path.exists(os.path.join(root, "d", "_delete_tmp"))
-    assert not os.path.exists(os.path.join(root, "d", "_delete_old"))
+    assert not os.path.exists(os.path.join(root, "d", "_commit", "new"))
+    assert not os.path.exists(os.path.join(root, "d", "_commit", "old"))
 
 
 def test_registry_rewrite_crash_recovery(spark, tmp_path):
@@ -217,33 +220,37 @@ def test_registry_rewrite_crash_recovery(spark, tmp_path):
     store.write_batch(lines, collect_stats=False)
     expect = sorted(tuple(r) for r in store.read_registry().collect())
     reg = store.registry_path
+    new = os.path.join(root, "r", "_commit", "new", "time_series")
+    old = os.path.join(root, "r", "_commit", "old", "time_series")
 
     # crash before move-aside (tmp possibly mid-write): original live
-    shutil.copytree(reg, reg + ".rewrite")
+    shutil.copytree(reg, new)
     rec = LPStore(spark, root, db="r")
     assert sorted(tuple(r) for r in rec.read_registry().collect()) == expect
-    assert not pathlib.Path(reg + ".rewrite").exists()
+    assert not pathlib.Path(new).exists()
 
     # crash between move-aside and swap-in: adopt the complete rewrite
-    shutil.copytree(reg, reg + ".rewrite")
-    pathlib.Path(reg).rename(reg + "._old")
+    shutil.copytree(reg, new)
+    os.makedirs(os.path.dirname(old), exist_ok=True)
+    pathlib.Path(reg).rename(old)
     rec = LPStore(spark, root, db="r")
     assert sorted(tuple(r) for r in rec.read_registry().collect()) == expect
-    assert not pathlib.Path(reg + "._old").exists()
-    assert not pathlib.Path(reg + ".rewrite").exists()
+    assert not pathlib.Path(old).exists()
+    assert not pathlib.Path(new).exists()
 
     # crash between move-aside and swap-in with NO tmp copy (write
     # finished + tmp adopted is impossible, but belt-and-braces:
     # restore the original)
-    pathlib.Path(reg).rename(reg + "._old")
+    os.makedirs(os.path.dirname(old), exist_ok=True)
+    pathlib.Path(reg).rename(old)
     rec = LPStore(spark, root, db="r")
     assert sorted(tuple(r) for r in rec.read_registry().collect()) == expect
 
     # crash after swap-in, before cleanup: new registry is live
-    shutil.copytree(reg, reg + "._old")
+    shutil.copytree(reg, old)
     rec = LPStore(spark, root, db="r")
     assert sorted(tuple(r) for r in rec.read_registry().collect()) == expect
-    assert not pathlib.Path(reg + "._old").exists()
+    assert not pathlib.Path(old).exists()
 
 
 def test_streaming_dedupe_within_watermark(spark, tmp_path):
